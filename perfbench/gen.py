@@ -9,7 +9,12 @@ gives the same bytes; shapes (row counts, shares) are fixed per workload:
                      near-duplicate copies
   retrieval_serving  base corpus to index, plus a request plan: Zipf-popular
                      query ids, arrivals and takedowns
+
+Both workloads also get the small inputs of the traced-only layer probes
+(`layer_inputs`): TPC-H-shaped tables for one capex job, and event batch
+files for a sessionizing stream.
 """
+import datetime
 import os
 
 import numpy as np
@@ -26,11 +31,11 @@ N_SOURCES = 20
 DIM = 64
 
 # corpus_etl: original documents + injected copies
-CORPUS_DOCS = 1_000
+CORPUS_DOCS = 500
 EXACT_DUP_SHARE = 0.05
 NEAR_DUP_SHARE = 0.05
 # retrieval_serving: base corpus (documents with a vector-carrying prefix)
-SERVE_DOCS = 5_000
+SERVE_DOCS = 2_000
 SERVE_VECS = 2_000
 SERVE_REQUESTS = 1_000        # request plan length (a run uses a prefix)
 SERVE_QUERY_BATCH = 10        # distinct Zipf-drawn ids per read request
@@ -39,6 +44,19 @@ SERVE_WRITE_EVERY = 4         # every 4th request is a write (25 % writes)
 SERVE_ARRIVAL_ROWS = 5        # rows per arrival write
 SERVE_TAKEDOWN_ROWS = 2       # ids per takedown write
 ZIPF_S = 1.1
+# traced-only layer probes: capex tables at the size of TPC-H sf0.001
+# (1,500 orders, 1-7 lineitems each), and event batch files for the stream
+CAPEX_ORDERS = 1_500
+CAPEX_CUSTOMERS = 150
+CAPEX_PARTS = 200
+CAPEX_SUPPLIERS = 10
+REGIONS = ("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
+N_NATIONS = 25
+STREAM_BATCHES = 4
+STREAM_BATCH_EVENTS = 500
+STREAM_USERS = 50
+STREAM_MEAN_GAP_S = 90        # mean time between two events of the stream
+EVENT_TYPES = ("view", "click", "add_to_cart", "purchase", "signup", "error")
 
 
 def _write(table: pa.Table, path: str) -> int:
@@ -127,7 +145,11 @@ def gen_serving(rng, out):
     same ids), `delete <ids>` (takedowns) or `compact`. Writes take one slot
     in every SERVE_WRITE_EVERY, the second one, so every run reaches one,
     and cycle append, delete, append, compact; read ids come from
-    Zipf-popular request templates, so requests repeat.
+    Zipf-popular request templates, so requests repeat. warmup.txt holds
+    the writes the client makes before it measures: an arrival, a
+    takedown, a compaction that folds it in and a second takedown, so
+    measured reads see an index that has grown, been compacted and has
+    live tombstones.
     """
     cols, _, _ = documents(rng, SERVE_DOCS, 0.0, 0.0)
     sizes = {"documents": _write(pa.table(cols), f"{out}/documents.parquet")}
@@ -154,6 +176,7 @@ def gen_serving(rng, out):
             return "delete " + ",".join(str(takedowns.pop()) for _ in range(SERVE_TAKEDOWN_ROWS))
         return "compact"
 
+    warmup = [write(k) for k in ("append", "delete", "compact", "delete")]
     lines = []
     cycle = ("append", "delete", "append", "compact")
     seen, n_repeat, n_reads, n_writes = set(), 0, 0, 0
@@ -175,10 +198,104 @@ def gen_serving(rng, out):
     sizes["arrivals_documents"] = _write(pa.table(acols), f"{out}/arrivals/documents.parquet")
     with open(f"{out}/plan.txt", "w") as f:
         f.write("\n".join(lines) + "\n")
+    with open(f"{out}/warmup.txt", "w") as f:
+        f.write("\n".join(warmup) + "\n")
     return {"sizes_bytes": sizes, "documents_rows": SERVE_DOCS,
             "embeddings_rows": SERVE_VECS, "requests_planned": SERVE_REQUESTS,
             "write_share_planned": round(n_writes / SERVE_REQUESTS, 6),
             "repeat_share_planned": round(n_repeat / n_reads, 6)}
+
+
+def _days(rng, n, start=datetime.datetime(1992, 1, 1), span_days=2_400):
+    """n timestamps at whole days from `start` (tz-naive, like TPC-H dates)."""
+    d = rng.integers(0, span_days, n)
+    return pa.array([start + datetime.timedelta(days=int(x)) for x in d], pa.timestamp("us"))
+
+
+def _money(rng, lo, hi, n):
+    return pa.array(np.round(rng.uniform(lo, hi, n), 2), pa.float64())
+
+
+def gen_capex(rng, out):
+    """TPC-H-shaped region/nation/customer/orders/lineitem for one capex job
+    (the tables and column types `CapexDerive.raw` reads)."""
+    os.makedirs(out, exist_ok=True)
+    nk = np.arange(N_NATIONS)
+    tables = {
+        "region": pa.table({"r_regionkey": pa.array(range(len(REGIONS)), pa.int32()),
+                            "r_name": list(REGIONS)}),
+        "nation": pa.table({"n_nationkey": pa.array(nk, pa.int32()),
+                            "n_name": [f"NATION_{i}" for i in nk],
+                            "n_regionkey": pa.array(nk % len(REGIONS), pa.int32())}),
+        "customer": pa.table({
+            "c_custkey": pa.array(range(CAPEX_CUSTOMERS), pa.int64()),
+            "c_name": [f"Customer#{i:09d}" for i in range(CAPEX_CUSTOMERS)],
+            "c_nationkey": pa.array(rng.integers(0, N_NATIONS, CAPEX_CUSTOMERS), pa.int32()),
+            "c_acctbal": _money(rng, -999, 9999, CAPEX_CUSTOMERS),
+            "c_mktsegment": pa.array(np.array(["AUTOMOBILE", "BUILDING", "FURNITURE",
+                                               "HOUSEHOLD", "MACHINERY"])[
+                rng.integers(0, 5, CAPEX_CUSTOMERS)])}),
+        "orders": pa.table({
+            "o_orderkey": pa.array(range(CAPEX_ORDERS), pa.int64()),
+            "o_custkey": pa.array(rng.integers(0, CAPEX_CUSTOMERS, CAPEX_ORDERS), pa.int64()),
+            "o_orderstatus": pa.array(np.array(["F", "O", "P"])[rng.integers(0, 3, CAPEX_ORDERS)]),
+            "o_totalprice": _money(rng, 1_000, 400_000, CAPEX_ORDERS),
+            "o_orderdate": _days(rng, CAPEX_ORDERS),
+            "o_orderpriority": pa.array(np.array(["1-URGENT", "2-HIGH", "3-MEDIUM",
+                                                  "4-NOT SPECIFIED", "5-LOW"])[
+                rng.integers(0, 5, CAPEX_ORDERS)])}),
+    }
+    lines = rng.integers(1, 8, CAPEX_ORDERS)
+    n = int(lines.sum())
+    qty = rng.integers(1, 51, n).astype("float64")
+    tables["lineitem"] = pa.table({
+        "l_orderkey": pa.array(np.repeat(np.arange(CAPEX_ORDERS), lines), pa.int64()),
+        "l_partkey": pa.array(rng.integers(0, CAPEX_PARTS, n), pa.int64()),
+        "l_suppkey": pa.array(rng.integers(0, CAPEX_SUPPLIERS, n), pa.int64()),
+        "l_linenumber": pa.array(np.concatenate([np.arange(1, k + 1) for k in lines]), pa.int32()),
+        "l_quantity": pa.array(qty, pa.float64()),
+        "l_extendedprice": pa.array(np.round(qty * rng.uniform(900, 2_100, n), 2), pa.float64()),
+        "l_discount": pa.array(rng.integers(0, 11, n) / 100.0, pa.float64()),
+        "l_tax": pa.array(rng.integers(0, 9, n) / 100.0, pa.float64()),
+        "l_returnflag": pa.array(np.array(["A", "N", "R"])[rng.integers(0, 3, n)]),
+        "l_linestatus": pa.array(np.array(["F", "O"])[rng.integers(0, 2, n)]),
+        "l_shipdate": _days(rng, n),
+    })
+    return {f"capex_{t}": _write(tab, f"{out}/{t}.parquet") for t, tab in tables.items()}, n
+
+
+def gen_events(rng, out):
+    """STREAM_BATCHES files of STREAM_BATCH_EVENTS events each, in event-time
+    order: file i holds the i-th slice of one seeded event stream."""
+    os.makedirs(out, exist_ok=True)
+    n = STREAM_BATCHES * STREAM_BATCH_EVENTS
+    t0 = np.datetime64("2024-01-01T00:00:00", "us")
+    gaps = rng.exponential(STREAM_MEAN_GAP_S * 1e6, n).astype("int64")
+    ts = t0 + np.cumsum(gaps).astype("timedelta64[us]")
+    users, types = rng.integers(0, STREAM_USERS, n), rng.integers(0, len(EVENT_TYPES), n)
+    sizes = {}
+    for b in range(STREAM_BATCHES):
+        sl = slice(b * STREAM_BATCH_EVENTS, (b + 1) * STREAM_BATCH_EVENTS)
+        k = STREAM_BATCH_EVENTS
+        sizes[f"events_batch{b}"] = _write(pa.table({
+            "event_id": pa.array(np.arange(n)[sl], pa.int64()),
+            # UTC-adjusted micros: Spark reads them as TIMESTAMP, the type
+            # of StreamOps.Event.ts
+            "ts": pa.array(ts[sl], pa.timestamp("us", tz="UTC")),
+            "user_id": pa.array(users[sl], pa.int64()),
+            "event_type": pa.array(np.array(EVENT_TYPES)[types[sl]]),
+            "value": pa.array(np.round(rng.uniform(1, 200, k), 2), pa.float64()),
+        }), f"{out}/batch-{b:03d}.parquet")
+    return sizes
+
+
+def layer_inputs(rng, out):
+    """Inputs of the traced-only layer probes, under `capex/` and `events/`."""
+    sizes, lineitems = gen_capex(rng, f"{out}/capex")
+    sizes.update(gen_events(rng, f"{out}/events"))
+    return {"layer_sizes_bytes": sizes, "capex_lineitem_rows": lineitems,
+            "events_rows": STREAM_BATCHES * STREAM_BATCH_EVENTS,
+            "events_batches": STREAM_BATCHES}
 
 
 GENERATORS = {"corpus_etl": gen_corpus, "retrieval_serving": gen_serving}
@@ -188,5 +305,6 @@ def generate(workload: str, seed: int, out: str) -> dict:
     os.makedirs(out, exist_ok=True)
     rng = np.random.default_rng([seed, sorted(GENERATORS).index(workload)])
     info = GENERATORS[workload](rng, out)
+    info.update(layer_inputs(rng, out))
     info["seed"] = seed
     return info

@@ -70,10 +70,49 @@ def _key(files, sql):
     return h.hexdigest()[:32]
 
 
-def check(workload, inp, out, res, cache_dir):
+def _connect(inp):
     con = duckdb.connect()
     con.sql("SET enable_progress_bar = false")
     _views(con, inp)
+    return con
+
+
+def probe_checks(inp, out, c):
+    """Traced runs: the capex job's outputs against their oracles on the
+    capex input, and the stream's emitted sessions against the batch
+    sessionization of every landed event. A stream emits a session only
+    once the watermark closes it, so every emitted session must be an
+    oracle session (user, start, end, event count); `sum_value` is left out
+    because the stream sums doubles in arrival order."""
+    checks = []
+    if "capex_oracle_sql" in c:
+        con = _connect(f"{inp}/capex")
+        for name, sql in sorted(c["capex_oracle_sql"].items()):
+            checks.append(_compare(f"capex:{name}", con,
+                                   f"SELECT * FROM '{out}/check/{name}/*.parquet'", sql))
+    if "stream_oracle_sql" in c:
+        con = duckdb.connect()
+        con.sql("SET enable_progress_bar = false")
+        con.sql(f"CREATE VIEW events AS SELECT * FROM '{inp}/events/*.parquet'")
+        key = "user_id, epoch_us(t_start) AS s, epoch_us(t_end) AS e, n_events"
+        try:
+            con.sql(f"CREATE VIEW oracle AS SELECT {key} FROM ({c['stream_oracle_sql']})")
+            con.sql(f"CREATE VIEW emitted AS SELECT {key} "
+                    f"FROM '{out}/check/stream_sessions/*.parquet'")
+            emitted = con.sql("SELECT count(*) FROM emitted").fetchone()[0]
+            stray = con.sql("SELECT count(*) FROM (SELECT * FROM emitted "
+                            "EXCEPT ALL SELECT * FROM oracle)").fetchone()[0]
+            oracle_n = con.sql("SELECT count(*) FROM oracle").fetchone()[0]
+            checks.append({"name": "stream_sessions", "ok": emitted > 0 and stray == 0,
+                           "emitted": emitted, "not_in_oracle": stray,
+                           "oracle_sessions": oracle_n})
+        except Exception as e:  # an oracle that cannot run is a failed check
+            checks.append({"name": "stream_sessions", "ok": False, "error": str(e)[:300]})
+    return checks
+
+
+def check(workload, inp, out, res, cache_dir):
+    con = _connect(inp)
     sql = res["checks"]["oracle_sql"]
     if workload == "corpus_etl":
         manifest = res["checks"]["manifest"]
@@ -89,7 +128,7 @@ def check(workload, inp, out, res, cache_dir):
         oracle_rows = checks[0].get("oracle_rows")
         checks.append({"name": "job_row_counts", "ok": rows == {oracle_rows},
                        "rows": sorted(rows), "oracle_rows": oracle_rows})
-        return checks
+        return checks + probe_checks(inp, out, res["checks"])
 
     c = res["checks"]
     checks = [
@@ -114,7 +153,8 @@ def check(workload, inp, out, res, cache_dir):
     checks.append(_compare("ann_index_probe@final", con,
                            f"SELECT * FROM '{out}/check/ann_probe_final/*.parquet'",
                            sql["ann_index_probe"]))
-    checks.append({"name": "ann_serving_parity", "ok": bool(c["ann_parity"])})
-    checks.append({"name": "lexical_serving_parity", "ok": bool(c["lex_parity"]),
-                   "queries": c["lex_parity_queries"]})
-    return checks
+    checks.append({"name": "ann_serving_parity", "ok": bool(c.get("ann_parity")),
+                   "queries": c.get("parity_queries", {}).get("ann")})
+    checks.append({"name": "lexical_serving_parity", "ok": bool(c.get("lex_parity")),
+                   "queries": c.get("parity_queries", {}).get("lex")})
+    return checks + probe_checks(inp, out, c)

@@ -176,9 +176,11 @@ def main():
     info = gen.generate(a.workload, a.seed, inp)
     deadline = t_built + RUN_LIMIT_S
     ticks0 = cpu_ticks()
+    t_jvm = time.time()
     code = run_jvm(cp, ["--workload", a.workload, "--input", inp, "--out", out,
                         "--seconds", str(a.seconds), "--trace", str(a.trace)],
                    run_dir, deadline)
+    jvm_s = time.time() - t_jvm
     ticks = [b - a for a, b in zip(ticks0, cpu_ticks())]
     if code != 0 or not os.path.exists(f"{out}/result.json"):
         with open(f"{run_dir}/jvm.log") as f:
@@ -189,37 +191,45 @@ def main():
         res = json.load(f)
 
     os.makedirs(f"{state}/oracle-cache", exist_ok=True)
+    t_oracle = time.time()
     checks = oracle.check(a.workload, inp, out, res, f"{state}/oracle-cache")
+    oracle_s = time.time() - t_oracle
     ops = res["ops"]
     # a wrong answer is a failed operation: the oracle-checked output
     # belongs to the last job (corpus_etl) or to the batch probe over the
     # fresh indexes (retrieval_serving)
     judged = {"corpus_pipeline": "job", "ann_index_probe@base": "batch_probe",
-              "lexical_index_probe@base": "batch_probe"}
+              "lexical_index_probe@base": "batch_probe",
+              "stream_sessions": "standalone.stream_batch"}
     for c in checks:
-        if not c["ok"] and c["name"] in judged:
-            last = [o for o in ops if o["kind"] == judged[c["name"]]][-1]
+        kind = "standalone.capex_job" if c["name"].startswith("capex:") \
+            else judged.get(c["name"])
+        if not c["ok"] and kind and any(o["kind"] == kind for o in ops):
+            last = [o for o in ops if o["kind"] == kind][-1]
             last["ok"], last["error"] = False, f"wrong answer: {c['name']}"
     failed = sum(1 for o in ops if not o["ok"])
     correct = failed == 0 and all(c["ok"] for c in checks)
 
     e2e = metrics.end_to_end(a.workload, res, info)
+    overhead = None
     main_ms = metrics.main_latency_ms(a.workload, res)
     hist = f"{state}/history-{a.workload}.jsonl"
     if a.trace:
         spans = f"{state}/traces/{a.workload}-s{a.seed}.jsonl"
         os.makedirs(os.path.dirname(spans), exist_ok=True)
         shutil.copy(f"{out}/spans.jsonl", spans)
+        # tracing overhead: this run's main-operation median against the
+        # untraced runs of the same code and seed; none there, none here
         ref = []
         if os.path.exists(hist):
             with open(hist) as f:
                 ref = [h["main_ms"] for h in map(json.loads, f)
-                       if h.get("stamp") == stamp]
+                       if h.get("stamp") == stamp and h.get("seed") == a.seed]
+        overhead = main_ms / statistics.median(ref) - 1 if ref else None
         out_metrics = metrics.per_layer(a.workload, res)
-        overhead = main_ms / statistics.median(ref) - 1 if ref else 0.0
-        out_metrics["trace.overhead_frac"] = {"value": overhead, "unit": "ratio"}
         print(f"perfbench: spans written to {os.path.relpath(spans, root)}; tracing "
-              f"overhead {overhead:+.3f} vs {len(ref)} untraced runs", file=sys.stderr)
+              f"overhead {'n/a' if overhead is None else f'{overhead:+.3f}'} "
+              f"vs {len(ref)} untraced runs of seed {a.seed}", file=sys.stderr)
     else:
         with open(hist, "a") as f:
             f.write(json.dumps({"seed": a.seed, "stamp": stamp, "main_ms": main_ms}) + "\n")
@@ -233,10 +243,16 @@ def main():
         "ops_failed_frac": failed / len(ops),
         "samples": metrics.sample_counts(a.workload, res),
         "trend": metrics.trend(a.workload, res),
+        "trace_overhead_frac": overhead if a.trace else None,
+        # every operation in order, for reading the warm-up curve
+        "op_ms": [[o["phase"], o["kind"], round(o["ms"], 1)] for o in ops],
         "end_to_end": {k: v["value"] for k, v in e2e.items()},
         # CPU time the hypervisor gave to other guests while the JVM ran:
         # the usual cause of a run that is slow across the board
         "host_steal_frac": round(ticks[1] / ticks[0], 4) if ticks[0] else None,
+        "build_s": round(t_built - t_start, 3),
+        "jvm_s": round(jvm_s, 3),
+        "oracle_s": round(oracle_s, 3),
         "wall_s": round(time.time() - t_start, 3),
     }
     for c in checks:

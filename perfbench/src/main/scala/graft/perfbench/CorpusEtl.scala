@@ -30,15 +30,15 @@ final class CorpusEtl(spark: SparkSession, dir: String, out: String,
 
   def warmup(): Seq[Op] = Seq(job())
   def next(): Op = job()
-  /** Two jobs at least: on a slow host one job outlasts `--seconds`, and a
-    * lone second job (still on the warm-up curve) would skew job_p50_s.
+  /** Four jobs at least, so that the percentiles rest on more than the
+    * one or two jobs that fit `--seconds` on a slow host.
     */
-  override def covered(measured: Seq[OpRec]): Boolean = measured.size >= 2
+  override def covered(measured: Seq[OpRec]): Boolean = measured.size >= 4
 
   /** Each stage of the flagship on its own, plus the two MinHash stages
-    * whose row ratio is the near-dup pair yield.
+    * whose row ratio is the near-dup pair yield; then the stream probe.
     */
-  override def tracedOps(): Seq[Op] =
+  override def tracedOps(probes: LayerProbes): Seq[Op] =
     Seq("text_quality", "dedup_exact", "dedup_components", "decontaminate",
       "corpus_mixture", "text_bpe_encode", "dedup_minhash", "dedup_minhash_verified")
       .map { q =>
@@ -49,7 +49,7 @@ final class CorpusEtl(spark: SparkSession, dir: String, out: String,
           df.unpersist()
           Checkpoints.releaseAll()
         }, verify = () => Right(rows))
-      }
+      } ++ probes.streamOps()
 
   /** The last job's manifest is compared with the DuckDB oracle by
     * `perfbench/run.py`; hand it the oracle SQL for the same input.

@@ -27,9 +27,10 @@ trait Workload {
     */
   def covered(measured: Seq[OpRec]): Boolean = measured.nonEmpty
   /** Traced runs only: extra operations after the measured loop that time
-    * single layers on their own (labelled standalone: not self time).
+    * single layers on their own (labelled standalone: not self time);
+    * `probes` times the layers no closed loop calls (capex, streaming).
     */
-  def tracedOps(): Seq[Op] = Nil
+  def tracedOps(probes: LayerProbes): Seq[Op] = Nil
   /** Layer gauges read after the measured loop (file counts, sizes). */
   def gauges(): Map[String, Double] = Map.empty
   /** Untimed end-of-run checks; writes oracle outputs under `out`. */
@@ -92,8 +93,9 @@ object Main {
       val measureS = (System.nanoTime() - m0) / 1e9
       val peakRssMb = vmHwmMb()
       val gauges = w.gauges()
-      if (traced) w.tracedOps().foreach(runOp(_, "standalone"))
-      val checks = w.finalCheck()
+      val probes = new LayerProbes(spark, o("input"), out, tracer)
+      if (traced) w.tracedOps(probes).foreach(runOp(_, "standalone"))
+      val checks = w.finalCheck() ++ (if (traced) probes.finish() else Map.empty)
       val perOp = if (traced) tracer.perOp() else Map.empty[Int, Map[String, Double]]
       if (traced) tracer.dump(s"$out/spans.jsonl")
       val opSpanIds = tracer.opSpans.map(s => s.op -> s.id).toMap

@@ -1,6 +1,7 @@
 package graft.perfbench
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import graft.SparkEntry
@@ -15,7 +16,10 @@ import graft.sources.{AnnIndexSink, BucketedSink}
   * lexical index (`Lexical.lexTopkForQueries`). Writes are arrivals
   * (`appendEmbeddings` + `appendLexDocs`), takedowns (`deleteEmbeddings` +
   * `deleteLexDocs`) and inline compactions (`compact` + `compactLex`).
-  * The request plan (`plan.txt`) is generated from the seed.
+  * The requests (`warmup.txt`, then `plan.txt`) are generated from the
+  * seed; the warm-up writes an arrival, a takedown, a compaction and a
+  * second takedown, so every measured read runs against grown, compacted
+  * and tombstoned indexes.
   */
 final class RetrievalServing(spark: SparkSession, dir: String, out: String,
                              tracer: Tracer) extends Workload {
@@ -27,10 +31,11 @@ final class RetrievalServing(spark: SparkSession, dir: String, out: String,
   private val texts = mutable.Map.empty[Long, String]
   private val deleted = mutable.Set.empty[Long]
 
-  private val plan: IndexedSeq[Array[String]] = {
-    val src = scala.io.Source.fromFile(s"$dir/plan.txt", "UTF-8")
+  private def requests(file: String): IndexedSeq[Array[String]] = {
+    val src = scala.io.Source.fromFile(s"$dir/$file", "UTF-8")
     try src.getLines().map(_.trim.split(" ")).toIndexedSeq finally src.close()
   }
+  private val plan = requests("plan.txt")
   private var pos = 0
 
   private def ids(s: String): Seq[Long] = s.split(",").toSeq.map(_.toLong)
@@ -114,25 +119,74 @@ final class RetrievalServing(spark: SparkSession, dir: String, out: String,
 
   /** The cold first operation: the batch probes over the freshly built
     * indexes (the catalog's ann_index_probe and lexical_index_probe for
-    * ids below 10), whose outputs are oracle-checked.
+    * ids below 10), whose outputs are written, untimed, for the oracles.
+    * Then the first read and the warm-up writes.
     */
-  def warmup(): Seq[Op] = Seq(
-    Op("batch_probe", run = () => {
-      writeParquet(Ann.probeIndexTable(spark, annTable), "ann_probe_base")
-      writeParquet(Lexical.lexProbeFromStore(spark, lexTable), "lex_probe_base")
-    }))
+  def warmup(): Seq[Op] = {
+    var ann, lex: DataFrame = null
+    Op("batch_probe",
+      run = () => {
+        ann = Ann.probeIndexTable(spark, annTable)
+        baseAnn = ann.collect()
+        lex = Lexical.lexProbeFromStore(spark, lexTable)
+        baseLex = lex.collect()
+      },
+      verify = () => {
+        writeParquet(spark.createDataFrame(baseAnn.toSeq.asJava, ann.schema), "ann_probe_base")
+        writeParquet(spark.createDataFrame(baseLex.toSeq.asJava, lex.schema), "lex_probe_base")
+        if (baseAnn.isEmpty || baseLex.isEmpty) Left("batch probe: no rows")
+        else Right((baseAnn.length + baseLex.length).toLong)
+      }) +: parityRead() +: requests("warmup.txt").map(op)
+  }
+
+  private var baseAnn, baseLex = Array.empty[Row]
+  private var parity = Map.empty[String, Any]
+  private def norm(rs: Array[Row]) =
+    rs.map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.get(3))).toSet
+
+  /** The first read: hybrid top-k for the batch probes' query ids, whose
+    * answers must equal the batch probes' on the same (base) indexes.
+    */
+  private def parityRead(): Op = {
+    var annQ, lexQ = Seq.empty[Long]
+    var ann, lex = Array.empty[Row]
+    Op("read",
+      run = () => {
+        annQ = baseAnn.map(_.getLong(0)).distinct.toSeq.sorted
+        lexQ = baseLex.map(_.getLong(0)).distinct.toSeq.sorted
+        ann = tracer.span("llm.ann_probe")(
+          Ann.annTopkForQueries(spark, annTable, vecFrame(annQ)).collect())
+        lex = tracer.span("llm.lexical_probe")(
+          Lexical.lexTopkForQueries(spark, lexTable, docFrame(lexQ)).collect())
+      },
+      verify = () => {
+        parity = Map("ann_parity" -> (norm(ann) == norm(baseAnn)),
+          "lex_parity" -> (norm(lex) == norm(baseLex)),
+          "parity_queries" -> Map("ann" -> annQ.size, "lex" -> lexQ.size))
+        checkTopk("ann", ann, annQ).orElse(checkTopk("lex", lex, lexQ))
+          .toLeft((ann.length + lex.length).toLong)
+      },
+      meta = () => Map("ids" -> (annQ ++ lexQ).distinct, "ann_rows" -> ann.length))
+  }
 
   def next(): Op = {
     pos += 1
     op(plan(pos - 1))
   }
 
-  /** append_p50_ms needs one measured append (the plan's second request). */
-  override def covered(measured: Seq[OpRec]): Boolean = measured.exists(_.kind == "append")
+  /** Enough reads for a median, and the one append append_p50_ms needs
+    * (the plan's second request).
+    */
+  override def covered(measured: Seq[OpRec]): Boolean =
+    measured.count(_.kind == "read") >= RetrievalServing.MinReads &&
+      measured.exists(_.kind == "append")
 
-  /** One write of each kind, so every traced run times all write layers. */
-  override def tracedOps(): Seq[Op] =
-    Seq("append", "delete", "compact").flatMap(k => plan.drop(pos).find(_(0) == k)).map(op)
+  /** One write of each kind, so every traced run times all write layers;
+    * then the capex probe.
+    */
+  override def tracedOps(probes: LayerProbes): Seq[Op] =
+    Seq("append", "delete", "compact").flatMap(k => plan.drop(pos).find(_(0) == k)).map(op) :+
+      probes.capexJob()
 
   private def tableFiles(t: String): Seq[java.io.File] =
     if (!spark.catalog.tableExists(t)) Nil
@@ -153,27 +207,21 @@ final class RetrievalServing(spark: SparkSession, dir: String, out: String,
       "stored_bytes" -> files.map(_.length).sum.toDouble)
   }
 
-  /** Final state: the ANN batch probe (oracle-checked against the final
-    * corpus) and serving-vs-batch parity on both indexes.
+  /** Final state: the ANN batch probe, oracle-checked against the final
+    * corpus (base + arrivals - takedowns); serving-vs-batch parity is
+    * checked on the base indexes by the first read.
     */
   def finalCheck(): Map[String, Any] = {
-    val annBatch = Ann.probeIndexTable(spark, annTable)
-    writeParquet(annBatch, "ann_probe_final")
-    val annQ = annBatch.select("q_id").distinct().as[Long].collect().toSeq.sorted
-    def norm(rs: Array[Row]) = rs.map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.get(3))).toSet
-    val annServe = norm(Ann.annTopkForQueries(spark, annTable, vecFrame(annQ)).collect())
-    val annParity = annServe == norm(spark.read.parquet(s"$out/check/ann_probe_final").collect())
-    val lexBatch = Lexical.lexProbeFromStore(spark, lexTable).collect()
-    val lexQ = lexBatch.map(_.getLong(0)).distinct.toSeq.sorted
-    val lexServe = norm(Lexical.lexTopkForQueries(spark, lexTable, docFrame(lexQ)).collect())
-    val lexParity = lexServe == norm(lexBatch)
-    Map(
-      "ann_parity" -> annParity,
-      "lex_parity" -> lexParity,
-      "lex_parity_queries" -> lexQ.size,
+    writeParquet(Ann.probeIndexTable(spark, annTable), "ann_probe_final")
+    parity ++ Map(
       "deleted" -> deleted.toSeq.sorted,
       "oracle_sql" -> Map(
         "ann_index_probe" -> SparkEntry.oracleSql("ann_index_probe"),
         "lexical_index_probe" -> SparkEntry.oracleSql("lexical_index_probe")))
   }
+}
+
+object RetrievalServing {
+  /** Measured reads per run, at least. */
+  val MinReads = 4
 }
