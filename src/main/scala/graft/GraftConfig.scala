@@ -37,6 +37,10 @@ package graft
   *  - graft.inc.batchMod        (llm.Dedup.IncrementalBatchMod, default 5)
   *  - graft.lex.phraseK         (llm.Lexical.PhraseK,        default 3)
   *  - graft.lex.slop            (llm.Lexical.PhraseSlop,     default 2)
+  *  - graft.ann.graphK          (llm.Ann.GraphK,             default 5)
+  *  - graft.mm.maxPixels        (llm.Multimodal.MaxDecodePixels, default 16777216)
+  *  - graft.bpe.hierMerges      (llm.BpeHier.HierMerges,     default 5000)
+  *  - graft.bpe.trainDocs       (llm.BpeHier.TrainDocs,      default 192)
   */
 object GraftConfig {
   def int(key: String, default: Int): Int =

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -21,6 +21,15 @@ import graft.Tables
 object Corpus {
 
   val QualityFloor = 0.45
+
+  /** The reported quality score at 4 decimals, rounded as the DuckDB
+    * oracle's `round(q, 4)` does: half-up on the scaled double q·10^4.
+    * Spark's `round(q, 4)` instead rounds q's shortest decimal string, so
+    * the two disagree at ties the scaled double misses (0.61235·10^4 =
+    * 6123.4999…: 0.6123 here and in DuckDB, 0.6124 under `round(q, 4)`).
+    */
+  private[graft] def roundQuality(q: Column): Column =
+    round(q * 10000) / 10000
 
   def corpusClean(spark: SparkSession, dir: String): DataFrame =
     corpusCleanWith(spark, dir, Dedup.dedupComponents(spark, dir))
@@ -44,7 +53,7 @@ object Corpus {
       .join(q, Seq("doc_id"))
       .filter(col("quality_score") >= QualityFloor)
       .select(col("doc_id"), col("lang"),
-        round(col("quality_score"), 4).as("quality_score"))
+        roundQuality(col("quality_score")).as("quality_score"))
   }
 
   val corpusCleanSql: String =
@@ -235,24 +244,17 @@ object Corpus {
     val fp = S.contentFingerprint(Seq(s"$dir/documents.parquet"))
     val table = "corpus_state_" +
       S.nameHash(s"$dir\n$fp\nbpe=${TextOps.BpeTopMerges}\nM=${Dedup.IncrementalBatchMod}")
-    if (!spark.catalog.tableExists(table)) {
-      Seq(table, table + "_bench", S.tombTableOf(table))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-      val docs = Tables.spreadIfNarrow(Tables.documents(spark, dir), "doc_id")
-      S.ensureTable(spark, table + "_bench") {
-        Dedup.shingleHashes(spark, dir)
-          .filter(col("doc_id") % Dedup.BenchMod === 0)
-          .select(col("h")).distinct()
-          .write.format("parquet").saveAsTable(table + "_bench")
-      }
-      S.ensureTable(spark, table) {
-        val corpusDocs = docs.filter(col("doc_id") % Dedup.IncrementalBatchMod =!= 0)
-        S.writeBucketed(
-          docSignals(spark, dir, corpusDocs, spark.table(table + "_bench")),
-          table, "doc_id", StateBuckets)
-      }
+    S.ensureIndex(spark, table, "_bench") {
+      Dedup.shingleHashes(spark, dir)
+        .filter(col("doc_id") % Dedup.BenchMod === 0)
+        .select(col("h")).distinct()
+        .write.format("parquet").saveAsTable(table + "_bench")
+      val corpusDocs = Tables.spreadIfNarrow(Tables.documents(spark, dir), "doc_id")
+        .filter(col("doc_id") % Dedup.IncrementalBatchMod =!= 0)
+      S.writeBucketed(
+        docSignals(spark, dir, corpusDocs, spark.table(table + "_bench")),
+        table, "doc_id", StateBuckets)
     }
-    table
   }
 
   /** The batch-slice signature index (D22's writeSignatureIndex slice —
@@ -263,10 +265,8 @@ object Corpus {
     val fp = S.contentFingerprint(Seq(s"$dir/documents.parquet"))
     val table = "sig_idx_inc_" +
       S.nameHash(s"$dir\n$fp\nM=${Dedup.IncrementalBatchMod}")
-    S.ensureTable(spark, table) {
-      graft.sources.IndexSink.writeSignatureIndex(spark, dir, table, StateBuckets)
-    }
-    table
+    S.ensureIndex(spark, table)(
+      graft.sources.IndexSink.writeSignatureIndex(spark, dir, table, StateBuckets))
   }
 
   /** Pay-at-ingest corpus↔corpus near-dup PAIRS (r14): the stored slice's
@@ -382,7 +382,7 @@ object Corpus {
     val packed = Packing.packOfCounts(counts)
     kept.join(packed, Seq("doc_id"))
       .select(col("doc_id"), col("lang"),
-        round(col("quality_score"), 4).as("quality_score"),
+        roundQuality(col("quality_score")).as("quality_score"),
         col("n_tokens"), col("shard"), col("seq_id"), col("seq_offset"))
   }
 

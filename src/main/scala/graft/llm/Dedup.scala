@@ -380,21 +380,22 @@ object Dedup {
     * layout the candidate join consumes.
     */
   private[graft] def simhashKeyed(sigs: DataFrame, b: Int): DataFrame = {
-    val g = b - SimhashK
     val layout = simhashLayout(b)
-    val combos = layout.indices.combinations(g).toSeq
-    sigs.withColumn("c",
-      explode(array(combos.zipWithIndex.map { case (c, ci) =>
-        val keyExpr = c.foldLeft("CAST(0 AS BIGINT)") { (acc, i) =>
-          val (off, w) = layout(i)
-          // arithmetic shiftright sign-extends past bit 63−off; the block
-          // mask truncates to width w, so the key bits are exact
-          s"(shiftleft($acc, $w) | (shiftright(sh, $off) & ${(1L << w) - 1}))"
-        }
-        struct(lit(ci).as("combo"), expr(keyExpr).as("key"))
-      }: _*)))
-      .select(col("doc_id"), col("sh"),
-        col("c.combo").as("combo"), col("c.key").as("key"))
+    // one literal (offset, width) list per combo, folded by ONE aggregate:
+    // the plan's expression size stays constant in the combo count C(b, g)
+    // (a per-combo expression tree is 924 folds at b = 12 — past what the
+    // generated code of one stage can compile)
+    val combos = layout.indices.combinations(b - SimhashK)
+      .map(_.map(layout)).toSeq
+    sigs.select(col("doc_id"), col("sh"),
+        posexplode(typedLit(combos)).as(Seq("combo", "blocks")))
+      // arithmetic shiftright sign-extends past bit 63−off; the block mask
+      // truncates to width w, so the key bits are exact
+      .select(col("doc_id"), col("sh"), col("combo"),
+        expr("""aggregate(blocks, CAST(0 AS BIGINT), (acc, x) ->
+          shiftleft(acc, x._2) |
+            (shiftright(sh, x._1) & (shiftleft(CAST(1 AS BIGINT), x._2) - 1)))""")
+          .as("key"))
   }
 
   def simhashPairs(sigs: DataFrame, b: Int): DataFrame = {

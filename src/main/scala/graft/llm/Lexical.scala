@@ -336,40 +336,29 @@ object Lexical {
     * `<t>` = the doc_id-bucketed postings (doc_id, term, len, tf),
     * `<t>_df` = per-term document frequencies, `<t>_stats` = the 1-row
     * (N, total-tokens) collection statistics. A partial triple rebuilds
-    * everything including tombstones (the ensurePqIndex contract).
+    * everything (`BucketedSink.ensureIndex`).
     */
   def ensureLexIndex(spark: SparkSession, dir: String): String = {
     val table = tableFor(dir)
-    if (!Seq(table, table + "_df", table + "_stats")
-          .forall(spark.catalog.tableExists))
+    graft.sources.BucketedSink.ensureIndex(spark, table, "_df", "_stats")(
       writeLexIndexOf(
-        Tables.spreadIfNarrow(Tables.documents(spark, dir), "doc_id"), table)
-    table
+        Tables.spreadIfNarrow(Tables.documents(spark, dir), "doc_id"), table))
   }
 
-  /** Build the index from a FRAME, overwrite semantics (the
-    * writePqIndexOf contract: no half, pair, or stale tombstone survives
-    * a rebuild). df and stats are PINNED at build time — the collection
-    * statistics an appended document is scored under are the build's,
-    * exactly how segment-based lexical engines serve idf between merges,
-    * and the lexical twin of the pinned-codebook discipline: re-deriving
-    * df on append would re-rank every stored document's terms.
+  /** Build the index from a FRAME with `BucketedSink.rebuildIndex`'s
+    * overwrite contract. df and stats are PINNED at build time — the
+    * collection statistics an appended document is scored under are the
+    * build's, exactly how segment-based lexical engines serve idf between
+    * merges, and the lexical twin of the pinned-codebook discipline:
+    * re-deriving df on append would re-rank every stored document's terms.
     */
   def writeLexIndexOf(docs0: DataFrame, table: String): Unit = {
     val spark = docs0.sparkSession
-    Seq(table, table + "_df", table + "_stats",
-      graft.sources.BucketedSink.tombTableOf(table))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    val post = postingsOf(docs0)
-    graft.sources.BucketedSink.ensureTable(spark, table) {
-      graft.sources.BucketedSink.writeBucketed(
-        post, table, "doc_id", PostBuckets, sortCols = Seq("doc_id", "term"))
-    }
-    graft.sources.BucketedSink.ensureTable(spark, table + "_df") {
+    graft.sources.BucketedSink.rebuildIndex(spark, table) {
+      graft.sources.BucketedSink.writeBucketed(postingsOf(docs0), table,
+        "doc_id", PostBuckets, sortCols = Seq("doc_id", "term"))
       spark.table(table).groupBy(col("term")).agg(count(lit(1)).as("df"))
         .write.format("parquet").saveAsTable(table + "_df")
-    }
-    graft.sources.BucketedSink.ensureTable(spark, table + "_stats") {
       statsOf(docs0).write.format("parquet").saveAsTable(table + "_stats")
     }
   }
@@ -406,48 +395,13 @@ object Lexical {
       spark.table(table + "_df"), spark.table(table + "_stats"))
   }
 
-  /** Incremental ingest (the appendPqCodes lifecycle applied to the
-    * inverted index): tokenize a new batch and insert its posting rows —
-    * df/stats stay PINNED (see writeLexIndexOf). Same three protections
-    * as the PQ pair: intra-batch doc_id dedup, idempotence under
-    * redelivery (stored ids semi-joined against the broadcast batch-id
-    * set, then the batch anti-joins that bounded set — the index itself
-    * never shuffles), and tombstone reinstatement (a batch carrying a
-    * tombstoned id compacts first so the re-ingested doc serves). The
-    * batch repartitions by the table's own bucket hash so each append
-    * lands exactly `buckets` files.
+  /** Incremental ingest: tokenize a new batch and insert its posting rows
+    * through `BucketedSink.appendIndex` (idempotent, reinstating, one file
+    * per bucket) — df/stats stay PINNED (see writeLexIndexOf).
     */
   def appendLexDocs(batch: DataFrame, table: String): Unit =
-    appendDocRows(batch, table, postingsOf)
-
-  /** The shared incremental-ingest fold for both doc_id-bucketed lexical
-    * tables (term-frequency postings and position rows): `rowsOf`
-    * tokenizes a deduped fresh batch into the table's row shape.
-    */
-  private def appendDocRows(batch: DataFrame, table: String,
-                            rowsOf: DataFrame => DataFrame): Unit = {
-    val spark = batch.sparkSession
-    val nBuckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(spark.sessionState.conf.numShufflePartitions)
-    val b = batch.select(col("doc_id"), col("text")).dropDuplicates("doc_id")
-    val batchIds = b.select(col("doc_id"))
-    val tt = graft.sources.BucketedSink.tombTableOf(table)
-    if (spark.catalog.tableExists(tt) &&
-        !spark.table(tt).join(broadcast(batchIds), Seq("doc_id"), "left_semi").isEmpty)
-      graft.sources.BucketedSink.compactTombstones(spark, table, "doc_id")
-    val present = spark.table(table).select(col("doc_id"))
-      .join(broadcast(batchIds), Seq("doc_id"), "left_semi").distinct()
-    val fresh = b.join(broadcast(present), Seq("doc_id"), "left_anti")
-    // insertInto resolves by POSITION, not name — select the batch rows in
-    // the target table's own column order so a future reorder of the
-    // tokenizer's projection can never silently write into wrong columns
-    rowsOf(fresh)
-      .select(spark.table(table).columns.map(col).toSeq: _*)
-      .repartition(nBuckets, col("doc_id"))
-      .write.insertInto(table)
-  }
+    graft.sources.BucketedSink.appendIndex(
+      batch.select(col("doc_id"), col("text")), table, "doc_id")(postingsOf)
 
   /** The per-term contribution expression shared by the batch radius and
     * the streaming twin — idf_e4 · tfsat_e6 with the collection stats
@@ -936,26 +890,19 @@ object Lexical {
     */
   def ensureLexPosIndex(spark: SparkSession, dir: String): String = {
     val table = posTableFor(dir)
-    if (!Seq(table, table + "_df").forall(spark.catalog.tableExists))
+    graft.sources.BucketedSink.ensureIndex(spark, table, "_df")(
       writeLexPosIndexOf(
-        Tables.spreadIfNarrow(Tables.documents(spark, dir), "doc_id"), table)
-    table
+        Tables.spreadIfNarrow(Tables.documents(spark, dir), "doc_id"), table))
   }
 
-  /** Overwrite-semantics build from a frame (the writeLexIndexOf
-    * contract: no half pair or stale tombstone survives a rebuild).
+  /** Build from a frame with `BucketedSink.rebuildIndex`'s overwrite
+    * contract.
     */
   def writeLexPosIndexOf(docs0: DataFrame, table: String): Unit = {
     val spark = docs0.sparkSession
-    Seq(table, table + "_df",
-      graft.sources.BucketedSink.tombTableOf(table))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    graft.sources.BucketedSink.ensureTable(spark, table) {
-      graft.sources.BucketedSink.writeBucketed(
-        ppostOf(docs0), table, "doc_id", PostBuckets,
-        sortCols = Seq("doc_id", "pos"))
-    }
-    graft.sources.BucketedSink.ensureTable(spark, table + "_df") {
+    graft.sources.BucketedSink.rebuildIndex(spark, table) {
+      graft.sources.BucketedSink.writeBucketed(ppostOf(docs0), table,
+        "doc_id", PostBuckets, sortCols = Seq("doc_id", "pos"))
       spark.table(table).select(col("doc_id"), col("term")).distinct()
         .groupBy(col("term")).agg(count(lit(1)).as("df"))
         .write.format("parquet").saveAsTable(table + "_df")
@@ -998,13 +945,12 @@ object Lexical {
   private[graft] def lexPhraseRecomputed(docs0: DataFrame, table: String): DataFrame =
     phraseKMatch(ppostOf(docs0), docs0.sparkSession.table(table + "_df"))
 
-  /** Incremental ingest for the positional index — the appendLexDocs
-    * protections verbatim (intra-batch dedup, redelivery idempotence via
-    * the broadcast batch-id semi/anti pair, tombstone reinstatement via
-    * compact-first, bucket-hash file control, schema-order insert).
+  /** Incremental ingest for the positional index through
+    * `BucketedSink.appendIndex`, df PINNED like appendLexDocs'.
     */
   def appendLexPosDocs(batch: DataFrame, table: String): Unit =
-    appendDocRows(batch, table, ppostOf)
+    graft.sources.BucketedSink.appendIndex(
+      batch.select(col("doc_id"), col("text")), table, "doc_id")(ppostOf)
 
   def deleteLexPosDocs(spark: SparkSession, table: String, docIds: DataFrame): Unit =
     graft.sources.BucketedSink.appendTombstones(spark, table,

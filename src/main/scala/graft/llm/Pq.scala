@@ -353,10 +353,7 @@ object Pq {
   }
 
   private def dropLegacy(spark: SparkSession, dir: String): Unit =
-    legacyTablesFor(dir).foreach { t =>
-      Seq(t, t + "_cb", graft.sources.BucketedSink.tombTableOf(t))
-        .foreach(n => spark.sql(s"DROP TABLE IF EXISTS `$n`"))
-    }
+    legacyTablesFor(dir).foreach(graft.sources.BucketedSink.dropIndex(spark, _))
 
   /** Bucket count for the codes table (the BucketedSink 2-3×-cores rule). */
   private val CodesBuckets = 32
@@ -370,52 +367,32 @@ object Pq {
     * layout the append/tombstone lifecycle maintains and the cell-pruned
     * radius/streaming probes serve from.
     *
-    * OVERWRITE semantics (the AnnIndexSink.writeEmbeddingIndexOf
-    * contract, r9 review fix): a pre-existing half, a pre-existing PAIR,
-    * or stale tombstones must never survive a (re)build. A gated write
-    * would silently no-op on an existing name (probes keep serving the
-    * old corpus with no error), or — worse, with only the codebook half
-    * present — encode the NEW corpus under the OLD codebook, the exact
-    * mixed-provenance mis-ranking the tableFor scaladoc warns about; and
-    * a rebuilt full pair must not inherit the previous pair's deletions.
+    * OVERWRITE semantics (`BucketedSink.rebuildIndex`): every table the
+    * pair may own is dropped first — including the `_perm` rotation so a
+    * plain rebuild over an OPQ name can never leave a stale rotation
+    * beside un-permuted codes, and the codebook so the NEW corpus is never
+    * encoded under the OLD one (the mixed-provenance mis-ranking the
+    * tableFor scaladoc warns about).
     */
-  def writePqIndexOf(v: DataFrame, table: String): Unit = {
-    dropPair(v.sparkSession, table)
-    writePairCore(v, table)
-  }
-
-  /** Every table a pair may own, dropped before any (re)build — including
-    * the `_perm` rotation half so a plain rebuild over an OPQ name can
-    * never leave a stale rotation beside un-permuted codes.
-    */
-  private def dropPair(spark: SparkSession, table: String): Unit =
-    Seq(table, table + "_cb", table + "_cents", table + "_perm",
-      graft.sources.BucketedSink.tombTableOf(table))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+  def writePqIndexOf(v: DataFrame, table: String): Unit =
+    graft.sources.BucketedSink.rebuildIndex(v.sparkSession, table)(
+      writePairCore(v, table))
 
   /** The shared build tail over an already-laid-out corpus frame (`v` is
     * the raw corpus for the plain pair, the permuted projection for the
     * OPQ pair — stored artifacts always live in the SERVING coordinate
-    * system). Assumes the pair's names were dropped by the caller.
+    * system). Runs inside the caller's `rebuildIndex`.
     */
   private def writePairCore(v: DataFrame, table: String): Unit = {
     val spark = v.sparkSession
     val cbTable = table + "_cb"
     val centTable = table + "_cents"
-    // ensureTable after the explicit DROP always rebuilds — it exists here
-    // to clear an orphaned warehouse directory left by a crashed write
-    graft.sources.BucketedSink.ensureTable(spark, cbTable) {
-      codebookOf(v).write.format("parquet").saveAsTable(cbTable)
-    }
-    graft.sources.BucketedSink.ensureTable(spark, centTable) {
-      Ann.ivfCentroidsOf(v).select(col("cell").as("cent_id"), col("cv"))
-        .write.format("parquet").saveAsTable(centTable)
-    }
-    graft.sources.BucketedSink.ensureTable(spark, table) {
-      graft.sources.BucketedSink.writeBucketed(
-        encodeWithCells(v, spark.table(cbTable), spark.table(centTable)),
-        table, "vec_id", CodesBuckets, sortCols = Seq("vec_id", "m"))
-    }
+    codebookOf(v).write.format("parquet").saveAsTable(cbTable)
+    Ann.ivfCentroidsOf(v).select(col("cell").as("cent_id"), col("cv"))
+      .write.format("parquet").saveAsTable(centTable)
+    graft.sources.BucketedSink.writeBucketed(
+      encodeWithCells(v, spark.table(cbTable), spark.table(centTable)),
+      table, "vec_id", CodesBuckets, sortCols = Seq("vec_id", "m"))
   }
 
   /** (vec_id, m, code, cell): the stored-codes layout — PQ codes from the
@@ -440,18 +417,12 @@ object Pq {
     */
   def ensurePqIndex(spark: SparkSession, dir: String): String = {
     val table = tableFor(dir)
-    // a PARTIAL pair (any stored piece missing) rebuilds EVERYTHING
-    // including the tombstone table (writePqIndexOf drops them all, r9
-    // review fix): a fresh full-corpus pair inheriting the previous pair's
-    // deletions would permanently hide vectors the rebuild contract says
-    // serve. Superseded-layout names for the same dir/width are dropped
-    // alongside (r10, the orphan-cleanup contract in tableFor's scaladoc).
-    if (!Seq(table, table + "_cb", table + "_cents")
-          .forall(spark.catalog.tableExists)) {
+    // superseded-layout names for the same dir/width are dropped alongside
+    // a (re)build (r10, the orphan-cleanup contract in tableFor's scaladoc)
+    graft.sources.BucketedSink.ensureIndex(spark, table, "_cb", "_cents") {
       dropLegacy(spark, dir)
       writePqIndexOf(vecs(spark, dir), table)
     }
-    table
   }
 
   /** Build (once) the persisted OPQ pair for `dir`'s corpus (r10 — the r9
@@ -465,10 +436,8 @@ object Pq {
     */
   def ensurePqOpqIndex(spark: SparkSession, dir: String): String = {
     val table = tableFor(dir, opq = true)
-    if (!Seq(table, table + "_cb", table + "_cents", table + "_perm")
-          .forall(spark.catalog.tableExists))
-      writePqOpqIndexOf(vecs(spark, dir), table)
-    table
+    graft.sources.BucketedSink.ensureIndex(spark, table, "_cb", "_cents", "_perm")(
+      writePqOpqIndexOf(vecs(spark, dir), table))
   }
 
   /** The OPQ build: store the permutation FIRST, then build the pair over
@@ -477,13 +446,12 @@ object Pq {
     */
   def writePqOpqIndexOf(v: DataFrame, table: String): Unit = {
     val spark = v.sparkSession
-    dropPair(spark, table)
     val permTable = table + "_perm"
-    graft.sources.BucketedSink.ensureTable(spark, permTable) {
+    graft.sources.BucketedSink.rebuildIndex(spark, table) {
       permAsgOf(v).select(col("pos"), col("sub_m"), col("slot"))
         .write.format("parquet").saveAsTable(permTable)
+      writePairCore(applyStoredPerm(v, spark.table(permTable)), table)
     }
-    writePairCore(applyStoredPerm(v, spark.table(permTable)), table)
   }
 
   /** Re-lay-out vectors under a STORED (pos, sub_m, slot) rotation table —
@@ -519,47 +487,26 @@ object Pq {
       table)
   }
 
-  /** Incremental ingest (r9 — the AnnIndexSink.appendEmbeddings lifecycle
-    * applied to the compressed pair): encode a new batch against the
-    * STORED codebook — never retrain; retraining would orphan every stored
-    * code, which is why real PQ deployments pin the codebook at
-    * ingest-time and version it with the index — and insert into the
-    * bucketed codes table. Same three protections as the float index:
-    * intra-batch vec_id dedup, idempotence under redelivery (stored ids
-    * SEMI-joined against the broadcast batch-id set, then the batch
-    * anti-joins that bounded set — the index itself never shuffles), and
-    * tombstone reinstatement (a batch carrying a tombstoned id compacts
-    * first so the re-ingested vector serves instead of staying hidden).
-    * The batch repartitions by the table's own bucket hash so each append
-    * lands exactly `buckets` files.
+  /** Incremental ingest (r9): encode a new batch against the STORED
+    * codebook — never retrain; retraining would orphan every stored code,
+    * which is why real PQ deployments pin the codebook at ingest-time and
+    * version it with the index — and insert into the bucketed codes table
+    * through `BucketedSink.appendIndex` (idempotent, reinstating, one file
+    * per bucket).
     */
   def appendPqCodes(batch: DataFrame, table: String): Unit = {
     val spark = batch.sparkSession
-    val nBuckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(spark.sessionState.conf.numShufflePartitions)
-    val b = batch.select(col("vec_id"), col("embedding"))
-      .dropDuplicates("vec_id")
-    val batchIds = b.select(col("vec_id"))
-    val tt = graft.sources.BucketedSink.tombTableOf(table)
-    if (spark.catalog.tableExists(tt) &&
-        !spark.table(tt).join(broadcast(batchIds), Seq("vec_id"), "left_semi").isEmpty)
-      compactPq(spark, table)
-    val present = spark.table(table).select(col("vec_id"))
-      .join(broadcast(batchIds), Seq("vec_id"), "left_semi").distinct()
-    val fresh = b.join(broadcast(present), Seq("vec_id"), "left_anti")
-    // an OPQ pair's batch is re-laid-out under the STORED rotation before
-    // encoding (r10) — codes, cells and codebook all live in the permuted
-    // coordinate system, and the append must land in the same one
-    val laid =
-      if (spark.catalog.tableExists(table + "_perm"))
-        applyStoredPerm(fresh, spark.table(table + "_perm"))
-      else fresh
-    encodeWithCells(laid, spark.table(table + "_cb"),
-        spark.table(table + "_cents"))
-      .repartition(nBuckets, col("vec_id"))
-      .write.insertInto(table)
+    graft.sources.BucketedSink.appendIndex(
+        batch.select(col("vec_id"), col("embedding")), table, "vec_id") { fresh =>
+      // an OPQ pair's batch is re-laid-out under the STORED rotation before
+      // encoding (r10) — codes, cells and codebook all live in the permuted
+      // coordinate system, and the append must land in the same one
+      val laid =
+        if (spark.catalog.tableExists(table + "_perm"))
+          applyStoredPerm(fresh, spark.table(table + "_perm"))
+        else fresh
+      encodeWithCells(laid, spark.table(table + "_cb"), spark.table(table + "_cents"))
+    }
   }
 
   /** Retract vectors from the compressed serving pair: tombstones on

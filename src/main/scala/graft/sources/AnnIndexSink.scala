@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import graft.Tables
 
 /** Persisted ANN serving index — the embedding counterpart of IndexSink's
@@ -47,91 +47,42 @@ object AnnIndexSink {
                           buckets: Int): Unit =
     writeEmbeddingIndexOf(Tables.embeddings(spark, dir), table, buckets)
 
-  /** Batch-parametric build (ingest pipelines index frames, not dirs). */
-  def writeEmbeddingIndexOf(batch: DataFrame, table: String,
-                            buckets: Int): Unit = {
-    val idx = batch
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("bucket", graft.llm.Ann.lshBucket(col("embedding")))
-    BucketedSink.writeBucketed(idx, table, "bucket", buckets,
-      sortCols = Seq("bucket"))
-  }
-
-  /** Incremental ingest: append a new batch into the EXISTING index table.
-    * Bucket ids are content-keyed (md5-derived hyperplane signs), so the
-    * new batch computes the identical bucket scheme and V1 insert honors
-    * the catalog's bucket spec — the appended files land hashed into the
-    * same layout and every downstream probe keeps its exchange-free index
-    * side. This is the daily-crawl path the sink's scaladoc promises:
-    * rebuild only when the hyperplane family changes. (AnnIndexSpec proves
-    * a half-build + append probes identically to a full build — which is
-    * also the layout-correctness proof: a mis-bucketed append would make
-    * the bucket-trusting join silently MISS rows, not just slow down.)
-    *
-    * Idempotent under redelivery (r7): a retried batch must not plant
-    * duplicate vec_ids — duplicate index rows silently change probe
-    * results (doubled neighbor rows, shifted top-k tie-breaks). Two
-    * broadcast-small-side joins keep the dedup O(batch): the stored
-    * index is SEMI-joined against the broadcast batch-id set (one pruned
-    * vec_id column scan, no index shuffle — a LeftAnti can only build
-    * its right side, so anti-joining the batch directly against the full
-    * index would broadcast or shuffle the INDEX, growing every daily
-    * append with index size), yielding the already-present ids (≤ batch,
-    * so IT broadcasts), and the batch anti-joins that bounded set.
-    *
-    * File proliferation: V1 bucketed insert writes one file per (task,
-    * bucket) pair, so an unpartitioned 32-task batch appends up to
-    * 32×buckets small files per day. Repartitioning the batch by the
-    * bucket column's hash (numPartitions = the table's bucket count, the
-    * SAME pmod(hash(bucket), n) both use) lands each bucket's rows in
-    * exactly one task → exactly `buckets` new files per append.
+  /** Batch-parametric build (ingest pipelines index frames, not dirs),
+    * with `BucketedSink.rebuildIndex`'s overwrite contract.
     */
-  def appendEmbeddings(batch: DataFrame, table: String): Unit = {
-    val spark = batch.sparkSession
-    val nBuckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(spark.sessionState.conf.numShufflePartitions)
-    // Intra-batch dedup (r8): the stored-row check below only guards
-    // against ids ALREADY in the index — a batch carrying the same vec_id
-    // twice (e.g. an upstream union of two feeds) would sail through it
-    // and plant duplicate index rows, the exact silent probe corruption
-    // (doubled neighbor rows, shifted top-k tie-breaks) the redelivery
-    // contract exists to prevent, just from inside one call.
-    val b = batch.select(col("vec_id"), col("embedding"))
-      .dropDuplicates("vec_id")
-    val batchIds = b.select(col("vec_id"))
-    // Tombstone reinstatement (r8): while a vec_id is tombstoned its
-    // physical row still exists, so the idempotence check would silently
-    // swallow the re-append while the tombstone keeps hiding the stored
-    // row — an UPDATED vector lost with no signal. When the batch
-    // intersects the tombstone set, compact first: the old physical rows
-    // are folded out and the tombstone table dropped, so the new rows
-    // insert and serve. The trigger join is bounded (tombstones are a
-    // takedown list; batch ids broadcast), and the rewrite only fires on
-    // the rare delete-then-re-ingest path — the common daily append pays
-    // one catalog-existence check.
-    val tt = BucketedSink.tombTableOf(table)
-    if (spark.catalog.tableExists(tt) &&
-        !spark.table(tt).join(broadcast(batchIds), Seq("vec_id"), "left_semi").isEmpty)
-      compact(spark, table)
-    val present = spark.table(table).select(col("vec_id"))
-      .join(broadcast(batchIds), Seq("vec_id"), "left_semi")
-    b.join(broadcast(present), Seq("vec_id"), "left_anti")
-      .withColumn("bucket", graft.llm.Ann.lshBucket(col("embedding")))
-      .repartition(nBuckets, col("bucket"))
-      .write.insertInto(table)
-  }
+  def writeEmbeddingIndexOf(batch: DataFrame, table: String,
+                            buckets: Int): Unit =
+    BucketedSink.rebuildIndex(batch.sparkSession, table)(
+      BucketedSink.writeBucketed(rowsOf(batch.select(col("vec_id"), col("embedding"))),
+        table, "bucket", buckets, sortCols = Seq("bucket")))
+
+  private def rowsOf(vecs: DataFrame): DataFrame =
+    vecs.withColumn("bucket", graft.llm.Ann.lshBucket(col("embedding")))
+
+  /** Incremental ingest: append a new batch into the EXISTING index table
+    * through `BucketedSink.appendIndex` (idempotent, reinstating, one file
+    * per bucket). Bucket ids are content-keyed (md5-derived hyperplane
+    * signs), so the new batch computes the identical bucket scheme and V1
+    * insert honors the catalog's bucket spec — the appended files land
+    * hashed into the same layout and every downstream probe keeps its
+    * exchange-free index side: rebuild only when the hyperplane family
+    * changes. (AnnIndexSpec proves a half-build + append probes
+    * identically to a full build — which is also the layout-correctness
+    * proof: a mis-bucketed append would make the bucket-trusting join
+    * silently MISS rows, not just slow down.)
+    */
+  def appendEmbeddings(batch: DataFrame, table: String): Unit =
+    BucketedSink.appendIndex(batch.select(col("vec_id"), col("embedding")),
+      table, "vec_id")(rowsOf)
 
   /** Retract embeddings from the serving index (a real corpus takes
     * documents DOWN — an index that can only grow re-serves deleted
     * vectors as neighbors): record vec_ids as tombstones; every probe
     * excludes them via the bounded broadcast anti-join in
     * `BucketedSink.readServing`, index-side bucket layout and exchange
-    * count unchanged. Re-appending a tombstoned vec_id triggers a
-    * compaction inside `appendEmbeddings` (r8) so the new vector lands
-    * and serves instead of being silently hidden;
-    * AnnIndexSpec/IndexTombstoneSpec pin the delete ≡ rebuild contract.
+    * count unchanged. Re-appending a tombstoned vec_id reinstates it
+    * (`BucketedSink.appendIndex`); AnnIndexSpec/IndexTombstoneSpec pin
+    * the delete ≡ rebuild contract.
     */
   def deleteEmbeddings(spark: SparkSession, table: String, vecIds: DataFrame): Unit =
     BucketedSink.appendTombstones(spark, table,
@@ -150,7 +101,7 @@ object AnnIndexSink {
   def ensureEmbeddingIndex(spark: SparkSession, dir: String,
                            buckets: Int = 32): String = {
     val table = tableFor(dir)
-    BucketedSink.ensureTable(spark, table)(
+    BucketedSink.ensureIndex(spark, table)(
       writeEmbeddingIndex(spark, dir, table, buckets))
   }
 }

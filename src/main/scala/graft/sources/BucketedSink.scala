@@ -1,7 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /** Bucketed parquet table sink — the production answer to the shuffles the
   * capex pipeline pays on RequestNo and every repeated key join/window
@@ -121,10 +123,7 @@ object BucketedSink {
     // else the backup is restored. Only then proceed (or return) normally.
     recoverSwap(spark, table, tt)
     if (!spark.catalog.tableExists(tt)) return
-    val meta = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val spec = meta.bucketSpec.getOrElse(
-      throw new IllegalStateException(s"$table is not bucketed"))
+    val spec = bucketSpecOf(spark, table)
     val staging = table + "_compacting"
     spark.sql(s"DROP TABLE IF EXISTS `$staging`")
     val w = readServing(spark, table, keyCol)
@@ -180,22 +179,129 @@ object BucketedSink {
   }
 
   /** Run `write` only if `table` is absent from the catalog, first clearing
-    * an orphaned warehouse location (the in-memory catalog forgets tables
-    * between JVMs but warehouse files persist — a leftover directory would
-    * fail the CTAS). Returns the table name.
+    * an orphaned warehouse location. Returns the table name.
     */
   def ensureTable(spark: SparkSession, table: String)(write: => Unit): String = {
     if (!spark.catalog.tableExists(table)) {
-      val loc = java.nio.file.Paths.get(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(loc)
-        try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
-        finally walk.close()
-      }
+      clearOrphan(spark, table)
       write
     }
     table
+  }
+
+  /** Delete `table`'s warehouse directory when the catalog does not know
+    * the table: the in-memory catalog forgets tables between JVMs but
+    * warehouse files persist, and a leftover directory would fail the CTAS.
+    */
+  private def clearOrphan(spark: SparkSession, table: String): Unit = {
+    val loc = java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
+    if (java.nio.file.Files.exists(loc)) {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(loc)
+      try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
+      finally walk.close()
+    }
+  }
+
+  // ---------------------------------------------------------------------
+  // The persisted-index lifecycle: build, idempotent append, tombstone
+  // (appendTombstones / readServing), compact (compactTombstones). Every
+  // serving index (ANN vectors, lexical postings and positions, PQ codes,
+  // MinHash bands, corpus state) is mutated only through these functions.
+  // ---------------------------------------------------------------------
+
+  /** Suffixes of the side tables an index may own next to its main table:
+    * lexical df/stats, the PQ codebook/centroids/rotation, the corpus
+    * state's benchmark blocklist.
+    */
+  private val Companions = Seq("_df", "_stats", "_cb", "_cents", "_perm", "_bench")
+
+  private def bucketSpecOf(spark: SparkSession, table: String): BucketSpec =
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(table))
+      .bucketSpec.getOrElse(throw new IllegalStateException(s"$table is not bucketed"))
+
+  /** Drop an index: its table, every companion table and its tombstones,
+    * clearing orphaned warehouse directories under the same names.
+    */
+  def dropIndex(spark: SparkSession, table: String): Unit =
+    ((table +: Companions.map(table + _)) :+ tombTableOf(table)).foreach { t =>
+      if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE IF EXISTS `$t`")
+      clearOrphan(spark, t)
+    }
+
+  /** The one overwrite contract: drop the whole index, then run `write`.
+    * No half, companion or stale tombstone of a previous build survives a
+    * rebuild — a gated write would keep serving the old corpus, a half-kept
+    * companion would mix provenance (a new corpus encoded under an old
+    * codebook, scored under old df), and inherited tombstones would hide
+    * ids the new build serves.
+    */
+  def rebuildIndex(spark: SparkSession, table: String)(write: => Unit): Unit = {
+    dropIndex(spark, table)
+    write
+  }
+
+  /** Build once: `rebuildIndex(table)(write)` unless `table` and every
+    * `table + companion` exist — a partial set rebuilds everything.
+    * Returns the table name.
+    */
+  def ensureIndex(spark: SparkSession, table: String, companions: String*)
+                 (write: => Unit): String = {
+    if (!(table +: companions.map(table + _)).forall(spark.catalog.tableExists))
+      rebuildIndex(spark, table)(write)
+    table
+  }
+
+  /** Incremental ingest into a bucketed index: `rowsOf` shapes the fresh
+    * rows of `batch` (one row per `key`) into the table's rows, which
+    * insert under the table's own bucket spec. Protections, in order:
+    *  - intra-batch dedup on `key`: the stored-id check below cannot see
+    *    a key carried twice by one batch (an upstream union of two feeds),
+    *    and duplicate index rows silently change probe results (doubled
+    *    neighbor rows, shifted top-k tie-breaks);
+    *  - tombstone reinstatement: while a key is tombstoned its physical
+    *    rows still exist, so the idempotence check would swallow the
+    *    re-append while the tombstone keeps hiding the stored rows — an
+    *    updated document lost with no signal. A batch that hits the
+    *    tombstone set compacts first, so the new rows insert and serve.
+    *    The trigger join is bounded (a takedown list against broadcast
+    *    batch ids); the common append pays one catalog check;
+    *  - idempotence under redelivery: the stored ids are SEMI-joined
+    *    against the broadcast batch ids (one pruned key-column scan, no
+    *    index shuffle — a LeftAnti can only build its right side, so
+    *    anti-joining the batch against the full index would broadcast or
+    *    shuffle the INDEX, growing every append with index size), and the
+    *    batch anti-joins that bounded present set. The present set is
+    *    deduped only when the key is the bucket column: there the distinct
+    *    reads the bucketed layout with no exchange; elsewhere it would add
+    *    a shuffle stage, and duplicate keys on an anti-join's build side
+    *    cost only broadcast size;
+    *  - file control: V1 bucketed insert writes one file per (task,
+    *    bucket), so the rows repartition by the table's bucket columns
+    *    into its bucket count (the same pmod hash) — at most one new file
+    *    per bucket per append;
+    *  - column order: `insertInto` resolves by position, so the rows are
+    *    selected in the table's own column order.
+    * A table without a bucket spec is rejected.
+    */
+  def appendIndex(batch: DataFrame, table: String, key: String)
+                 (rowsOf: DataFrame => DataFrame): Unit = {
+    val spark = batch.sparkSession
+    val spec = bucketSpecOf(spark, table)
+    val b = batch.dropDuplicates(key)
+    val batchIds = b.select(col(key))
+    val tt = tombTableOf(table)
+    if (spark.catalog.tableExists(tt) &&
+        !spark.table(tt).join(broadcast(batchIds), Seq(key), "left_semi").isEmpty)
+      compactTombstones(spark, table, key)
+    val stored = spark.table(table)
+    val present = stored.select(col(key))
+      .join(broadcast(batchIds), Seq(key), "left_semi")
+    val bounded = if (spec.bucketColumnNames == Seq(key)) present.distinct() else present
+    rowsOf(b.join(broadcast(bounded), Seq(key), "left_anti"))
+      .select(stored.columns.map(col).toSeq: _*)
+      .repartition(spec.numBuckets, spec.bucketColumnNames.map(col).toSeq: _*)
+      .write.insertInto(table)
   }
 }

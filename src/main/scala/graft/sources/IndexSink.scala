@@ -26,10 +26,6 @@ import graft.llm.Dedup
   */
 object IndexSink {
 
-  /** Build the signature index for the non-batch slice of `dir`'s corpus
-    * (the same `doc_id % IncrementalBatchMod != 0` split dedup_incremental
-    * treats as "already ingested") and persist it bucketed by band_hash.
-    */
   /** The probe key (band_idx, band_hash) materialized as ONE column — the
     * bucket layout must hash exactly the join key, and a compound key
     * would either disable the bucketed scan (two-key join over a one-key
@@ -38,13 +34,19 @@ object IndexSink {
     */
   private def bandKey = concat_ws(":", col("band_idx"), col("band_hash"))
 
+  /** Build the signature index for the non-batch slice of `dir`'s corpus
+    * (the same `doc_id % IncrementalBatchMod != 0` split dedup_incremental
+    * treats as "already ingested") and persist it bucketed by band_key,
+    * with `BucketedSink.rebuildIndex`'s overwrite contract.
+    */
   def writeSignatureIndex(spark: SparkSession, dir: String, table: String,
-                          buckets: Int): Unit = {
-    val sigs = Dedup.minhashSignatures(spark, dir)
-      .filter(col("doc_id") % Dedup.IncrementalBatchMod =!= 0)
-      .withColumn("band_key", bandKey)
-    BucketedSink.writeBucketed(sigs, table, "band_key", buckets)
-  }
+                          buckets: Int): Unit =
+    BucketedSink.rebuildIndex(spark, table) {
+      val sigs = Dedup.minhashSignatures(spark, dir)
+        .filter(col("doc_id") % Dedup.IncrementalBatchMod =!= 0)
+        .withColumn("band_key", bandKey)
+      BucketedSink.writeBucketed(sigs, table, "band_key", buckets)
+    }
 
   /** Probe the stored index with a batch's band rows: a batch doc is a
     * duplicate iff some shared (band_idx, band_hash) bucket pairs it with
@@ -81,11 +83,10 @@ object IndexSink {
                                buckets: Int = 32): String = {
     val fp = BucketedSink.contentFingerprint(Seq(s"$dir/documents.parquet"))
     val table = "sig_idx_full_" + BucketedSink.nameHash(s"$dir\n$fp")
-    BucketedSink.ensureTable(spark, table) {
+    BucketedSink.ensureIndex(spark, table) {
       val sigs = Dedup.minhashSignatures(spark, dir).withColumn("band_key", bandKey)
       BucketedSink.writeBucketed(sigs, table, "band_key", buckets)
     }
-    table
   }
 
   /** D2's near-dup pair generation served from the stored full-corpus

@@ -33,6 +33,23 @@ class CorpusPipelineSpec extends SparkSpecBase {
     Checkpoints.releaseAll()
   }
 
+  test("quality_score rounds like the DuckDB oracle at half-way ties") {
+    import spark.implicits._
+    // each input is a 5-decimal tie whose scaled double falls just below
+    // the half (0.61235·10^4 = 6123.4999…): DuckDB's round(q, 4) keeps
+    // the lower value, Spark's round(q, 4) would take the upper one; the
+    // last three are ties the scaled double holds exactly and round up
+    val cases = Seq(0.61235 -> 0.6123, 0.00145 -> 0.0014, 0.01045 -> 0.0104,
+      0.02005 -> 0.02, 0.12345 -> 0.1235, 0.99995 -> 1.0, 0.00005 -> 0.0001)
+    val got = cases.map(_._1).toDF("q")
+      .select(col("q"), Corpus.roundQuality(col("q")), round(col("q"), 4))
+      .collect().map(r => r.getDouble(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    for ((q, want) <- cases)
+      assert(got(q)._1 == want, s"round($q) = ${got(q)._1}, oracle $want")
+    assert(cases.count { case (q, want) => got(q)._2 != want } == 4,
+      "sanity: Spark's round(q, 4) must get exactly the four low ties wrong")
+  }
+
   test("indexed twin is row-identical to the recompute flagship") {
     val a = rows(Corpus.corpusPipeline(spark, sfDir))
     Checkpoints.releaseAll()

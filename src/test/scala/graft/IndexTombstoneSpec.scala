@@ -13,7 +13,9 @@ import graft.sources.{AnnIndexSink, BucketedSink, IndexSink}
   *    exchange — deletion costs a bounded broadcast, never a reshuffle),
   *  - deletion is idempotent under redelivery,
   *  - compaction folds tombstones into the files: same probe results,
-  *    fewer physical rows, tombstone table gone, bucket layout intact.
+  *    fewer physical rows, tombstone table gone, bucket layout intact,
+  *  - a rebuild over a tombstoned name serves the whole new build: no
+  *    stale tombstone survives it.
   */
 class IndexTombstoneSpec extends SparkSpecBase {
 
@@ -62,6 +64,21 @@ class IndexTombstoneSpec extends SparkSpecBase {
     assert(rows(Ann.probeIndexTable(spark, full)) == rebuiltRows)
     assert(bucketShuffles(Ann.probeIndexTable(spark, full)).isEmpty,
       "compaction lost the bucket layout")
+    // rebuild over the same name after a takedown of SERVED neighbors:
+    // the fresh full build must serve them again, like a build under a
+    // new name
+    AnnIndexSink.writeEmbeddingIndexOf(v, rebuilt, buckets = 8)
+    val freshRows = rows(Ann.probeIndexTable(spark, rebuilt))
+    val served = Ann.probeIndexTable(spark, rebuilt).select(col("nb_id")).distinct()
+      .orderBy(col("nb_id")).limit(3).collect().map(_.getLong(0)).toSeq
+    AnnIndexSink.deleteEmbeddings(spark, full, served.toDF("vec_id"))
+    assert(rows(Ann.probeIndexTable(spark, full)) != freshRows,
+      "sanity: the takedown must change probe output")
+    AnnIndexSink.writeEmbeddingIndexOf(v, full, buckets = 8)
+    assert(!spark.catalog.tableExists(BucketedSink.tombTableOf(full)),
+      "rebuild kept stale tombstones — the fresh index would hide vectors")
+    assert(rows(Ann.probeIndexTable(spark, full)) == freshRows,
+      "rebuilt index does not serve like a fresh full build")
     drop(full, rebuilt)
     Checkpoints.releaseAll()
   }
@@ -142,6 +159,13 @@ class IndexTombstoneSpec extends SparkSpecBase {
     assert(rows(IndexSink.probe(spark, full, batch)) == rebuiltPairs)
     assert(bucketShuffles(IndexSink.probe(spark, full, batch)).isEmpty,
       "compaction lost the band_key layout")
+    // rebuild over a tombstoned index: the takedowns must not survive it
+    IndexSink.deleteDocs(spark, full, hit.toDF("doc_id"))
+    IndexSink.writeSignatureIndex(spark, sfDir, full, buckets = 4)
+    assert(!spark.catalog.tableExists(BucketedSink.tombTableOf(full)),
+      "rebuild kept stale tombstones — the fresh index would hide docs")
+    assert(rows(IndexSink.probe(spark, full, batch)) == preDelete,
+      "rebuilt index does not serve like a fresh build")
     drop(full, rebuilt)
     Checkpoints.releaseAll()
   }

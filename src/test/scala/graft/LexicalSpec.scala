@@ -354,6 +354,24 @@ class LexicalSpec extends SparkSpecBase {
   private def docsOf(dir: String) = Tables.documents(spark, dir)
     .select(col("doc_id"), col("text"))
 
+  /** Run `append` and assert it added at most one parquet file per bucket
+    * of `tbl` (the batch repartitioned by the bucket hash, not tasks ×
+    * buckets). The bound is on the append's delta, counted before and
+    * after, so it cannot hold vacuously.
+    */
+  private def assertOneFilePerBucket(tbl: String)(append: => Unit): Unit = {
+    val meta = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+    val buckets = meta.bucketSpec.map(_.numBuckets).getOrElse(fail(s"$tbl is not bucketed"))
+    def parquetFiles(): Int = new java.io.File(meta.location)
+      .listFiles().count(_.getName.endsWith(".parquet"))
+    val before = parquetFiles()
+    append
+    val added = parquetFiles() - before
+    assert(added > 0 && added <= buckets,
+      s"append wrote $added files into $buckets buckets")
+  }
+
   test("persisted index probe returns exactly the live retrieval's rows") {
     val got = rows(Lexical.lexicalIndexProbe(spark, sfDir))
     val want = rows(Lexical.lexicalTopk(spark, sfDir))
@@ -366,7 +384,8 @@ class LexicalSpec extends SparkSpecBase {
     dropIdx(tbl)
     val d = docsOf(sfDir)
     Lexical.writeLexIndexOf(d.filter(col("doc_id") % 2 === 0), tbl)
-    Lexical.appendLexDocs(d.filter(col("doc_id") % 2 =!= 0), tbl)
+    assertOneFilePerBucket(tbl)(
+      Lexical.appendLexDocs(d.filter(col("doc_id") % 2 =!= 0), tbl))
     // redelivery idempotence: re-appending the same batch changes nothing
     Lexical.appendLexDocs(d.filter(col("doc_id") % 2 =!= 0), tbl)
     // served rows must equal a from-scratch tokenize of the full corpus
@@ -422,7 +441,8 @@ class LexicalSpec extends SparkSpecBase {
     // half-build + append + redelivered append: serve == a from-scratch
     // posexplode of the full corpus under the STORED (half-build) df
     Lexical.writeLexPosIndexOf(d.filter(col("doc_id") % 2 === 0), tbl)
-    Lexical.appendLexPosDocs(d.filter(col("doc_id") % 2 =!= 0), tbl)
+    assertOneFilePerBucket(tbl)(
+      Lexical.appendLexPosDocs(d.filter(col("doc_id") % 2 =!= 0), tbl))
     Lexical.appendLexPosDocs(d.filter(col("doc_id") % 2 =!= 0), tbl)
     assert(rows(Lexical.lexPhraseFromStore(spark, tbl)) ===
         rows(Lexical.lexPhraseRecomputed(d, tbl)),
