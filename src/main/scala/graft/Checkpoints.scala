@@ -3,32 +3,72 @@ package graft
 import java.lang.ref.WeakReference
 import org.apache.spark.sql.DataFrame
 
-/** Registry of eager localCheckpoint barriers (Dedup, Ann — per-query
-  * ephemeral frames).
+/** Eager barriers (`cp`, `cpLazy`) and the memos that hand them out, under
+  * one lifetime rule: every frame is registered in exactly one scope, and
+  * releasing a scope frees only what that scope registered.
   *
   * The engine uses localCheckpoint for two load-bearing reasons (SURVEY §5):
   * cutting lineage at cache boundaries and keeping Catalyst's project
   * collapse from inlining tokenizers into per-element lambda accesses. The
   * blocks those checkpoints pin belong to RDDs, not the Dataset cache
-  * manager, so they linger until GC lets the ContextCleaner reap them.
-  * `releaseAll` frees them deterministically — Bench and Verify call it
-  * BETWEEN queries, after the previous query's results are fully written.
+  * manager, so they linger until GC lets the ContextCleaner reap them;
+  * releasing the owning scope frees them deterministically.
   *
-  * Scoping rules:
-  * - Tracking is via WeakReference: the registry never pins a frame, so a
-  *   long-lived session that never calls releaseAll behaves exactly as
-  *   before (GC + ContextCleaner reclaim dropped frames).
-  * - CapexDerive's long-lived caches (enriched/kept) are deliberately NOT
-  *   registered here: releaseAll between queries must not kill the frames
-  *   that later capex queries share. Its build-stage intermediates use a
-  *   capex-private list released by CapexDerive.clearCache().
-  * - Checkpoints cut lineage, so a released frame (and anything derived
-  *   from it) is dead, not recomputable — only call releaseAll at a point
-  *   where no frames produced earlier are still in use.
+  * Owners — every scope has exactly one:
+  * - Thread root: each thread has a root scope. `cp`, `cpLazy` and `memo`
+  *   register in the calling thread's innermost scope, which is the root
+  *   outside any `scoped` block. `releaseAll()` releases the calling
+  *   thread's root scope: its barriers and memo entries, and nothing of
+  *   another thread or of a `scoped` block still open on this one.
+  * - `scoped { … }`: a child scope for the block, released when the block
+  *   exits. Frames of the enclosing scopes stay readable.
+  * - Module scope: a module whose frames outlive any one caller owns a
+  *   `Scope` and releases it itself (CapexDerive's enriched/kept frames,
+  *   released by `CapexDerive.clearCache()`).
+  *
+  * A scope tracks checkpointed frames weakly, so one that is never
+  * released behaves as before (GC + ContextCleaner reclaim dropped
+  * frames). Persisted frames (`cache` mode, `cpLazy`) and memo entries are
+  * held until their scope is released: the cache manager pins their data
+  * anyway, and a dropped one could otherwise never be released.
+  * Checkpoints cut lineage, so a released frame (and anything derived from
+  * it) is dead, not recomputable: release a scope only when nothing it
+  * registered is still in use.
   */
 object Checkpoints {
 
-  private val tracked = new scala.collection.mutable.ArrayBuffer[WeakReference[DataFrame]]
+  /** A frame list plus a memo of frames by key; `release()` frees both. */
+  private[graft] final class Scope {
+    private val frames = scala.collection.mutable.ArrayBuffer.empty[WeakReference[DataFrame]]
+    private val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private val memos = scala.collection.mutable.HashMap.empty[Any, DataFrame]
+
+    /** Registers `df` weakly, or strongly when `pin`: a persisted frame's
+      * cache-manager entry outlives the dropped frame, so only a strong
+      * reference can still release it.
+      */
+    def track(df: DataFrame, pin: Boolean = false): DataFrame = synchronized {
+      if (pin) pinned += df else frames += new WeakReference(df)
+      df
+    }
+
+    /** The frame memoised under `key`; built and registered on a miss. */
+    def memo(key: Any)(build: => DataFrame): DataFrame = synchronized {
+      memos.getOrElse(key, { val df = track(build, pin = true); memos(key) = df; df })
+    }
+
+    def release(): Unit = synchronized {
+      (frames.flatMap(ref => Option(ref.get)) ++ pinned).distinct.foreach(Checkpoints.release)
+      frames.clear()
+      pinned.clear()
+      memos.clear()
+    }
+  }
+
+  /** The calling thread's scopes, innermost first; the last is its root. */
+  private val scopes = ThreadLocal.withInitial[List[Scope]](() => List(new Scope))
+
+  private[graft] def current: Scope = scopes.get.head
 
   /** Barrier mode, per-session via `graft.barrier`:
     *  - `local` (default): eager localCheckpoint — fastest, but lineage is
@@ -59,13 +99,14 @@ object Checkpoints {
       .map(f => s"cp@${f.getFileName}:${f.getLineNumber}")
       .getOrElse("cp")
 
-  /** Eager barrier (mode-dependent), weakly registered for explicit release. */
+  /** Eager barrier (mode-dependent), registered in the current scope. */
   def cp(df: DataFrame): DataFrame = {
     val sc = df.sparkSession.sparkContext
     val prevDesc = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(callerSite())
+    val m = mode(df)
     val out =
-      try mode(df) match {
+      try m match {
         case "cache" =>
           val c = df.cache()
           c.count() // eager, matching localCheckpoint(true) semantics
@@ -77,8 +118,7 @@ object Checkpoints {
           df.checkpoint(true)
         case _ => df.localCheckpoint(true)
       } finally sc.setJobDescription(prevDesc)
-    tracked.synchronized { tracked += new WeakReference(out) }
-    out
+    current.track(out, pin = m == "cache")
   }
 
   /** Lazy cache barrier: persist WITHOUT forcing materialization, for call
@@ -86,12 +126,24 @@ object Checkpoints {
     * pagerank convergence aggregate) — that action fills the cache, so the
     * frame costs ONE job instead of cp's materialize-then-use two. The
     * cache boundary still stops Catalyst project-collapse; lineage is kept
-    * (recompute-safe on block loss). Registered for releaseAll like cp.
+    * (recompute-safe on block loss). Registered in the current scope like cp.
     */
-  def cpLazy(df: DataFrame): DataFrame = {
-    val c = df.persist()
-    tracked.synchronized { tracked += new WeakReference(c) }
-    c
+  def cpLazy(df: DataFrame): DataFrame = current.track(df.persist(), pin = true)
+
+  /** The frame memoised under `key` in the current scope; on a miss,
+    * `build` runs and its frame is memoised there.
+    */
+  def memo(key: Any)(build: => DataFrame): DataFrame = current.memo(key)(build)
+
+  /** Runs `body` in a child scope of the current one and releases that
+    * scope, and only it, when `body` exits.
+    */
+  def scoped[T](body: => T): T = {
+    val outer = scopes.get
+    val scope = new Scope
+    scopes.set(scope :: outer)
+    try body
+    finally { scopes.set(outer); scope.release() }
   }
 
   /** Release one checkpointed frame's blocks (underlying RDD + cache entry). */
@@ -103,23 +155,6 @@ object Checkpoints {
     df.unpersist(blocking = true)
   }
 
-  private val releaseHooks = new scala.collection.mutable.ArrayBuffer[() => Unit]
-
-  /** Register a callback run by every releaseAll — for memo tables that
-    * hand out checkpointed frames (Dedup's shared toks/shingles): a memo
-    * serving a frame whose blocks releaseAll just freed would hand out a
-    * dead RDD (localCheckpoint truncates lineage — released means
-    * unrecomputable), so the memo must be dropped in the same call.
-    */
-  def onReleaseAll(f: () => Unit): Unit =
-    releaseHooks.synchronized { releaseHooks += f }
-
-  /** Release every still-reachable tracked checkpoint and clear the list. */
-  def releaseAll(): Unit = {
-    tracked.synchronized {
-      tracked.foreach(ref => Option(ref.get).foreach(release))
-      tracked.clear()
-    }
-    releaseHooks.synchronized { releaseHooks.foreach(f => f()) }
-  }
+  /** Release the calling thread's root scope. */
+  def releaseAll(): Unit = scopes.get.last.release()
 }

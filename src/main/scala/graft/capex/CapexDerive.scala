@@ -101,59 +101,39 @@ object CapexDerive {
         col("o_orderdate").as("RequestDate"))
   }
 
-  /** raw + Zone/Region (broadcast dim join w/ regex whole-word fallback from
-    * UserRemarks — reference process_capex.py:225-289) + every rule flag,
-    * normalized category, exclusion label, keys, priority and tag columns.
-    * Still a single Catalyst plan; nothing is materialized.
+  /** Owner of the shared enriched/kept frames: they outlive any one caller,
+    * so neither a thread's `Checkpoints.releaseAll` nor a `scoped` block
+    * frees them — only `clearCache`.
     */
-  private val enrichedCache =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]
+  private val scope = new graft.Checkpoints.Scope
 
-  // intermediate build-stage checkpoints are capex-PRIVATE (not in the
-  // global graft.Checkpoints registry): clearCache must be able to release
-  // exactly this module's frames without touching live Dedup/Ann frames,
-  // and conversely a between-query Checkpoints.releaseAll must not kill
-  // the shared enriched/kept caches
-  private val intermediates =
-    new scala.collection.mutable.ArrayBuffer[DataFrame]
-  private def cp(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(true)
-    intermediates.synchronized { intermediates += out }
-    out
-  }
-
+  /** localCheckpoint rather than persist: it CUTS THE LINEAGE, so the many
+    * downstream queries (ranked/kept/reinstated/pipeline and every rule
+    * query) analyze a one-node LogicalRDD instead of re-walking the
+    * ~60-expression enriched tree. Measured: the capex pipeline's cost is
+    * ~1s of data compute and tens of seconds of repeated Catalyst
+    * analysis/codegen without the cut. On a multi-executor cluster the
+    * blocks live on executors (MEMORY_AND_DISK); the trade is losing
+    * recompute-on-failure for this cached stage, the standard trade for
+    * iterative pipelines.
+    */
   private def cached(spark: SparkSession, dir: String, key: String)
                     (build: => DataFrame): DataFrame =
-    enrichedCache.getOrElseUpdate((spark, dir, key), {
-      // localCheckpoint rather than persist: it CUTS THE LINEAGE, so the
-      // many downstream queries (ranked/kept/reinstated/pipeline and every
-      // rule query) analyze a one-node LogicalRDD instead of re-walking the
-      // ~60-expression enriched tree. Measured: the capex pipeline's cost is
-      // ~1s of data compute and tens of seconds of repeated Catalyst
-      // analysis/codegen without the cut. On a multi-executor cluster the
-      // blocks live on executors (MEMORY_AND_DISK); the trade is losing
-      // recompute-on-failure for this cached stage, the standard trade for
-      // iterative pipelines.
-      build.localCheckpoint(true)
-    })
+    scope.memo((spark, dir, key))(build.localCheckpoint(true))
 
+  /** raw + Zone/Region (broadcast dim join w/ regex whole-word fallback from
+    * UserRemarks — reference process_capex.py:225-289) + every rule flag,
+    * normalized category, exclusion label, keys, priority and tag columns,
+    * built as a single Catalyst plan and memoised lineage-cut.
+    */
   def enriched(spark: SparkSession, dir: String): DataFrame =
     cached(spark, dir, "enriched")(buildEnriched(spark, dir))
 
-  /** Drop cached frames (bench hygiene between unrelated queries; blocking
-    * so the release doesn't GC-churn the next query's timing). */
-  def clearCache(): Unit = {
-    // localCheckpoint blocks belong to the underlying RDDs, not the
-    // Dataset's CacheManager entry — release them explicitly, including
-    // this module's intermediate build-stage checkpoints (and ONLY this
-    // module's: other operators' live frames are not ours to kill)
-    enrichedCache.values.foreach(graft.Checkpoints.release)
-    enrichedCache.clear()
-    intermediates.synchronized {
-      intermediates.foreach(graft.Checkpoints.release)
-      intermediates.clear()
-    }
-  }
+  /** Release the enriched/kept frames (bench hygiene between unrelated
+    * queries; blocking so the release doesn't GC-churn the next query's
+    * timing).
+    */
+  def clearCache(): Unit = scope.release()
 
   /** The zone/region-mapped frame (ablation layer 1 — see tools.CapexAblate). */
   private[graft] def ablMapped(spark: SparkSession, dir: String): DataFrame = {
@@ -221,7 +201,7 @@ object CapexDerive {
     // re-executes the scan+joins+category chain; (b) the barrier halves the
     // size of each whole-stage-codegen'd stage, whose Janino+JIT cost —
     // not row compute — dominates this build.
-    val withCats = cp(ablWithCats(spark, dir))
+    val withCats = graft.Checkpoints.current.track(ablWithCats(spark, dir).localCheckpoint(true))
 
     // Remark flags (negation-aware): the matcher is a pure function of the
     // text, so run it over the DISTINCT remark dictionary / device-text
@@ -572,11 +552,9 @@ object CapexDerive {
   def ensureBucketedEnriched(spark: SparkSession, dir: String,
                              buckets: Int = 32): String =
     graft.sources.BucketedSink.ensureTable(spark, bucketedTableFor(dir)) {
-      graft.sources.BucketedSink.writeBucketed(
+      // the build's barriers are dead once the table is on disk
+      graft.Checkpoints.scoped(graft.sources.BucketedSink.writeBucketed(
         buildEnriched(spark, dir), bucketedTableFor(dir), "req_key", buckets,
-        sortCols = Seq("req_key"))
-      // the build's intermediates (withCats + dictionary barriers) are dead
-      // once the table is on disk
-      clearCache()
+        sortCols = Seq("req_key")))
     }
 }

@@ -128,23 +128,26 @@ object BpeHier {
   }
 
   /** Trained rule table in rank order: (left, right, minted id, pair
-    * count at selection). Cached per (dir, H, trainDocs) — training is a
-    * driver-side sequential loop over the bounded sample (the same
-    * contract class as the D40 DSIR buckets / PQ codebooks), ~1-2 s at
-    * the default width.
+    * count at selection). Cached per (dir, documents content, H,
+    * trainDocs) — training is a driver-side sequential loop over the
+    * bounded sample (the same contract class as the D40 DSIR buckets / PQ
+    * codebooks), ~1-2 s at the default width; the content fingerprint
+    * retrains a corpus rewritten in place.
     */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), Array[(Int, Int, Int, Long)]]()
+  private val cache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, Int, Int), Array[(Int, Int, Int, Long)]]()
 
-  def trainedMerges(spark: SparkSession, dir: String): Array[(Int, Int, Int, Long)] =
-    cache.computeIfAbsent((dir, HierMerges, TrainDocs), { key =>
-      val (_, h, td) = key
+  def trainedMerges(spark: SparkSession, dir: String): Array[(Int, Int, Int, Long)] = {
+    val fp = graft.sources.BucketedSink.contentFingerprint(Seq(s"$dir/documents.parquet"))
+    cache.computeIfAbsent((dir, fp, HierMerges, TrainDocs), { key =>
+      val (_, _, h, td) = key
       val sample = Tables.documents(spark, dir)
         .orderBy(col("doc_id").asc).limit(td)
         .select(TextOps.normText(col("text")))
         .collect().map(r => codesOf(r.getString(0)))
       train(sample, h)
     })
+  }
 
   private[graft] def train(sample: Array[Array[Int]], h: Int): Array[(Int, Int, Int, Long)] = {
     var state = sample

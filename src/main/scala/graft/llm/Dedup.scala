@@ -18,27 +18,14 @@ object Dedup {
   val NumHashes = 16
   val Bands = 4 // 4 rows per band
 
-  /** Per-(session, dir, content) memo for the shared toks/shingles
-    * checkpoints (r14): a COMPOSED query (corpus_clean = components +
-    * decontaminate + …) re-built these eager barriers once per consumer —
-    * three tokenize jobs and two shingle jobs per corpus_pipeline run,
-    * each a full documents scan plus an inter-job driver gap (JobProfile:
-    * 61 jobs, wall 2.9 s vs 1.8 s of job time). The frames are pure
-    * functions of the documents file content (fingerprint in the key), and
-    * the memo is DROPPED by every Checkpoints.releaseAll (hook below) —
-    * Bench/Verify release between queries, so each catalog row still
-    * computes its own barriers from the parquet scan; only reuse WITHIN
-    * one composed query changes. Never serves a released frame: release
-    * and memo-drop happen in the same call.
+  /** Memo key for the shared toks/shingles barriers: a composed query
+    * (corpus_clean = components + decontaminate + …) would otherwise
+    * rebuild them once per consumer, each a full documents scan plus a
+    * materialize job. The frames are pure functions of the documents file
+    * content, hence the fingerprint.
     */
-  private val toksMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]
-  private val shinglesMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]
-  graft.Checkpoints.onReleaseAll(() => { toksMemo.clear(); shinglesMemo.clear() })
-
-  private def memoKey(spark: SparkSession, dir: String): (SparkSession, String, String) =
-    (spark, dir,
+  private def memoKey(spark: SparkSession, dir: String, frame: String) =
+    (frame, spark, dir,
       graft.sources.BucketedSink.contentFingerprint(Seq(s"$dir/documents.parquet")))
 
   /** Tokenized docs, spread across all cores when the scan arrives narrow:
@@ -47,7 +34,7 @@ object Dedup {
     * corpus already arrives as many splits and the spread is skipped.
     */
   private[llm] def docsWithToks(spark: SparkSession, dir: String): DataFrame =
-    toksMemo.getOrElseUpdate(memoKey(spark, dir),
+    graft.Checkpoints.memo(memoKey(spark, dir, "toks"))(
       Tables.spreadIfNarrow(Tables.documents(spark, dir), "doc_id")
         .select(col("doc_id"), TextOps.toks(col("text")).as("toks"))
         // Load-bearing barrier: Catalyst's project collapsing would inline the
@@ -59,7 +46,7 @@ object Dedup {
 
   /** Docs + materialized word-3-gram shingles (same barrier rationale). */
   private def docsWithShingles(spark: SparkSession, dir: String): DataFrame =
-    shinglesMemo.getOrElseUpdate(memoKey(spark, dir),
+    graft.Checkpoints.memo(memoKey(spark, dir, "shingles"))(
       docsWithToks(spark, dir)
         .withColumn("shingles", TextOps.shingles(col("toks")))
         .transform(graft.Checkpoints.cp))

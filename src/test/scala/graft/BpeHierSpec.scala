@@ -75,6 +75,24 @@ class BpeHierSpec extends SparkSpecBase {
     assert(cached.sameElements(fresh))
   }
 
+  test("documents rewritten in place retrain the merges") {
+    val dir = tempCopyOf(sfDir)
+    try {
+      val before = BpeHier.trainedMerges(spark, dir)
+      val docs = s"$dir/documents.parquet"
+      java.nio.file.Files.delete(java.nio.file.Paths.get(docs))
+      Tables.documents(spark, sfDir).withColumn("text", reverse(col("text")))
+        .coalesce(1).write.parquet(docs)
+      val sample = Tables.documents(spark, dir)
+        .orderBy(col("doc_id").asc).limit(BpeHier.TrainDocs)
+        .select(graft.llm.TextOps.normText(col("text")))
+        .collect().map(r => BpeHier.codesOf(r.getString(0)))
+      val fresh = BpeHier.train(sample, BpeHier.HierMerges)
+      assert(!fresh.sameElements(before), "rewrite did not change the merges")
+      assert(BpeHier.trainedMerges(spark, dir).sameElements(fresh))
+    } finally deleteTree(dir)
+  }
+
   test("byte level: non-ASCII text encodes to real UTF-8 byte counts and round-trips") {
     val docs = Array("深層学習の訓練データ", "привет мир", "hello 😀 world",
       "ไทยผสม ascii", "مرحبا بالعالم")

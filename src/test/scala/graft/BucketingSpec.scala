@@ -20,12 +20,7 @@ class BucketingSpec extends SparkSpecBase {
     if (spark.catalog.tableExists("ev_bucketed")) return
     val loc = java.nio.file.Paths.get(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), "ev_bucketed")
-    if (java.nio.file.Files.exists(loc)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(loc)
-      try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
-      finally walk.close()
-    }
+    if (java.nio.file.Files.exists(loc)) deleteTree(loc.toString)
     BucketedSink.writeBucketed(Tables.events(spark, sfDir),
       "ev_bucketed", "user_id", 4, Seq("user_id", "ts"))
   }
@@ -97,6 +92,22 @@ class BucketingSpec extends SparkSpecBase {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       graft.capex.CapexDerive.clearCache()
+    }
+  }
+
+  test("building the bucketed fact leaves a held enriched frame readable") {
+    // a fresh copy has no bucketed table yet, so pipelineBucketed builds it
+    val dir = tempCopyOf(sfDir)
+    try {
+      val held = graft.capex.CapexDerive.enriched(spark, dir)
+      val n = held.count()
+      graft.capex.CapexDerive.pipelineBucketed(spark, dir).count()
+      assert(held.count() == n)
+    } finally {
+      graft.capex.CapexDerive.clearCache()
+      spark.sql("DROP TABLE IF EXISTS " +
+        graft.capex.CapexDerive.ensureBucketedEnriched(spark, dir))
+      deleteTree(dir)
     }
   }
 }

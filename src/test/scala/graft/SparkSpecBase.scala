@@ -10,6 +10,22 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A fresh, writable copy of a flat testdata directory. */
+  def tempCopyOf(dir: String): String = {
+    import java.nio.file.Files
+    val out = Files.createTempDirectory("graft-sf-copy")
+    new java.io.File(dir).listFiles.foreach(f =>
+      Files.copy(f.toPath, out.resolve(f.getName)))
+    out.toString
+  }
+
+  def deleteTree(path: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+    try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
+    finally walk.close()
+  }
 }
 
 object SparkSpecBase {
