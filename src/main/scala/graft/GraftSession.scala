@@ -4,9 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** The library's user-facing session factory: one place for the
   * engine-recommended configuration that Bench/Verify/specs previously
-  * each duplicated, plus the `GraftExtensions` registration that makes
-  * the native expressions (`graft_fdot`, the bloom bridge) available to
-  * SQL users.
+  * each duplicated, plus the `GraftExtensions` registration that gives
+  * SQL users the native functions under their `graft_*` names (the dot
+  * kernels, the tokenizers and the bloom bridge; Scala callers build the
+  * same expressions through `graft.functions` in any session).
   *
   * Measured-systemics defaults (SURVEY §5):
   *  - shuffle partitions = cores for local runs (a cluster deployment

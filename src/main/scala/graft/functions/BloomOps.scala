@@ -1,16 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftPlanBridge
 
 /** Column-API bridge to Spark's own bloom-filter expressions
   * (`BloomFilterAggregate` / `BloomFilterMightContain` — the pair Catalyst's
   * runtime row-level filtering injects around big joins, not exposed as
-  * public functions). Registered under graft names so semi-join pre-filters
-  * can be stated declaratively:
+  * public functions). The wrappers build them directly, so semi-join
+  * pre-filters can be stated declaratively (SQL users get them as
+  * `graft_bloom_agg` / `graft_bloom_contains` through `GraftExtensions`):
   *
   *   - `bloomAgg(xxhash64(key), items, bits)` aggregates a corpus of longs
   *     into ONE binary sketch (partially aggregable — each task builds a
@@ -25,42 +25,16 @@ import org.apache.spark.sql.functions.call_function
   * surviving candidates exactly.
   */
 object BloomOps {
-  val AggName = "graft_bloom_agg"
-  val ContainsName = "graft_bloom_contains"
-
-  val AggEntry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(AggName),
-    new ExpressionInfo(classOf[BloomFilterAggregate].getName, AggName),
-    (args: Seq[Expression]) => new BloomFilterAggregate(args(0), args(1), args(2)))
-
-  val ContainsEntry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(ContainsName),
-    new ExpressionInfo(classOf[BloomFilterMightContain].getName, ContainsName),
-    (args: Seq[Expression]) => BloomFilterMightContain(args(0), args(1)))
-
-  /** Idempotent per-session registration (for sessions built without the
-    * extensions hook).
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    Seq(AggEntry, ContainsEntry).foreach { e =>
-      if (!reg.functionExists(e._1)) reg.registerFunction(e._1, e._2, e._3)
-    }
-  }
-
   /** Aggregate a LONG column (pre-hash with xxhash64) into one bloom sketch
     * sized for `expectedItems` at ~`numBits` bits.
     */
-  def bloomAgg(hashed: Column, expectedItems: Long, numBits: Long): Column = {
-    ensureRegistered(SparkSession.active)
-    call_function(AggName, hashed,
-      org.apache.spark.sql.functions.lit(expectedItems),
-      org.apache.spark.sql.functions.lit(numBits))
-  }
+  def bloomAgg(hashed: Column, expectedItems: Long, numBits: Long): Column =
+    GraftPlanBridge.column(
+      new BloomFilterAggregate(GraftPlanBridge.expression(hashed),
+        Literal(expectedItems), Literal(numBits)).toAggregateExpression())
 
   /** Probe: true if `hashed` may be in the sketch (never false for members). */
-  def bloomContains(bf: Column, hashed: Column): Column = {
-    ensureRegistered(SparkSession.active)
-    call_function(ContainsName, bf, hashed)
-  }
+  def bloomContains(bf: Column, hashed: Column): Column =
+    GraftPlanBridge.column(BloomFilterMightContain(
+      GraftPlanBridge.expression(bf), GraftPlanBridge.expression(hashed)))
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.classic.GraftPlanBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -29,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * (Character.isLetter ≡ \p{L}, Character.getType ∈ {Nd,Nl,No} ≡ \p{N},
   * UnicodeScript ∈ {HAN,HIRAGANA,KATAKANA,HANGUL} ≡ the CJK script
   * classes). Deterministic, null-safe, CSE-hoistable, and inside
-  * whole-stage codegen like FloatVecDot.
+  * whole-stage codegen like VecDot.
   *
   * EXACTNESS: each kernel's output is defined to equal its regex form's
   * (`TextOps.TokRe` / `BpeTokRe` / `AlnumWs`-complement count) on EVERY
@@ -219,44 +218,10 @@ case class GraftPunctCount(child: Expression) extends TextLangUnary {
 }
 
 object TextTokens {
-  val TokensName = "graft_tokens"
-  val BpeSegsName = "graft_bpe_segs"
-  val PunctCountName = "graft_punct_count"
-
-  val TokensEntry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(TokensName),
-    new ExpressionInfo(classOf[GraftTokens].getName, TokensName),
-    (args: Seq[Expression]) => GraftTokens(args(0)))
-  val BpeSegsEntry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(BpeSegsName),
-    new ExpressionInfo(classOf[GraftBpeSegs].getName, BpeSegsName),
-    (args: Seq[Expression]) => GraftBpeSegs(args(0)))
-  val PunctCountEntry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(PunctCountName),
-    new ExpressionInfo(classOf[GraftPunctCount].getName, PunctCountName),
-    (args: Seq[Expression]) => GraftPunctCount(args(0)))
-
-  private def register(spark: SparkSession): Unit = {
-    Seq(TokensEntry, BpeSegsEntry, PunctCountEntry).foreach { e =>
-      spark.sessionState.functionRegistry.registerFunction(e._1, e._2, e._3)
-    }
-  }
-
-  /** Idempotent per-session registration (the VectorOps convention). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-          .functionExists(FunctionIdentifier(TokensName))) register(spark)
-
-  def tokens(lowered: Column): Column = {
-    ensureRegistered(SparkSession.active)
-    call_function(TokensName, lowered)
-  }
-  def bpeSegs(lowered: Column): Column = {
-    ensureRegistered(SparkSession.active)
-    call_function(BpeSegsName, lowered)
-  }
-  def punctCount(lowered: Column): Column = {
-    ensureRegistered(SparkSession.active)
-    call_function(PunctCountName, lowered)
-  }
+  def tokens(lowered: Column): Column =
+    GraftPlanBridge.column(GraftTokens(GraftPlanBridge.expression(lowered)))
+  def bpeSegs(lowered: Column): Column =
+    GraftPlanBridge.column(GraftBpeSegs(GraftPlanBridge.expression(lowered)))
+  def punctCount(lowered: Column): Column =
+    GraftPlanBridge.column(GraftPunctCount(GraftPlanBridge.expression(lowered)))
 }

@@ -1,39 +1,66 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.classic.GraftPlanBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
-/** Native Catalyst expression for embedding math (SURVEY.md §2.D5-D7).
+/** Native Catalyst dot product over two array columns of the same element
+  * type (SURVEY.md §2.D5-D7, D34; r13 logreg):
+  *
+  *  - float: the embedding-similarity kernel, a left-to-right double fold
+  *    (`float_vec_dot`, DoubleType);
+  *  - int: the quantized (int8-code) ANN scoring kernel, an exact long
+  *    accumulator, so the result is bit-identical on every engine and the
+  *    quantized ranking is hash-checkable end to end (`int_vec_dot`,
+  *    LongType);
+  *  - double: the logreg z = w·x kernel, a left-to-right double fold
+  *    (`double_vec_dot`, DoubleType).
   *
   * The composable route (`zip_with` + `aggregate`) allocates a zipped
-  * ArrayData per row and evaluates a lambda per element; at 100 TB of
-  * embeddings the dot product is the innermost loop of every similarity
-  * scan, so it deserves a real codegen'd expression: one fused loop over
-  * the two float arrays, no per-element boxing, no intermediate array.
-  * Semantics are IDENTICAL to the HOF formulation (left-to-right double
-  * fold), so the DuckDB oracles verify it bit-for-bit.
+  * ArrayData per row and evaluates a lambda per element; the dot product is
+  * the innermost loop of every similarity scan, so it gets one fused
+  * codegen'd loop, no per-element boxing, no intermediate array. The
+  * explicit 129-term `element_at` chain the double kernel replaced was a
+  * ~900-node expression tree whose analysis the DRIVER re-paid 1-2 s per GD
+  * step; one node plans in microseconds. Fold order and null semantics are
+  * IDENTICAL to the HOF and chain formulations, so the DuckDB oracles verify
+  * every kernel bit-for-bit.
   */
-case class FloatVecDot(left: Expression, right: Expression)
+case class VecDot(left: Expression, right: Expression)
   extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<float> arguments, " +
-        s"got ${left.dataType.catalogString} and ${right.dataType.catalogString}")
+  @transient private lazy val elementType: Option[DataType] =
+    if (!left.resolved) None
+    else left.dataType match {
+      case ArrayType(t, _) => Some(t)
+      case _ => None
+    }
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(t, _), ArrayType(u, _))
+          if t == u && (t == FloatType || t == IntegerType || t == DoubleType) =>
+        TypeCheckResult.TypeCheckSuccess
+      case _ => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires two array<float>, array<int> or array<double> " +
+          s"arguments of one element type, got ${left.dataType.catalogString} " +
+          s"and ${right.dataType.catalogString}")
+    }
+  override def dataType: DataType =
+    if (elementType.contains(IntegerType)) LongType else DoubleType
+  override def prettyName: String = elementType match {
+    case Some(FloatType) => "float_vec_dot"
+    case Some(IntegerType) => "int_vec_dot"
+    case Some(DoubleType) => "double_vec_dot"
+    case _ => "vec_dot"
   }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "float_vec_dot"
   // a null ELEMENT or length mismatch yields NULL even when both array
   // inputs are non-null, so this must not inherit input nullability —
   // with nullable=false Spark's codegen would constant-fold isNull away
@@ -45,18 +72,37 @@ case class FloatVecDot(left: Expression, right: Expression)
   // mismatch or any null element yields NULL, never a silently truncated
   // or zero-filled product.
   override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val y = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
     val n = x.numElements()
     if (n != y.numElements()) return null
-    var s = 0.0
     var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
+    elementType match {
+      case Some(IntegerType) =>
+        var s = 0L
+        while (i < n) {
+          if (x.isNullAt(i) || y.isNullAt(i)) return null
+          s += x.getInt(i).toLong * y.getInt(i).toLong
+          i += 1
+        }
+        s
+      case Some(FloatType) =>
+        var s = 0.0
+        while (i < n) {
+          if (x.isNullAt(i) || y.isNullAt(i)) return null
+          s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
+          i += 1
+        }
+        s
+      case _ =>
+        var s = 0.0
+        while (i < n) {
+          if (x.isNullAt(i) || y.isNullAt(i)) return null
+          s += x.getDouble(i) * y.getDouble(i)
+          i += 1
+        }
+        s
     }
-    s
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -64,146 +110,23 @@ case class FloatVecDot(left: Expression, right: Expression)
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val s = ctx.freshName("s")
+      val (acc, term) = elementType match {
+        case Some(IntegerType) =>
+          (s"long $s = 0L;", s"(long) $x.getInt($i) * (long) $y.getInt($i)")
+        case Some(FloatType) =>
+          (s"double $s = 0.0;", s"(double) $x.getFloat($i) * (double) $y.getFloat($i)")
+        case _ =>
+          (s"double $s = 0.0;", s"$x.getDouble($i) * $y.getDouble($i)")
+      }
       s"""
          |int $n = $x.numElements();
          |if ($n != $y.numElements()) {
          |  ${ev.isNull} = true;
          |} else {
-         |  double $s = 0.0;
+         |  $acc
          |  for (int $i = 0; $i < $n; $i++) {
          |    if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $s += (double) $x.getFloat($i) * (double) $y.getFloat($i);
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $s; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Exact integer dot product over two int-array columns — the scoring
-  * kernel of the quantized (int8-code) ANN serving path (SURVEY.md §2.D34):
-  * one fused codegen'd loop, a long accumulator, no per-element boxing.
-  * Integer arithmetic means the result is bit-identical on every engine —
-  * the quantized ranking is hash-checkable end to end, unlike float
-  * scoring. Null semantics mirror FloatVecDot (length mismatch or any
-  * null element → NULL).
-  */
-case class IntVecDot(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(IntegerType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<int> arguments, " +
-        s"got ${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "int_vec_dot"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val y = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      s += x.getInt(i).toLong * y.getInt(i).toLong
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $s = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $s += (long) $x.getInt($i) * (long) $y.getInt($i);
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $s; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Left-to-right double dot product over two double-array columns — the
-  * logreg z = w·x kernel (r13). The explicit 129-term `element_at` chain
-  * this replaces was a ~900-node expression tree: evaluation was fine,
-  * but the DRIVER re-paid 1-2 s of analysis/optimization per GD step
-  * (measured on quality_logreg_text, 3 steps = ~4.5 s of inter-job gaps).
-  * One expression node plans in microseconds and fuses into codegen.
-  * Fold order and null semantics are identical to the chain, so every
-  * logreg oracle stays bit-for-bit.
-  */
-case class DoubleVecDot(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two array<double> arguments, " +
-        s"got ${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "double_vec_dot"
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val y = b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      s += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = $x.numElements();
-         |if ($n != $y.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i) || $y.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    $s += $x.getDouble($i) * $y.getDouble($i);
+         |    $s += $term;
          |  }
          |  if (!${ev.isNull}) { ${ev.value} = $s; }
          |}
@@ -216,81 +139,36 @@ case class DoubleVecDot(left: Expression, right: Expression)
 }
 
 object VectorOps {
-  val DotName = "graft_fdot"
-  val IntDotName = "graft_idot"
-  val DDotName = "graft_ddot"
-
-  /** The single registration entry shared by the extensions hook and the
-    * per-session registry path — one source of truth for identifier, info,
-    * and builder (and the thing the spec exercises directly).
+  /** Dot product of two array columns of one element type: a left-to-right
+    * double fold for float and double arrays, an exact long for int arrays.
     */
-  val DotEntry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(DotName),
-    new ExpressionInfo(classOf[FloatVecDot].getName, DotName),
-    (args: Seq[Expression]) => FloatVecDot(args(0), args(1)))
-
-  val IntDotEntry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(IntDotName),
-    new ExpressionInfo(classOf[IntVecDot].getName, IntDotName),
-    (args: Seq[Expression]) => IntVecDot(args(0), args(1)))
-
-  val DDotEntry: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier(DDotName),
-    new ExpressionInfo(classOf[DoubleVecDot].getName, DDotName),
-    (args: Seq[Expression]) => DoubleVecDot(args(0), args(1)))
-
-  private def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      DotEntry._1, DotEntry._2, DotEntry._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      IntDotEntry._1, IntDotEntry._2, IntDotEntry._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      DDotEntry._1, DDotEntry._2, DDotEntry._3)
-  }
-
-  /** Idempotent per-session registration (for sessions built without the
-    * extensions hook).
-    */
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.sessionState.functionRegistry
-          .functionExists(FunctionIdentifier(DDotName))) register(spark)
-
-  /** Left-to-right double dot product of two float-array columns.
-    * Registers in the active session on first use (sessions created through
-    * the GraftExtensions hook already have it).
-    */
-  def fdot(a: Column, b: Column): Column = {
-    ensureRegistered(SparkSession.active)
-    call_function(DotName, a, b)
-  }
-
-  /** Exact long dot product of two int-array columns (quantized codes). */
-  def idot(a: Column, b: Column): Column = {
-    ensureRegistered(SparkSession.active)
-    call_function(IntDotName, a, b)
-  }
-
-  /** Left-to-right double dot product of two double-array columns. */
-  def ddot(a: Column, b: Column): Column = {
-    ensureRegistered(SparkSession.active)
-    call_function(DDotName, a, b)
-  }
+  def dot(a: Column, b: Column): Column =
+    GraftPlanBridge.column(
+      VecDot(GraftPlanBridge.expression(a), GraftPlanBridge.expression(b)))
 }
 
 /** `SparkSessionExtensions` hook: `.withExtensions(new GraftExtensions)` or
   * spark.sql.extensions=graft.functions.GraftExtensions registers the
-  * engine's native functions in every new session.
+  * engine's native functions under their SQL names in every new session.
+  * Scala callers never need it: the Column wrappers build the expressions
+  * directly.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(VectorOps.DotEntry)
-    ext.injectFunction(VectorOps.IntDotEntry)
-    ext.injectFunction(VectorOps.DDotEntry)
-    ext.injectFunction(TextTokens.TokensEntry)
-    ext.injectFunction(TextTokens.BpeSegsEntry)
-    ext.injectFunction(TextTokens.PunctCountEntry)
-    ext.injectFunction(BloomOps.AggEntry)
-    ext.injectFunction(BloomOps.ContainsEntry)
-    ext.injectPlannerStrategy(_ => graft.plans.FenceStrategy)
-  }
+  private def fn(name: String, cls: Class[_])(build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  private val functions = Seq(
+    fn("graft_fdot", classOf[VecDot])(a => VecDot(a(0), a(1))),
+    fn("graft_idot", classOf[VecDot])(a => VecDot(a(0), a(1))),
+    fn("graft_ddot", classOf[VecDot])(a => VecDot(a(0), a(1))),
+    fn("graft_tokens", classOf[GraftTokens])(a => GraftTokens(a(0))),
+    fn("graft_bpe_segs", classOf[GraftBpeSegs])(a => GraftBpeSegs(a(0))),
+    fn("graft_punct_count", classOf[GraftPunctCount])(a => GraftPunctCount(a(0))),
+    fn("graft_bloom_agg", classOf[BloomFilterAggregate])(a =>
+      new BloomFilterAggregate(a(0), a(1), a(2))),
+    fn("graft_bloom_contains", classOf[BloomFilterMightContain])(a =>
+      BloomFilterMightContain(a(0), a(1))))
+
+  override def apply(ext: SparkSessionExtensions): Unit =
+    functions.foreach(ext.injectFunction)
 }

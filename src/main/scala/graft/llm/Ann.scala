@@ -17,12 +17,12 @@ object Ann {
   val Dim = 64
 
   /** Left-to-right double dot product of two float-array columns — the
-    * native codegen'd expression (graft.functions.FloatVecDot); the HOF
+    * native codegen'd expression (graft.functions.VecDot); the HOF
     * route (zip_with + aggregate) computes the identical fold but allocates
     * a zipped array per row.
     */
   private def dot(a: Column, b: Column): Column =
-    graft.functions.VectorOps.fdot(a, b)
+    graft.functions.VectorOps.dot(a, b)
   private def dotSql(a: String, b: String): String =
     s"list_sum(list_transform(range(1, $Dim + 1), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 
@@ -540,7 +540,7 @@ object Ann {
   }
 
   /** The same cosine-to-centroid fold with literal centroid vectors (the
-    * adcBaked convention): fdot over a typedLit float array IS the batch
+    * adcBaked convention): the dot over a typedLit float array IS the batch
     * kernel, so the resulting doubles are bit-identical to rankedAgainstCents
     * over the stored `_cents` rows. Used by the streaming PQ probe to pick
     * each query's NProbe cells statelessly (no window, no state).
@@ -1229,7 +1229,7 @@ object Ann {
 
   /** D34b: quantized ANN serving — brute-force top-k over the int8 codes
     * from embed_quantize, scored ENTIRELY in exact integers: the native
-    * codegen'd IntVecDot (`graft_idot`) over the code arrays, times the
+    * codegen'd VecDot (`int_vec_dot`) over the code arrays, times the
     * candidate's scale in integer nano-units (the query's own scale is a
     * constant within its ranking, so dropping it preserves order). This
     * is the 4×-compressed serving path D34 exists for: code arrays are a
@@ -1251,7 +1251,7 @@ object Ann {
       .partitionBy(col("q_id")).orderBy(col("score").desc, col("nb_id").asc)
     broadcast(q).crossJoin(c).filter(col("q_id") =!= col("nb_id"))
       .withColumn("score",
-        graft.functions.VectorOps.idot(col("qv"), col("cv")) * col("scale_e9"))
+        graft.functions.VectorOps.dot(col("qv"), col("cv")) * col("scale_e9"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select(col("q_id"), col("nb_id"), col("rank"), col("score"))

@@ -74,7 +74,7 @@ object Classify {
 
   /** z = w · x, left-to-right over the nFeat terms (w arrives as a 1-row
     * broadcast array column) — the dotSql fold order. r13: the native
-    * codegen'd kernel (graft_ddot, VectorOps) replaces the explicit
+    * codegen'd kernel (VectorOps.dot over double arrays) replaces the explicit
     * element_at chain — at nFeat = 129 that chain was a ~900-node
     * expression tree and the driver re-paid 1-2 s of plan optimization
     * per GD step; the kernel is one node with the identical fold order,
@@ -87,7 +87,7 @@ object Classify {
     * exact-length invariant lives in the builders above.)
     */
   private def zOf(w: Column, x: Column): Column =
-    graft.functions.VectorOps.ddot(w, x)
+    graft.functions.VectorOps.dot(w, x)
 
   /** Rational sigmoid — correctly-rounded IEEE ops only (see scaladoc). */
   private def sig(z: Column): Column =

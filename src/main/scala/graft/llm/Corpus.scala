@@ -22,15 +22,6 @@ object Corpus {
 
   val QualityFloor = 0.45
 
-  /** The reported quality score at 4 decimals, rounded as the DuckDB
-    * oracle's `round(q, 4)` does: half-up on the scaled double q·10^4.
-    * Spark's `round(q, 4)` instead rounds q's shortest decimal string, so
-    * the two disagree at ties the scaled double misses (0.61235·10^4 =
-    * 6123.4999…: 0.6123 here and in DuckDB, 0.6124 under `round(q, 4)`).
-    */
-  private[graft] def roundQuality(q: Column): Column =
-    round(q * 10000) / 10000
-
   def corpusClean(spark: SparkSession, dir: String): DataFrame =
     corpusCleanWith(spark, dir, Dedup.dedupComponents(spark, dir))
 
@@ -53,7 +44,7 @@ object Corpus {
       .join(q, Seq("doc_id"))
       .filter(col("quality_score") >= QualityFloor)
       .select(col("doc_id"), col("lang"),
-        roundQuality(col("quality_score")).as("quality_score"))
+        graft.functions.roundScaled(col("quality_score"), 4).as("quality_score"))
   }
 
   val corpusCleanSql: String =
@@ -382,7 +373,7 @@ object Corpus {
     val packed = Packing.packOfCounts(counts)
     kept.join(packed, Seq("doc_id"))
       .select(col("doc_id"), col("lang"),
-        roundQuality(col("quality_score")).as("quality_score"),
+        graft.functions.roundScaled(col("quality_score"), 4).as("quality_score"),
         col("n_tokens"), col("shard"), col("seq_id"), col("seq_offset"))
   }
 

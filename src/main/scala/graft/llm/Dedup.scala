@@ -249,7 +249,7 @@ object Dedup {
         col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")))
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_a"), col("doc_b"), col("est_sim"),
-        round(col("jaccard"), 4).as("jaccard"))
+        graft.functions.roundScaled(col("jaccard"), 4).as("jaccard"))
   }
   def dedupMinhashVerifiedSql: String =
     s"""WITH cand AS ($dedupMinhashSql),

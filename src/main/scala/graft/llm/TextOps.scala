@@ -92,7 +92,7 @@ object TextOps {
   // oracle keeps the single Unicode spelling: RE2's DFA pays no property
   // penalty, and the two sides agree by the same property.
   // The Spark side evaluates the token LANGUAGE through native codegen'd
-  // kernels (functions/TextTokens.scala — the FloatVecDot convention):
+  // kernels (functions/TextTokens.scala — the VecDot convention):
   // java.util.regex pays per-char Unicode property lookups (13-17× the
   // historical ASCII regex, measured), a CaseWhen dispatch around two
   // extractions breaks common-subexpression elimination (conditional
@@ -960,7 +960,7 @@ object TextOps {
       .collect().map(_.getString(0))
     val encoded = merges.zipWithIndex.foldLeft(lmNorm(col("text"))) {
       case (s, (p, i)) =>
-        call_function("replace", s, lit(p), lit((65 + i).toChar.toString))
+        replace(s, lit(p), lit((65 + i).toChar.toString))
     }
     val ids = transform(
       filter(split(encoded, ""), c => length(c) === 1),

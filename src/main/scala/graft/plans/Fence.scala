@@ -11,7 +11,8 @@ import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** Zero-cost projection fence — the engine's custom Catalyst operator
-  * (LogicalPlan + SparkStrategy, registered through `GraftExtensions`).
+  * (LogicalPlan + SparkStrategy, registered by `Fence.apply` on the
+  * session of the frame it fences).
   *
   * Why it exists: Catalyst's CollapseProject merges adjacent projections by
   * SUBSTITUTING the upstream expression into every downstream reference.
@@ -74,10 +75,8 @@ object Fence {
   def apply(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // idempotent per-session registration (sessions built through the
-    // GraftExtensions hook already carry the strategy; the public
-    // experimental hook covers plain sessions — same pattern as
-    // VectorOps.ensureRegistered)
+    // idempotent per-session registration: this call is the only source
+    // of a FenceNode, so the session that plans one always has the strategy
     if (!spark.experimental.extraStrategies.contains(FenceStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ FenceStrategy

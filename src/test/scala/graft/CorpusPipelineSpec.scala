@@ -39,15 +39,43 @@ class CorpusPipelineSpec extends SparkSpecBase {
     // the half (0.61235·10^4 = 6123.4999…): DuckDB's round(q, 4) keeps
     // the lower value, Spark's round(q, 4) would take the upper one; the
     // last three are ties the scaled double holds exactly and round up
+    // (0.78375 is dedup_minhash_verified's jaccard 627/800)
     val cases = Seq(0.61235 -> 0.6123, 0.00145 -> 0.0014, 0.01045 -> 0.0104,
-      0.02005 -> 0.02, 0.12345 -> 0.1235, 0.99995 -> 1.0, 0.00005 -> 0.0001)
+      0.02005 -> 0.02, 0.78375 -> 0.7837,
+      0.12345 -> 0.1235, 0.99995 -> 1.0, 0.00005 -> 0.0001)
     val got = cases.map(_._1).toDF("q")
-      .select(col("q"), Corpus.roundQuality(col("q")), round(col("q"), 4))
+      .select(col("q"), graft.functions.roundScaled(col("q"), 4), round(col("q"), 4))
       .collect().map(r => r.getDouble(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     for ((q, want) <- cases)
       assert(got(q)._1 == want, s"round($q) = ${got(q)._1}, oracle $want")
-    assert(cases.count { case (q, want) => got(q)._2 != want } == 4,
-      "sanity: Spark's round(q, 4) must get exactly the four low ties wrong")
+    assert(cases.count { case (q, want) => got(q)._2 != want } == 5,
+      "sanity: Spark's round(q, 4) must get exactly the five low ties wrong")
+  }
+
+  test("dedup_minhash_verified rounds jaccard like the DuckDB oracle at a half-way tie") {
+    import spark.implicits._
+    // two docs sharing a 629-token run (627 shingles) with 86 and 87
+    // private tail tokens: 627 shared of 800 distinct 3-token shingles,
+    // J = 0.78375, whose scaled double is 7837.4999… — DuckDB's
+    // round(J, 4) is 0.7837, Spark's round(J, 4) 0.7838. A 4-row band
+    // matches with probability J^4 ≈ 0.37; these token spellings make the
+    // pair share a band (est_sim 0.9375), so it is a minhash candidate
+    val common = (0 until 629).map(i => s"d$i")
+    val docs = Seq(1L -> (common ++ (0 until 86).map(i => s"a$i")),
+      2L -> (common ++ (0 until 87).map(i => s"b$i")))
+      .map { case (id, toks) => val t = toks.mkString(" ")
+        (id, t, "en", "web", t.length.toLong) }
+    val dir = java.nio.file.Files.createTempDirectory("graft-jaccard-tie").toString
+    try {
+      docs.toDF("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(1).write.parquet(s"$dir/documents.parquet")
+      val got = Dedup.dedupMinhashVerified(spark, dir).collect()
+        .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"), r.getAs[Double]("jaccard")))
+      assert(got.toSeq === Seq((1L, 2L, 0.7837)))
+    } finally {
+      Checkpoints.releaseAll()
+      deleteTree(dir)
+    }
   }
 
   test("indexed twin is row-identical to the recompute flagship") {

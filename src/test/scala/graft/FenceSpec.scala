@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import graft.plans.{Fence, FenceExec, FenceNode}
+import org.apache.spark.sql.SparkSession
+import graft.functions.GraftExtensions
+import graft.plans.{Fence, FenceExec, FenceNode, FenceStrategy}
 
 /** The custom Catalyst fence operator: semantics (identity), the barrier
   * property (expensive upstream expressions stay single-instance in the
@@ -84,5 +86,23 @@ class FenceSpec extends SparkSpecBase {
     val plan = optimized(graft.llm.Packing.chunkDocuments(spark, sfDir))
     assert(plan.contains("FenceNode"))
     assert("regexp_extract_all".r.findAllIn(plan).size === 1, plan.take(800))
+  }
+
+  test("a GraftExtensions session plans fences with exactly one FenceStrategy") {
+    // the shared session made the SparkContext the new session builds on;
+    // restore it as active/default afterwards
+    spark.range(1).count()
+    val s2 = SparkSession.builder().withExtensions(new GraftExtensions).create()
+    try {
+      val q = Fence(Fence(s2.range(10).toDF("id")).filter(col("id") > 3))
+      val planner = s2.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.planner
+      assert(planner.strategies.count(_ == FenceStrategy) === 1)
+      assert(q.queryExecution.executedPlan.exists(_.isInstanceOf[FenceExec]))
+      assert(q.count() === 6)
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
   }
 }

@@ -984,7 +984,7 @@ class LlmOpsSpec extends SparkSpecBase {
     val joined = Tables.embeddings(spark, sfDir).join(n, "vec_id")
       .select(col("vec_id"), col("l2_norm"),
         // same left-to-right fold restated via the HOF route — must agree
-        // with the native FloatVecDot-backed norm to the last bit
+        // with the native VecDot-backed norm to the last bit
         abs(sqrt(aggregate(col("embedding"), lit(0.0),
           (acc, x) => acc + x.cast("double") * x.cast("double"))) - col("l2_norm"))
           .as("l2_err"),

@@ -1,47 +1,47 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorOps
+import graft.functions.{GraftExtensions, VecDot, VectorOps}
 
-/** FloatVecDot: the native codegen'd dot product must be bit-identical to
-  * the composable HOF formulation it replaces (left-to-right double fold).
+/** VecDot: the native codegen'd dot product must be bit-identical to the
+  * composable HOF formulation it replaces (a left-to-right fold in the
+  * accumulator type), for each element type it accepts.
   */
 class VectorOpsSpec extends SparkSpecBase {
 
-  private def hofDot = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
+  /** One element type under test: the name its kernel goes by in the test
+    * names, its SQL name, its accumulator, random row generation and the
+    * pretty name the plans show. */
+  private case class Elem(kernel: String, sql: String, acc: String, prettyName: String,
+                          rows: (scala.util.Random, Int) => DataFrame,
+                          read: (Row, Int) => Any)
 
-  test("FloatVecDot matches the zip_with/aggregate fold bit-for-bit") {
+  private val elems: Seq[Elem] = {
     import spark.implicits._
-    val rnd = new scala.util.Random(42)
-    val rows = Seq.fill(200)(
-      (Array.fill(64)(rnd.nextFloat() * 2 - 1), Array.fill(64)(rnd.nextFloat() * 2 - 1)))
-    val df = rows.toDF("a", "b")
-    val out = df.select(
-      VectorOps.fdot(col("a"), col("b")).as("native"),
-      hofDot(col("a"), col("b")).as("hof")).collect()
-    out.foreach { r =>
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
-        java.lang.Double.doubleToLongBits(r.getDouble(1)))
-    }
+    def pairs[T](n: Int)(gen: => T): Seq[(Seq[T], Seq[T])] =
+      Seq.fill(200)((Seq.fill(n)(gen), Seq.fill(n)(gen)))
+    Seq(
+      Elem("FloatVecDot", "float", "double", "float_vec_dot",
+        (rnd, n) => pairs(n)(rnd.nextFloat() * 2 - 1).toDF("a", "b"),
+        (r, i) => java.lang.Double.doubleToLongBits(r.getDouble(i))),
+      Elem("IntVecDot", "int", "bigint", "int_vec_dot",
+        (rnd, n) => pairs(n)(rnd.nextInt(255) - 127).toDF("a", "b"),
+        (r, i) => r.getLong(i)),
+      Elem("DoubleVecDot", "double", "double", "double_vec_dot",
+        (rnd, n) => pairs(n)(rnd.nextDouble() * 2 - 1).toDF("a", "b"),
+        (r, i) => java.lang.Double.doubleToLongBits(r.getDouble(i))))
   }
+  private def elem(kernel: String): Elem = elems.find(_.kernel == kernel).get
 
-  test("FloatVecDot interpreted eval matches codegen path") {
-    import spark.implicits._
-    val df = Seq((Array(1.5f, -2.25f, 3.0f), Array(0.5f, 4.0f, -1.0f))).toDF("a", "b")
-    val expected = 1.5 * 0.5 + (-2.25) * 4.0 + 3.0 * (-1.0)
-    // codegen on (default)
-    val v1 = df.select(VectorOps.fdot(col("a"), col("b"))).head.getDouble(0)
-    assert(v1 == expected)
-    // force interpreted expression evaluation
-    withSQLConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
-      val v2 = df.select(VectorOps.fdot(col("a"), col("b"))).head.getDouble(0)
-      assert(v2 == expected)
-    }
-  }
+  /** The reference fold: zip_with pads the shorter array with null and
+    * aggregate propagates it, left to right in the accumulator type. */
+  private def hofDot(e: Elem)(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast(e.acc) * y.cast(e.acc)),
+      lit(0).cast(e.acc), (acc, v) => acc + v)
 
-  private def withSQLConf(kv: (String, String)*)(f: => Unit): Unit = {
+  private def withSQLConf[T](kv: (String, String)*)(f: => T): T = {
     val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
     kv.foreach { case (k, v) => spark.conf.set(k, v) }
     try f finally old.foreach {
@@ -50,90 +50,136 @@ class VectorOpsSpec extends SparkSpecBase {
     }
   }
 
-  test("null array, null element, or length mismatch yields NULL like the HOF fold") {
-    import spark.implicits._
-    val df = Seq(
-      (Some(Array(1f, 2f)), Some(Array(3f, 4f, 5f))),          // length mismatch
-      (None: Option[Array[Float]], Some(Array(1f)))).toDF("a", "b")
-    val got = df.select(VectorOps.fdot(col("a"), col("b"))).collect()
-    assert(got(0).isNullAt(0)) // zip_with pads with null -> fold is NULL
-    assert(got(1).isNullAt(0))
-    // null ELEMENT: compare native vs HOF on the same rows
-    val withNullElem = spark.sql(
-      "SELECT CAST(array(1.0, NULL, 2.0) AS array<float>) AS a, " +
-        "CAST(array(1.0, 1.0, 1.0) AS array<float>) AS b")
-    VectorOps.ensureRegistered(spark)
-    val both = withNullElem.select(
-      VectorOps.fdot(col("a"), col("b")).as("native"),
-      hofDot(col("a"), col("b")).as("hof")).head
-    assert(both.isNullAt(0) && both.isNullAt(1))
+  // local frames would otherwise be projected at optimization time,
+  // interpreted, in both runs below
+  private val NoLocalFold = "spark.sql.optimizer.excludedRules" ->
+    "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+
+  /** `q`'s rows with the projection compiled by whole-stage codegen, then
+    * with codegen off and expressions interpreted. */
+  private def compiledAndInterpreted(q: => DataFrame): (Seq[Row], Seq[Row]) = {
+    val compiled = withSQLConf(NoLocalFold) {
+      val df = q
+      assert(df.queryExecution.executedPlan.exists {
+        case w: WholeStageCodegenExec => w.child.exists(_.isInstanceOf[ProjectExec])
+        case _ => false
+      }, df.queryExecution.executedPlan.toString)
+      df.collect().toSeq
+    }
+    val interpreted = withSQLConf(NoLocalFold, "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(q.collect().toSeq)
+    (compiled, interpreted)
+  }
+
+  /** `df`'s native dot, compiled, is `ref` bit for bit. The reference is
+    * selected on its own: its lambdas keep a projection out of whole-stage
+    * codegen. */
+  private def sameBits(e: Elem, df: DataFrame, ref: Column): Unit = {
+    val native = df.select(VectorOps.dot(col("a"), col("b")))
+    assert(native.columns.head == s"${e.prettyName}(a, b)")
+    val (compiled, _) = compiledAndInterpreted(native)
+    val want = df.select(ref).collect().toSeq
+    assert(compiled.size == want.size)
+    compiled.zip(want).foreach { case (g, w) => assert(e.read(g, 0) == e.read(w, 0), e.sql) }
+  }
+
+  for (e <- elems) {
+    test(s"${e.kernel} matches the zip_with/aggregate fold bit-for-bit") {
+      sameBits(e, e.rows(new scala.util.Random(42), 64), hofDot(e)(col("a"), col("b")))
+    }
+
+    test(s"${e.kernel} interpreted eval matches codegen path") {
+      val (compiled, interpreted) = compiledAndInterpreted(
+        e.rows(new scala.util.Random(7), 64).select(VectorOps.dot(col("a"), col("b"))))
+      assert(compiled.size == 200)
+      assert(compiled.map(e.read(_, 0)) == interpreted.map(e.read(_, 0)), e.sql)
+    }
   }
 
   test("IntVecDot: exact long dot, codegen/interpreted parity, null semantics") {
     import spark.implicits._
+    // against a Scala long fold, not the HOF: products widen before they
+    // multiply (Int.MaxValue² overflows an int), and a length mismatch, a
+    // null array or a null element yields NULL
     val rnd = new scala.util.Random(7)
-    val rows = Seq.fill(100)(
-      (Array.fill(64)(rnd.nextInt(255) - 127), Array.fill(64)(rnd.nextInt(255) - 127)))
-    val df = rows.toDF("a", "b")
-    val got = df.select(VectorOps.idot(col("a"), col("b"))).collect().map(_.getLong(0))
+    val rows: Seq[(Option[Seq[Option[Int]]], Option[Seq[Option[Int]]])] =
+      Seq.fill(100)((Some(Seq.fill(64)(Some(rnd.nextInt(255) - 127))),
+        Some(Seq.fill(64)(Some(rnd.nextInt(255) - 127))))) ++ Seq(
+        (Some(Seq(Some(Int.MaxValue), Some(Int.MinValue))),
+          Some(Seq(Some(Int.MaxValue), Some(Int.MaxValue)))),
+        (Some(Seq(Some(1), Some(2))), Some(Seq(Some(3), Some(4), Some(5)))),
+        (None, Some(Seq(Some(1)))),
+        (Some(Seq(Some(1), None, Some(2))), Some(Seq(Some(1), Some(1), Some(1)))))
     val want = rows.map { case (a, b) =>
-      a.zip(b).map { case (x, y) => x.toLong * y.toLong }.sum }
-    assert(got.toSeq == want)
-    withSQLConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN") {
-      val interp = df.select(VectorOps.idot(col("a"), col("b"))).collect().map(_.getLong(0))
-      assert(interp.toSeq == want)
+      for {
+        x <- a; y <- b if x.size == y.size
+        terms = x.zip(y).map { case (p, q) => for (i <- p; j <- q) yield i.toLong * j }
+        if terms.forall(_.isDefined)
+      } yield terms.flatten.sum
     }
-    // length mismatch / null array / null element -> NULL
-    val edge = Seq(
-      (Some(Array(1, 2)), Some(Array(3, 4, 5))),
-      (None: Option[Array[Int]], Some(Array(1)))).toDF("a", "b")
-    val e = edge.select(VectorOps.idot(col("a"), col("b"))).collect()
-    assert(e(0).isNullAt(0) && e(1).isNullAt(0))
-    val nullElem = spark.sql(
-      "SELECT CAST(array(1, NULL, 2) AS array<int>) AS a, array(1, 1, 1) AS b")
-    assert(nullElem.select(VectorOps.idot(col("a"), col("b"))).head.isNullAt(0))
-  }
-
-  test("extensions entry registers graft_fdot and its builder constructs the expression") {
-    // the exact entry the GraftExtensions hook injects
-    val (ident, _, builder) = VectorOps.DotEntry
-    assert(ident.funcName == "graft_fdot")
-    val s2 = spark.newSession()
-    s2.sessionState.functionRegistry.registerFunction(ident, VectorOps.DotEntry._2, builder)
-    import s2.implicits._
-    val v = Seq((Array(2f, 3f), Array(4f, 5f))).toDF("a", "b")
-      .selectExpr("graft_fdot(a, b)").head.getDouble(0)
-    assert(v == 2.0 * 4.0 + 3.0 * 5.0)
-    // builder arity/shape used by injectFunction
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val arr = Literal.create(Array(1f, 0f), ArrayType(FloatType))
-    val e = builder(Seq(arr, arr))
-    assert(e.isInstanceOf[graft.functions.FloatVecDot])
+    assert(want.takeRight(4) == Seq(Some(-Int.MaxValue.toLong), None, None, None))
+    val (compiled, interpreted) = compiledAndInterpreted(
+      rows.toDF("a", "b").select(VectorOps.dot(col("a"), col("b"))))
+    for (got <- Seq(compiled, interpreted))
+      assert(got.map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))) == want)
   }
 
   test("DoubleVecDot matches the explicit element_at chain bit-for-bit") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
+    // the double kernel replaced an explicit element_at chain in logreg:
+    // same fold order, so the same bits at the 129-term width it serves
     val n = 129
-    val rows = Seq.fill(200)(
-      (Array.fill(n)(rnd.nextDouble() * 2 - 1), Array.fill(n)(rnd.nextDouble() * 2 - 1)))
-    val df = rows.toDF("a", "b")
-    val chain = (0 until n)
+    val e = elem("DoubleVecDot")
+    sameBits(e, e.rows(new scala.util.Random(7), n), (0 until n)
       .map(j => element_at(col("a"), j + 1) * element_at(col("b"), j + 1))
-      .reduce(_ + _)
-    val out = df.select(
-      VectorOps.ddot(col("a"), col("b")).as("native"), chain.as("chain")).collect()
-    out.foreach { r =>
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
-        java.lang.Double.doubleToLongBits(r.getDouble(1)))
+      .reduce(_ + _))
+  }
+
+  test("null array, null element, or length mismatch yields NULL like the HOF fold") {
+    for (e <- elems) {
+      val t = s"array<${e.sql}>"
+      val df = spark.sql(
+        s"""SELECT * FROM VALUES
+           |  (CAST(array(1, 2) AS $t), CAST(array(3, 4, 5) AS $t)),
+           |  (CAST(NULL AS $t), CAST(array(1) AS $t)),
+           |  (CAST(array(1, NULL, 2) AS $t), CAST(array(1, 1, 1) AS $t))
+           |  AS v(a, b)""".stripMargin)
+      val (compiled, interpreted) =
+        compiledAndInterpreted(df.select(VectorOps.dot(col("a"), col("b"))))
+      val ref = df.select(hofDot(e)(col("a"), col("b"))).collect().toSeq
+      for (rows <- Seq(compiled, interpreted, ref)) {
+        assert(rows.size == 3)
+        assert(rows.forall(_.isNullAt(0)), e.sql)
+      }
     }
-    // null element and length mismatch -> NULL (the chain's semantics)
-    val edge = Seq(
-      (Array[java.lang.Double](1.0, null), Array[java.lang.Double](1.0, 2.0)),
-      (Array[java.lang.Double](1.0), Array[java.lang.Double](1.0, 2.0)))
-      .toDF("a", "b")
-      .select(VectorOps.ddot(col("a"), col("b")).as("d")).collect()
-    assert(edge.forall(_.isNullAt(0)))
+  }
+
+  test("extensions entry registers graft_fdot and its builder constructs the expression") {
+    // every SQL name GraftExtensions registers resolves through selectExpr
+    // on a session built with the hook (the shared session made the
+    // SparkContext; restore it as active/default afterwards)
+    spark.range(1).count()
+    val s2 = SparkSession.builder().withExtensions(new GraftExtensions).create()
+    try {
+      val df = s2.range(1).selectExpr(
+        "CAST(array(2, 3) AS array<float>) AS f", "array(2, 3) AS i",
+        "CAST(array(2, 3) AS array<double>) AS d", "'ab, cd' AS s", "xxhash64(id) AS h")
+      val r = df.selectExpr(
+        "graft_fdot(f, f)", "graft_idot(i, i)", "graft_ddot(d, d)",
+        "graft_tokens(s)", "graft_bpe_segs(s)", "graft_punct_count(s)").head
+      assert(r.getDouble(0) == 13.0 && r.getLong(1) == 13L && r.getDouble(2) == 13.0)
+      assert(r.getSeq[String](3) == Seq("ab", "cd"))
+      assert(r.getSeq[String](4) == Seq("ab", ",", "cd"))
+      assert(r.getInt(5) == 1)
+      df.createOrReplaceTempView("v")
+      assert(s2.sql("""SELECT graft_bloom_contains(
+          |  (SELECT graft_bloom_agg(h, 100L, 1024L) FROM v), h) FROM v""".stripMargin)
+        .head.getBoolean(0))
+      val dot = df.selectExpr("graft_fdot(f, f)").queryExecution.analyzed
+        .expressions.flatMap(_.collect { case v: VecDot => v })
+      assert(dot.size == 1 && dot.head.prettyName == "float_vec_dot")
+    } finally {
+      SparkSession.setActiveSession(spark)
+      SparkSession.setDefaultSession(spark)
+    }
   }
 }
