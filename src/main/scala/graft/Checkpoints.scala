@@ -146,10 +146,18 @@ object Checkpoints {
     finally { scopes.set(outer); scope.release() }
   }
 
-  /** Release one checkpointed frame's blocks (underlying RDD + cache entry). */
+  /** Release one checkpointed frame's blocks (underlying RDD + cache entry)
+    * and, for a `reliable` barrier, its files in the checkpoint dir.
+    */
   def release(df: DataFrame): Unit = {
     df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(blocking = true)
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
+        l.rdd.unpersist(blocking = true)
+        l.rdd.getCheckpointFile.foreach { f =>
+          val path = new org.apache.hadoop.fs.Path(f)
+          path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+            .delete(path, true)
+        }
       case _ =>
     }
     df.unpersist(blocking = true)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.operators.Relational.topK
 import graft.functions.TextMatch
 import CapexVocab._
 
@@ -439,11 +440,7 @@ object CapexDerive {
   private[graft] def keptOf(enr: DataFrame): DataFrame = {
     // req_key leads the dedup key (key_strict starts with it — identical
     // groups, bucket-satisfiable distribution; see rankedOf)
-    val wd = Window.partitionBy(col("req_key"), col("key_strict"), col("AssetItemAmount"))
-      .orderBy(col("rid").asc)
-    rankedOf(enr).filter(col("rk") <= 5)
-      .withColumn("dup_rn", row_number().over(wd))
-      .filter(col("dup_rn") === 1).drop("dup_rn")
+    firstPerAmount(rankedOf(enr).filter(col("rk") <= 5))
   }
 
   /** Fail-open reinstatement (process_capex.py:12-56): raw rows whose robust
@@ -465,13 +462,16 @@ object CapexDerive {
     val failopenKeys = survivorKeys.join(keptKeys, Seq("req_key", "key_robust"), "left_anti")
     val keptPairs = keptDf
       .select(col("req_key"), col("key_strict"), col("AssetItemAmount")).distinct()
-    val wd = Window.partitionBy(col("req_key"), col("key_strict"), col("AssetItemAmount"))
-      .orderBy(col("rid").asc)
-    enr.join(failopenKeys, Seq("req_key", "key_robust"), "left_semi")
-      .join(keptPairs, Seq("req_key", "key_strict", "AssetItemAmount"), "left_anti")
-      .withColumn("dup_rn", row_number().over(wd))
-      .filter(col("dup_rn") === 1).drop("dup_rn")
+    firstPerAmount(enr.join(failopenKeys, Seq("req_key", "key_robust"), "left_semi")
+      .join(keptPairs, Seq("req_key", "key_strict", "AssetItemAmount"), "left_anti"))
   }
+
+  /** The lowest-rid row per (key_strict, amount) — the merge dedup both
+    * kept and reinstated rows go through.
+    */
+  private def firstPerAmount(rows: DataFrame): DataFrame =
+    topK(rows, Seq(col("req_key"), col("key_strict"), col("AssetItemAmount")),
+      Seq(col("rid").asc), 1, "dup_rn").drop("dup_rn")
 
   private val pipelineCols: Seq[String] = Seq(
     "rid", "RequestNo", "AssetItemName", "VendorName", "CompositePrimaryKey",

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.Relational.topK
 
 /** Similarity search over the embeddings table (SURVEY.md §2.D, D5-D7).
   *
@@ -28,6 +29,22 @@ object Ann {
 
   private def norm(a: Column): Column = sqrt(dot(a, a))
   private def normSql(a: String): String = s"sqrt(${dotSql(a, a)})"
+
+  /** The cosine top-5 tail every ANN candidate join ends in: cosine of
+    * each (q_id, qv, nb_id, cv) pair, ranked per query (cos desc, ties →
+    * lowest nb_id), as (q_id, nb_id, rank, cos_sim). `bestOf` first keeps
+    * each pair's best cosine: a multi-probe pair can meet in several
+    * probed buckets.
+    */
+  private def cosTop5(bestOf: Boolean = false)(pairs: DataFrame): DataFrame = {
+    val scored = pairs
+      .withColumn("cos", dot(col("qv"), col("cv")) / (norm(col("qv")) * norm(col("cv"))))
+    val best =
+      if (bestOf) scored.groupBy(col("q_id"), col("nb_id")).agg(max(col("cos")).as("cos"))
+      else scored
+    topK(best, Seq(col("q_id")), Seq(col("cos").desc, col("nb_id").asc), 5)
+      .select(col("q_id"), col("nb_id"), col("rank"), round(col("cos"), 4).as("cos_sim"))
+  }
 
   private def vecs(spark: SparkSession, dir: String): DataFrame =
     // spread the single-file scan before the family's CPU-bound per-row
@@ -239,13 +256,8 @@ object Ann {
     val q = v.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
     val c = v.select(col("vec_id").as("nb_id"), col("embedding").as("cv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos").desc, col("nb_id").asc)
     broadcast(q).crossJoin(c).filter(col("q_id") =!= col("nb_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (norm(col("qv")) * norm(col("cv"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("nb_id"), col("rank"), round(col("cos"), 4).as("cos_sim"))
+      .transform(cosTop5())
   }
   val annBruteforceSql: String =
     s"""SELECT q_id, nb_id, rank, round(cos, 4) AS cos_sim FROM (
@@ -302,13 +314,8 @@ object Ann {
     val q = all.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("bucket"))
     val c = all.select(col("vec_id").as("nb_id"), col("embedding").as("cv"), col("bucket"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos").desc, col("nb_id").asc)
     broadcast(q).join(c, Seq("bucket")).filter(col("q_id") =!= col("nb_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (norm(col("qv")) * norm(col("cv"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("nb_id"), col("rank"), round(col("cos"), 4).as("cos_sim"))
+      .transform(cosTop5())
   }
 
   /** D7c: multi-probe LSH ANN — same contract as annLsh, but each query
@@ -329,14 +336,8 @@ object Ann {
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
         explode(array(col("bucket") +: probes: _*)).as("bucket"))
     val c = all.select(col("vec_id").as("nb_id"), col("embedding").as("cv"), col("bucket"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos").desc, col("nb_id").asc)
     broadcast(q).join(c, Seq("bucket")).filter(col("q_id") =!= col("nb_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (norm(col("qv")) * norm(col("cv"))))
-      .groupBy(col("q_id"), col("nb_id")).agg(max(col("cos")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("nb_id"), col("rank"), round(col("cos"), 4).as("cos_sim"))
+      .transform(cosTop5(bestOf = true))
   }
 
   /** D7's serving form: probe the PERSISTED hyperplane-bucketed embedding
@@ -366,13 +367,8 @@ object Ann {
     val q = idx.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("bucket"))
     val c = idx.select(col("vec_id").as("nb_id"), col("embedding").as("cv"), col("bucket"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos").desc, col("nb_id").asc)
     q.join(c, Seq("bucket")).filter(col("q_id") =!= col("nb_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (norm(col("qv")) * norm(col("cv"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("nb_id"), col("rank"), round(col("cos"), 4).as("cos_sim"))
+      .transform(cosTop5())
   }
 
   /** Warm-index top-k for an ARRIVING query-vectors frame — the streaming
@@ -392,13 +388,8 @@ object Ann {
       .withColumn("bucket", lshBucket(col("qv")))
     val c = idx.select(col("vec_id").as("nb_id"), col("embedding").as("cv"),
       col("bucket"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos").desc, col("nb_id").asc)
     broadcast(q).join(c, Seq("bucket")).filter(col("q_id") =!= col("nb_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (norm(col("qv")) * norm(col("cv"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("nb_id"), col("rank"), round(col("cos"), 4).as("cos_sim"))
+      .transform(cosTop5())
   }
 
   /** D7c's serving form: multi-probe against the SAME stored index — the
@@ -415,14 +406,8 @@ object Ann {
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"),
         explode(array(col("bucket") +: probes: _*)).as("bucket"))
     val c = idx.select(col("vec_id").as("nb_id"), col("embedding").as("cv"), col("bucket"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos").desc, col("nb_id").asc)
     q.join(c, Seq("bucket")).filter(col("q_id") =!= col("nb_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (norm(col("qv")) * norm(col("cv"))))
-      .groupBy(col("q_id"), col("nb_id")).agg(max(col("cos")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("nb_id"), col("rank"), round(col("cos"), 4).as("cos_sim"))
+      .transform(cosTop5(bestOf = true))
   }
 
   /** IVF/k-means cell count: per-cell occupancy is n/NumCells, and IVF
@@ -471,14 +456,8 @@ object Ann {
   private[graft] def ivfCentroidsOf(v: DataFrame): DataFrame = {
     val seeds = v.filter(col("vec_id") < NumCells)
       .select(col("vec_id").as("cent_id"), col("embedding").as("cv"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cent_id").asc)
-    val assigned = v.crossJoin(broadcast(seeds))
-      .withColumn("ccos",
-        dot(col("embedding"), col("cv")) / (norm(col("embedding")) * norm(col("cv"))))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("cent_id").as("cell"), col("embedding"))
+    val assigned = rankedAgainstCents(v, seeds, 1)
+      .select(col("cell"), col("embedding"))
     assigned.select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy(col("cell"), col("pos"))
       // float → double is exact; double → decimal(28,10) rounds identically
@@ -528,13 +507,10 @@ object Ann {
     */
   private[graft] def rankedAgainstCents(v: DataFrame, cents: DataFrame,
                                         maxRn: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cent_id").asc)
-    v.crossJoin(broadcast(cents))
+    val scored = v.crossJoin(broadcast(cents))
       .withColumn("ccos",
         dot(col("embedding"), col("cv")) / (norm(col("embedding")) * norm(col("cv"))))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= maxRn)
+    topK(scored, Seq(col("vec_id")), Seq(col("ccos").desc, col("cent_id").asc), maxRn, "rn")
       .select(col("vec_id"), col("embedding"), col("cent_id").as("cell"),
         col("ccos"), col("rn"))
   }
@@ -574,13 +550,8 @@ object Ann {
       .select(col("vec_id").as("nb_id"), col("embedding").as("cv"), col("cell"))
     val probes = ranked.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("cell"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos").desc, col("nb_id").asc)
     broadcast(probes).join(members, Seq("cell")).filter(col("q_id") =!= col("nb_id"))
-      .withColumn("cos", dot(col("qv"), col("cv")) / (norm(col("qv")) * norm(col("cv"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("nb_id"), col("rank"), round(col("cos"), 4).as("cos_sim"))
+      .transform(cosTop5())
   }
 
   /** Shared oracle CTE prefix: seed assignment → one Lloyd step → refined
@@ -980,7 +951,6 @@ object Ann {
     * deterministic md5-derived planes, so the curve hash-checks.
     */
   def annRecallCurve(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val all = graft.Checkpoints.cp(
       vecs(spark, dir).withColumn("bucket", lshBucket(col("embedding"))))
     val exact = graft.Checkpoints.cp(
@@ -1003,9 +973,8 @@ object Ann {
       .agg(min(col("j")).as("minj"), max(col("cos")).as("cos"))
     val vis = scored.withColumn("breadth",
       explode(sequence(col("minj"), lit(NumPlanes))))
-    val w = Window.partitionBy(col("breadth"), col("q_id"))
-      .orderBy(col("cos").desc, col("nb_id").asc)
-    val top = vis.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
+    val top = topK(vis, Seq(col("breadth"), col("q_id")),
+      Seq(col("cos").desc, col("nb_id").asc), 5, "rk")
     val hits = top.join(exact, Seq("q_id", "nb_id"), "left_semi")
       .groupBy(col("breadth")).agg(count(lit(1)).as("n_hit"))
     val tot = exact.agg(count(lit(1)).as("n_exact"))
@@ -1071,7 +1040,6 @@ object Ann {
     * over the decimal-exact centroids → hash-checked.
     */
   def ivfRecallCurve(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val ranked = ivfRankedOf(vecs(spark, dir), refined = true, maxRn = NumCells)
       .transform(graft.Checkpoints.cp)
     val exact = graft.Checkpoints.cp(
@@ -1087,9 +1055,8 @@ object Ann {
       .select(col("q_id"), col("nb_id"), col("cos"), col("minp"))
     val vis = cand.withColumn("nprobe",
       explode(sequence(col("minp"), lit(NumCells))))
-    val w = Window.partitionBy(col("nprobe"), col("q_id"))
-      .orderBy(col("cos").desc, col("nb_id").asc)
-    val top = vis.withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
+    val top = topK(vis, Seq(col("nprobe"), col("q_id")),
+      Seq(col("cos").desc, col("nb_id").asc), 5, "rk")
     val hits = top.join(exact, Seq("q_id", "nb_id"), "left_semi")
       .groupBy(col("nprobe")).agg(count(lit(1)).as("n_hit"))
     val tot = exact.agg(count(lit(1)).as("n_exact"))
@@ -1247,13 +1214,10 @@ object Ann {
     val q = qz.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("q").as("qv"))
     val c = qz.select(col("vec_id").as("nb_id"), col("q").as("cv"), col("scale_e9"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("score").desc, col("nb_id").asc)
-    broadcast(q).crossJoin(c).filter(col("q_id") =!= col("nb_id"))
+    val scored = broadcast(q).crossJoin(c).filter(col("q_id") =!= col("nb_id"))
       .withColumn("score",
         graft.functions.VectorOps.dot(col("qv"), col("cv")) * col("scale_e9"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
+    topK(scored, Seq(col("q_id")), Seq(col("score").desc, col("nb_id").asc), 5)
       .select(col("q_id"), col("nb_id"), col("rank"), col("score"))
   }
   val annInt8Sql: String =
@@ -1307,18 +1271,12 @@ object Ann {
     val c = v.filter(col("vec_id") % 10 =!= 0)
       .select(col("vec_id").as("nb_id"), col("embedding").as("cv"),
         col("label").as("nb_label"))
-    val byQ = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos").desc, col("nb_id").asc)
-    val byVotes = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("votes").desc, col("nb_label").asc)
-    broadcast(q).crossJoin(c)
+    val scored = broadcast(q).crossJoin(c)
       .withColumn("cos", dot(col("qv"), col("cv")) / (norm(col("qv")) * norm(col("cv"))))
-      .withColumn("rank", row_number().over(byQ))
-      .filter(col("rank") <= KnnK)
+    val votes = topK(scored, Seq(col("q_id")), Seq(col("cos").desc, col("nb_id").asc), KnnK)
       .groupBy(col("q_id"), col("true_label"), col("nb_label"))
       .agg(count(lit(1)).as("votes"))
-      .withColumn("r", row_number().over(byVotes))
-      .filter(col("r") === 1)
+    topK(votes, Seq(col("q_id")), Seq(col("votes").desc, col("nb_label").asc), 1, "r")
       .select(col("q_id"), col("nb_label").as("pred_label"), col("votes"),
         col("true_label"),
         (col("nb_label") === col("true_label")).as("correct"))
@@ -1520,21 +1478,18 @@ object Ann {
       .unionByName(ringPairs.select(col("nb_id").as("q_id"),
         col("q_id").as("nb_id")))
       .distinct()
-    def topK(cands: DataFrame, depth: Int): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cos").desc, col("nb_id").asc)
-      cands
+    def nearest(cands: DataFrame, depth: Int): DataFrame = {
+      val scored = cands
         .join(v.select(col("vec_id").as("q_id"), col("embedding").as("qv"),
           col("nrm").as("qn")), Seq("q_id"))
         .join(v.select(col("vec_id").as("nb_id"), col("embedding").as("nv"),
           col("nrm").as("nn")), Seq("nb_id"))
         .withColumn("cos", dot(col("qv"), col("nv")) / (col("qn") * col("nn")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= depth)
+      topK(scored, Seq(col("q_id")), Seq(col("cos").desc, col("nb_id").asc), depth)
         .select(col("q_id"), col("nb_id"), col("rank"), col("cos"))
         .transform(graft.Checkpoints.cp)
     }
-    var g = topK(cand0, k * GraphBreadth)
+    var g = nearest(cand0, k * GraphBreadth)
     for (_ <- 1 to nRounds) {
       // NN-descent local join over the UNDIRECTED graph: u = g ∪ gᵀ, then
       // every 2-path a→mid→b proposes (a, b) — reverse edges matter
@@ -1546,7 +1501,7 @@ object Ann {
         .join(u.select(col("q_id").as("mid"), col("nb_id").as("nb2")), Seq("mid"))
         .filter(col("q_id") =!= col("nb2"))
         .select(col("q_id"), col("nb2").as("nb_id"))
-      g = topK(g.select(col("q_id"), col("nb_id")).unionByName(nn).distinct(),
+      g = nearest(g.select(col("q_id"), col("nb_id")).unionByName(nn).distinct(),
         k * GraphBreadth)
     }
     g.filter(col("rank") <= k)

@@ -789,18 +789,16 @@ object Corpus {
     * sorts). Exact total order (n DESC, shingle ASC) at the cut.
     */
   def sourceTopNgrams(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("source"))
-      .orderBy(col("n").desc, col("shingle").asc)
     // fence, not cp: single linear consumer chain (shingle explode), no
     // cross-plan reuse — the fence just pins the tokenizer to one run/row
-    graft.plans.Fence(
+    val counts = graft.plans.Fence(
       Tables.spreadIfNarrow(Tables.documents(spark, dir), "doc_id")
         .select(col("source"), TextOps.toks(col("text")).as("toks")))
       .select(col("source"), explode(TextOps.shingles(col("toks"))).as("shingle"))
       .groupBy(col("source"), col("shingle")).agg(count(lit(1)).as("n"))
-      .withColumn("rk", row_number().over(w).cast("bigint"))
-      .filter(col("rk") <= TopNgramsPerSource)
+    graft.operators.Relational.topK(counts, Seq(col("source")),
+        Seq(col("n").desc, col("shingle").asc), TopNgramsPerSource, "rk")
+      .withColumn("rk", col("rk").cast("bigint"))
   }
   val sourceTopNgramsSql: String =
     s"""SELECT source, shingle, n, rk FROM (

@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.roundScaled
+import graft.operators.Relational.{saltedTopK, topK}
 
 /** Lexical (keyword) retrieval and lexical×vector hybrid fusion
   * (SURVEY.md §2.D, D91/D92) — the query→document serving family the
@@ -42,7 +44,7 @@ import graft.Tables
   * terms BROADCAST into the postings join so candidates arrive map-side;
   * the final top-k is the salted TWO-PHASE rank (`graft.lex.salts`), so
   * no reducer frame exceeds candidates/salts even when a query's rare
-  * terms turn out hot (the servePq shortlist discipline).
+  * terms turn out hot.
   */
 object Lexical {
 
@@ -120,21 +122,19 @@ object Lexical {
     docs0.select(size(TextOps.toks(col("text"))).as("l"))
       .agg(count(lit(1)).as("n"), coalesce(sum(col("l")), lit(0L)).as("total"))
 
-  /** Query-term selection shared by both scorers: the ≤ Q·vocab(query
-    * docs) frame joins df and ranks rare-first per query —
-    * contract-bounded by the query docs' own vocabularies (the embed_pca
-    * window class).
+  /** Rare-first query-term selection shared by every scorer: the ≤
+    * Q·vocab(query docs) (q_id, term) frame joins df and keeps each
+    * query's QueryTerms rarest terms — contract-bounded by the query docs'
+    * own vocabularies (the embed_pca window class).
     */
-  private def querySelOf(post: DataFrame, dfreq: DataFrame): DataFrame = {
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("df").asc, col("term").asc)
-    broadcast(post.filter(col("doc_id") < NQueries)
-        .select(col("doc_id").as("q_id"), col("term")))
-      .join(dfreq, Seq("term"))
-      .withColumn("tr", row_number().over(wq))
-      .filter(col("tr") <= QueryTerms)
+  private def querySelOf(qterms: DataFrame, dfreq: DataFrame): DataFrame =
+    topK(broadcast(qterms).join(dfreq, Seq("term")), Seq(col("q_id")),
+      Seq(col("df").asc, col("term").asc), QueryTerms, "tr")
       .select(col("q_id"), col("term"), col("df"))
-  }
+
+  /** The (q_id, term) rows of the query docs' postings. */
+  private def queryTermsOf(post: DataFrame): DataFrame =
+    post.filter(col("doc_id") < NQueries).select(col("doc_id").as("q_id"), col("term"))
 
   /** Full candidate scores under the integer RSJ-ratio scorer (the
     * pre-top-k frame) — also the left side of the rank-agreement gauge
@@ -143,7 +143,7 @@ object Lexical {
     */
   private[graft] def scoredCandidatesOf(post: DataFrame, dfreq: DataFrame,
                                         stats: DataFrame): DataFrame =
-    scoreQsel(post, querySelOf(post, dfreq), stats)
+    scoreQsel(post, querySelOf(queryTermsOf(post), dfreq), stats)
 
   /** The TEXTBOOK log-idf BM25 scorer (double ln — transcendental, so
     * spec-side only, never an oracle surface): the ground truth the
@@ -159,7 +159,7 @@ object Lexical {
   private[graft] def scoredCandidatesLogOf(docs0: DataFrame): DataFrame = {
     val post = postingsOf(docs0)
     val dfreq = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    post.join(broadcast(querySelOf(post, dfreq)), Seq("term"))
+    post.join(broadcast(querySelOf(queryTermsOf(post), dfreq)), Seq("term"))
       .filter(col("doc_id") =!= col("q_id"))
       .crossJoin(broadcast(statsOf(docs0)))
       .withColumn("idf",
@@ -189,10 +189,14 @@ object Lexical {
                              stats: DataFrame): DataFrame =
     rankTail(scoredCandidatesOf(post, dfreq, stats))
 
+  /** Salted two-phase top-k (`graft.lex.salts`) on the EXACT integer
+    * score (desc, nb_id asc), so the cut is engine-independent.
+    */
   private def rankTail(scored: DataFrame): DataFrame =
-    saltedLexTopK(scored)
+    saltedTopK(scored, Seq(col("q_id")), Seq(col("s_e10").desc, col("nb_id").asc),
+      TopK, col("nb_id") % Salts)
       .select(col("q_id"), col("nb_id"), col("rank"),
-        round(col("s_e10").cast("double") / 1e10, 6).as("score"))
+        roundScaled(col("s_e10").cast("double") / 1e10, 6).as("score"))
 
   /** Warm-index top-k for an ARRIVING query-docs frame — the streaming
     * serving form's per-micro-batch core (E7's lexTopkStream): identical
@@ -213,20 +217,15 @@ object Lexical {
   private[graft] def lexTopkForQueries(spark: SparkSession, table: String,
                                        queryDocs: DataFrame): DataFrame = {
     val post = graft.sources.BucketedSink.readServing(spark, table, "doc_id")
-    val wq = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("df").asc, col("term").asc)
-    val qsel = broadcast(queryDocs.select(col("doc_id").as("q_id"),
-        explode(array_distinct(TextOps.toks(col("text")))).as("term")))
-      .join(spark.table(table + "_df"), Seq("term"))
-      .withColumn("tr", row_number().over(wq))
-      .filter(col("tr") <= QueryTerms)
-      .select(col("q_id"), col("term"), col("df"))
+    val qsel = querySelOf(queryDocs.select(col("doc_id").as("q_id"),
+        explode(array_distinct(TextOps.toks(col("text")))).as("term")),
+      spark.table(table + "_df"))
     rankTail(scoreQsel(post, qsel, spark.table(table + "_stats")))
   }
 
-  /** The scoring fold over an explicit (q_id, term, df) query frame —
-    * shared by the df-derived selection (querySelOf) and the
-    * arriving-docs selection (lexTopkForQueries).
+  /** The scoring fold over a querySelOf (q_id, term, df) frame — the
+    * query docs' own postings (scoredCandidatesOf) or arriving docs
+    * (lexTopkForQueries).
     */
   private def scoreQsel(post: DataFrame, qsel: DataFrame,
                         stats: DataFrame): DataFrame =
@@ -251,26 +250,6 @@ object Lexical {
         explode(col("ts")).as("term"))
       .groupBy(col("doc_id"), col("term"), col("len"))
       .agg(count(lit(1)).as("tf"))
-
-  /** Two-phase salted top-k over (q_id, nb_id, s_e10) — the servePq
-    * shortlist shape: phase 1 partitions by (q_id, salt) so no reducer
-    * frame exceeds candidates/salts, phase 2 ranks ≤ TopK·salts
-    * survivors. Ordering is on the EXACT integer score (desc, nb_id asc)
-    * so the cut is engine-independent.
-    */
-  private def saltedLexTopK(scored: DataFrame): DataFrame = {
-    val w1 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id"), col("salt"))
-      .orderBy(col("s_e10").desc, col("nb_id").asc)
-    val w2 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("s_e10").desc, col("nb_id").asc)
-    scored
-      .withColumn("salt", col("nb_id") % Salts)
-      .withColumn("r1", row_number().over(w1))
-      .filter(col("r1") <= TopK)
-      .withColumn("rank", row_number().over(w2))
-      .filter(col("rank") <= TopK)
-  }
 
   /** Composable oracle CTE chain ending in `lexrk` = (q_id, nb_id, s_e10,
     * rank ≤ TopK) — shared by the D91 oracle and the D92 fusion oracle.
@@ -629,11 +608,8 @@ object Lexical {
         col("term").as("t2")), Seq("q_id", "pos")))
       .join(dfreq.withColumnRenamed("term", "t1").withColumnRenamed("df", "df1"), Seq("t1"))
       .join(dfreq.withColumnRenamed("term", "t2").withColumnRenamed("df", "df2"), Seq("t2"))
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id"))
-      .orderBy((col("df1") + col("df2")).asc, col("t1").asc, col("t2").asc)
-    val phrase = pairs
-      .withColumn("pr", row_number().over(wp)).filter(col("pr") === 1)
+    val phrase = topK(pairs, Seq(col("q_id")),
+        Seq((col("df1") + col("df2")).asc, col("t1").asc, col("t2").asc), 1, "pr")
       .select(col("q_id"), col("t1"), col("t2"))
     ppost.join(broadcast(phrase), col("term") === col("t1"))
       .select(col("q_id"), col("doc_id"), col("pos"), col("t2"))
@@ -701,10 +677,8 @@ object Lexical {
       d.join(dfreq.select(col("term").as(s"t$i"), col("df").as(s"df$i")), Seq(s"t$i"))
     }
     val dfsum = (0 until k).map(i => col(s"df$i")).reduce(_ + _)
-    val wp = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id"))
-      .orderBy(dfsum.asc +: (0 until k).map(i => col(s"t$i").asc) :+ col("pos").asc: _*)
-    withDf.withColumn("pr", row_number().over(wp)).filter(col("pr") === 1)
+    topK(withDf, Seq(col("q_id")),
+        dfsum.asc +: (0 until k).map(i => col(s"t$i").asc) :+ col("pos").asc, 1, "pr")
       .select(col("q_id") +: (0 until k).map(i => col(s"t$i")): _*)
   }
 
@@ -1005,17 +979,14 @@ object Lexical {
   private def rrfFuse(lexList: DataFrame, annList: DataFrame): DataFrame = {
     val lex = lexList.select(col("q_id"), col("nb_id"), col("rank").as("lrank"))
     val ann = annList.select(col("q_id"), col("nb_id"), col("rank").as("arank"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("rrf_e6").desc, col("nb_id").asc)
-    lex.join(ann, Seq("q_id", "nb_id"), "full_outer")
+    val fused = lex.join(ann, Seq("q_id", "nb_id"), "full_outer")
       .withColumn("rrf_e6",
         coalesce(expr(s"1000000 div ($RrfK + lrank)"), lit(0L)) +
           coalesce(expr(s"1000000 div ($RrfK + arank)"), lit(0L)))
       .withColumn("n_lists",
         (when(col("lrank").isNotNull, 1).otherwise(0) +
           when(col("arank").isNotNull, 1).otherwise(0)).cast("int"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+    topK(fused, Seq(col("q_id")), Seq(col("rrf_e6").desc, col("nb_id").asc), TopK)
       .select(col("q_id"), col("nb_id"), col("rank"), col("rrf_e6"),
         col("n_lists"))
   }

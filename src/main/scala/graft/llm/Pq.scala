@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.operators.Relational.{saltedTopK, topK}
 
 /** Product quantization for ANN serving (SURVEY §2 D73/D74).
   *
@@ -177,8 +178,8 @@ object Pq {
     r
   }
 
-  /** Salt fan-out for the two-phase shortlist rank (sample_cap_domain's
-    * skew-safe top-K shape, Sampling.scala): phase 1 ranks within
+  /** Salt fan-out for the two-phase shortlist rank
+    * (Relational.saltedTopK): phase 1 ranks within
     * (q_id, salt) so no reducer frame exceeds candidates/salts; phase 2
     * ranks the ≤ R·salts survivors. Query-time breadth like ShortlistR —
     * never part of the stored layout, and provably output-invariant
@@ -225,11 +226,11 @@ object Pq {
     * states (PqSpec pins both the equivalence and the plan shape).
     */
   private def servePq(v: DataFrame, cb: DataFrame, codes: DataFrame): DataFrame =
-    refineExact(v, saltedTopR(
+    refineExact(v,
       codes.join(broadcast(adcLut(v, cb)), Seq("m", "code"))
         .filter(col("q_id") =!= col("vec_id"))
         .groupBy(col("q_id"), col("vec_id").as("nb_id"))
-        .agg(sum(col("d2q")).as("adc"))))
+        .agg(sum(col("d2q")).as("adc")))
 
   /** The per-query ADC lookup table: exact query-subvector-to-centroid
     * distances over the tiny codebook (queries × M × K rows — broadcast).
@@ -241,39 +242,23 @@ object Pq {
       .select(col("q_id"), col("m"), col("code"),
         l2(col("sv"), col("cv"), subDim).cast("decimal(28,10)").as("d2q"))
 
-  /** Two-phase salted top-R over (q_id, nb_id, adc) rows — see servePq
-    * scaladoc. Returns (q_id, nb_id), the shortlist the refine consumes.
+  /** Shortlist, then the "+ R" stage: the salted two-phase top-R of the
+    * (q_id, nb_id, adc) rows (see servePq) nominates each query's R
+    * candidates, and only those full vectors are exact-L2 re-ranked. The
+    * shortlist (queries × R rows) broadcasts into the corpus join, so the
+    * re-rank costs one hash-probe pass, no corpus shuffle.
     */
-  private def saltedTopR(adc: DataFrame): DataFrame = {
-    val wAdc1 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id"), col("salt"))
-      .orderBy(col("adc").asc, col("nb_id").asc)
-    val wAdc2 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("adc").asc, col("nb_id").asc)
-    adc
-      .withColumn("salt", col("nb_id") % ShortlistSalts)
-      .withColumn("srank1", row_number().over(wAdc1))
-      .filter(col("srank1") <= ShortlistR)
-      .withColumn("srank", row_number().over(wAdc2))
-      .filter(col("srank") <= ShortlistR)
+  private def refineExact(v: DataFrame, adc: DataFrame): DataFrame = {
+    val shortlist = saltedTopK(adc, Seq(col("q_id")), Seq(col("adc").asc, col("nb_id").asc),
+      ShortlistR, col("nb_id") % ShortlistSalts, "srank")
       .select(col("q_id"), col("nb_id"))
-  }
-
-  /** Exact-L2 re-rank of the shortlisted vectors only — the "+ R" stage:
-    * the shortlist (queries × R rows) broadcasts into the corpus join, so
-    * the re-rank costs one hash-probe pass, no corpus shuffle.
-    */
-  private def refineExact(v: DataFrame, shortlist: DataFrame): DataFrame = {
     val qv = v.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
-    val wExact = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("d2").asc, col("nb_id").asc)
-    broadcast(shortlist)
+    val scored = broadcast(shortlist)
       .join(v.select(col("vec_id").as("nb_id"), col("embedding").as("nvec")), Seq("nb_id"))
       .join(broadcast(qv), Seq("q_id"))
       .withColumn("d2", l2(col("qvec"), col("nvec"), Dim))
-      .withColumn("rank", row_number().over(wExact))
-      .filter(col("rank") <= TopK)
+    topK(scored, Seq(col("q_id")), Seq(col("d2").asc, col("nb_id").asc), TopK)
       .select(col("q_id"), col("nb_id"), col("rank"),
         round(col("d2"), 6).as("l2_dist"))
   }
@@ -310,11 +295,11 @@ object Pq {
       .select(col("q_id"), col("vec_id"))
     val cb = graft.Checkpoints.cp(codebookOf(v))
     val codes = encodeOf(v, cb).select(col("vec_id"), col("m"), col("code"))
-    refineExact(v, saltedTopR(
+    refineExact(v,
       cands.join(codes, Seq("vec_id"))
         .join(broadcast(adcLut(v, cb)), Seq("q_id", "m", "code"))
         .groupBy(col("q_id"), col("vec_id").as("nb_id"))
-        .agg(sum(col("d2q")).as("adc"))))
+        .agg(sum(col("d2q")).as("adc")))
   }
 
   /** Per-dataset, content-fingerprinted PQ index table name (the
@@ -601,14 +586,14 @@ object Pq {
         v.filter(col("vec_id") < NQueries), spark.table(table + "_cents"),
         Ann.NProbe)
       .select(col("vec_id").as("q_id"), col("cell"))
-    refineExact(v, saltedTopR(
+    refineExact(v,
       graft.sources.BucketedSink.readServing(spark, table, "vec_id")
         .join(broadcast(probes), Seq("cell"))
         .filter(col("q_id") =!= col("vec_id"))
         .join(broadcast(adcLut(v, spark.table(table + "_cb"))),
           Seq("q_id", "m", "code"))
         .groupBy(col("q_id"), col("vec_id").as("nb_id"))
-        .agg(sum(col("d2q")).as("adc"))))
+        .agg(sum(col("d2q")).as("adc")))
   }
 
   /** Recompute twin for the lifecycle specs: serve `v`'s queries against
@@ -1015,14 +1000,11 @@ object Pq {
   private[graft] def exactL2TopK(v: DataFrame): DataFrame = {
     val q = v.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("qvec"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("d2").asc, col("nb_id").asc)
-    broadcast(q)
+    val scored = broadcast(q)
       .crossJoin(v.select(col("vec_id").as("nb_id"), col("embedding").as("nvec")))
       .filter(col("q_id") =!= col("nb_id"))
       .withColumn("d2", l2(col("qvec"), col("nvec"), Dim))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= TopK)
+    topK(scored, Seq(col("q_id")), Seq(col("d2").asc, col("nb_id").asc), TopK)
       .select(col("q_id"), col("nb_id"))
   }
 

@@ -78,17 +78,11 @@ object Sampling {
     * Output rank equals the single-window rank (the spec asserts it).
     */
   def sampleCapDomain(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), prio(col("doc_id")).as("prio"))
-      .withColumn("salt", col("doc_id") % CapSalts)
-    val w1 = Window.partitionBy(col("source"), col("salt"))
-      .orderBy(col("prio"), col("doc_id"))
-    val w2 = Window.partitionBy(col("source")).orderBy(col("prio"), col("doc_id"))
-    docs.withColumn("rn", row_number().over(w1)).filter(col("rn") <= CapPerSource)
-      .withColumn("rk", row_number().over(w2).cast("bigint"))
-      .filter(col("rk") <= CapPerSource)
-      .select(col("doc_id"), col("source"), col("rk"))
+    graft.operators.Relational.saltedTopK(docs, Seq(col("source")),
+        Seq(col("prio"), col("doc_id")), CapPerSource, col("doc_id") % CapSalts, "rk")
+      .select(col("doc_id"), col("source"), col("rk").cast("bigint").as("rk"))
   }
   /** The oracle states the SEMANTICS (one global rank per source); the
     * engine's salted two phases are an equivalent physical plan because

@@ -478,15 +478,14 @@ object TextOps {
       terms.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("tfidf").desc, col("term").asc)
-    tf.join(dfreq, Seq("term"))
+    val scored = tf.join(dfreq, Seq("term"))
       .crossJoin(broadcast(nDocs))
       .withColumn("tfidf",
         round(col("tf") * log(col("n_docs").cast("double") / col("df")), 4))
-      .withColumn("rk", row_number().over(w).cast("bigint"))
-      .filter(col("rk") <= 3)
-      .select(col("doc_id"), col("term"), col("tf"), col("df"), col("tfidf"), col("rk"))
+    graft.operators.Relational.topK(scored, Seq(col("doc_id")),
+        Seq(col("tfidf").desc, col("term").asc), 3, "rk")
+      .select(col("doc_id"), col("term"), col("tf"), col("df"), col("tfidf"),
+        col("rk").cast("bigint").as("rk"))
   }
   val textTfidfSql: String =
     s"""WITH terms AS (SELECT doc_id, unnest($toksSql) AS term FROM documents),

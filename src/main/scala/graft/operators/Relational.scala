@@ -12,6 +12,33 @@ import org.apache.spark.sql.types.{StructField, StructType, TimestampNTZType, Ti
   */
 object Relational {
 
+  /** Per-group top-k: within each `by` group, the rows ranked 1..k by
+    * `order` (callers end `order` with a unique tie-break so the cut is
+    * engine-independent), their rank as the int column `rank`. Groups
+    * with fewer than k rows keep all of them.
+    *
+    * The shape — an int `row_number` compared `<=` to an int literal — is
+    * what Spark's InferWindowGroupLimit rewrites into a WindowGroupLimit
+    * below the window's shuffle, so each map task ships at most k rows per
+    * group. Cast a caller-facing rank after the cut, never before.
+    */
+  private[graft] def topK(df: DataFrame, by: Seq[Column], order: Seq[Column],
+                          k: Int, rank: String = "rank"): DataFrame =
+    df.withColumn(rank, row_number().over(Window.partitionBy(by: _*).orderBy(order: _*)))
+      .filter(col(rank) <= k)
+
+  /** topK in two phases for groups too large for one reducer: phase 1 cuts
+    * k per (group, salt) — the salt rides as column `salt`, its rank as
+    * `rank + "1"` — so no window frame exceeds group/salts rows; phase 2
+    * ranks the ≤ k·salts survivors per group. Per-salt top-k is a superset
+    * of the group's top-k, so the output equals `topK(df, by, order, k,
+    * rank)`.
+    */
+  private[graft] def saltedTopK(df: DataFrame, by: Seq[Column], order: Seq[Column],
+                                k: Int, salt: Column, rank: String = "rank"): DataFrame =
+    topK(topK(df.withColumn("salt", salt), by :+ col("salt"), order, k, rank + "1"),
+      by, order, k, rank).drop("salt", rank + "1")
+
   /** As-of join: for each left row, attach the payload of the latest right
     * row with the same key and `right.ts <= left.ts` (direction=backward,
     * the default; ties → largest `tieBreak`), or the earliest right row

@@ -154,11 +154,8 @@ object Analytics {
     * partition key with no global sort.
     */
   def topkPerGroup(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    Tables.orders(spark, dir)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
+    graft.operators.Relational.topK(Tables.orders(spark, dir), Seq(col("o_custkey")),
+        Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3, "rk")
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"), col("rk"))
   }
 

@@ -68,6 +68,25 @@ class BarrierModeSpec extends SparkSpecBase {
     }
   }
 
+  test("reliable barriers delete their checkpoint files when their scope exits") {
+    spark.conf.set("graft.barrier", "reliable")
+    try {
+      val hadoopConf = spark.sparkContext.hadoopConfiguration
+      val path = Checkpoints.scoped {
+        val df = Checkpoints.cp(Tables.nation(spark, sfDir))
+        val file = df.queryExecution.analyzed.collectLeaves().collectFirst {
+          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.getCheckpointFile
+        }.flatten
+        assert(file.nonEmpty, "reliable barrier has no checkpoint file")
+        val p = new org.apache.hadoop.fs.Path(file.get)
+        assert(p.getFileSystem(hadoopConf).exists(p))
+        p
+      }
+      assert(!path.getFileSystem(hadoopConf).exists(path),
+        s"$path outlived its scope")
+    } finally spark.conf.unset("graft.barrier")
+  }
+
   test("cache mode keeps lineage (plan has no LogicalRDD scan)") {
     spark.conf.set("graft.barrier", "cache")
     try {

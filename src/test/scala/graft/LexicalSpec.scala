@@ -34,6 +34,23 @@ class LexicalSpec extends SparkSpecBase {
     assert(out.map(_.getInt(2)).toSeq === (1 to out.length))
   }
 
+  test("lexical score rounds like the DuckDB oracle at a half-way tie") {
+    // query doc 0 and candidate 11 share the query's only term; under
+    // n=21, df=18, tf=2, len=2, total=42 the exact score is s_e10 =
+    // 2600125000, i.e. 0.2600125: the oracle's round(x, 6) gives 0.260012
+    // (x·10^6 is 260012.4999… as a double), Spark's round(x, 6) 0.260013
+    val tbl = "lex_round_tie"
+    Seq((0L, "t", 2, 2L), (11L, "t", 2, 2L)).toDF("doc_id", "term", "len", "tf")
+      .createOrReplaceTempView(tbl)
+    Seq(("t", 18L)).toDF("term", "df").createOrReplaceTempView(tbl + "_df")
+    Seq((21L, 42L)).toDF("n", "total").createOrReplaceTempView(tbl + "_stats")
+    try {
+      val out = Lexical.lexProbeFromStore(spark, tbl).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
+      assert(out.toSeq === Seq((0L, 11L, 1, 0.260012)))
+    } finally Seq(tbl, tbl + "_df", tbl + "_stats").foreach(spark.catalog.dropTempView)
+  }
+
   test("scores are monotone in the exact integer ordering (desc, id asc)") {
     val out = Lexical.lexicalTopkOf(corpus)
       .filter(col("q_id") === 0).orderBy(col("rank")).collect()

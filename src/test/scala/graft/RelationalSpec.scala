@@ -286,6 +286,34 @@ class RelationalSpec extends SparkSpecBase {
     df.collect().foreach(r => assert(direct(r.getString(0)) == r.getLong(1)))
   }
 
+  test("topK and saltedTopK match a sort-and-take reference on random frames") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    // group g holds g rows (1..25), so k=7 exceeds the small groups; v has
+    // four values (duplicate order keys, broken by id) and ~1/6 nulls
+    val rows = (1 to 25).flatMap(g => (0 until g).map { _ =>
+      (g, if (rnd.nextInt(6) == 0) None else Some(rnd.nextInt(4)))
+    }).zipWithIndex.map { case ((g, v), id) => (g, v, id.toLong) }
+    val df = rows.toDF("g", "v", "id")
+    // Spark's defaults: desc puts nulls last, asc puts them first
+    val orders = Seq[(org.apache.spark.sql.Column, ((Int, Option[Int], Long)) => (Boolean, Int, Long))](
+      col("v").desc -> { case (_, v, id) => (v.isEmpty, -v.getOrElse(0), id) },
+      col("v").asc -> { case (_, v, id) => (v.isDefined, v.getOrElse(0), id) })
+    for ((order, key) <- orders; k <- Seq(1, 3, 7)) {
+      val want = rows.groupBy(_._1).values.flatMap(grp =>
+        grp.sortBy(key).take(k).zipWithIndex.map { case (r, i) => (r._1, r._3, i + 1) }).toSet
+      def got(ranked: org.apache.spark.sql.DataFrame): Set[(Int, Long, Int)] = {
+        assert(ranked.columns.toSeq === Seq("g", "v", "id", "rank"))
+        ranked.select("g", "id", "rank").as[(Int, Long, Int)].collect().toSet
+      }
+      val by = Seq(col("g"))
+      assert(got(Relational.topK(df, by, Seq(order, col("id")), k)) === want, s"$order k=$k")
+      for (salts <- Seq(1, 3, 7))
+        assert(got(Relational.saltedTopK(df, by, Seq(order, col("id")), k,
+          col("id") % salts)) === want, s"$order k=$k salts=$salts")
+    }
+  }
+
   test("salted join equals the plain join, inner and left, on skewed data") {
     import spark.implicits._
     // heavy skew: key 1 dominates; keys 4/5 unmatched on one side
