@@ -5,10 +5,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.GraftPlanBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 
 /** Native Catalyst dot product over two array columns of the same element
@@ -31,7 +32,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * ~900-node expression tree whose analysis the DRIVER re-paid 1-2 s per GD
   * step; one node plans in microseconds. Fold order and null semantics are
   * IDENTICAL to the HOF and chain formulations, so the DuckDB oracles verify
-  * every kernel bit-for-bit.
+  * every kernel bit-for-bit. The hyperplane projections learned the same
+  * lesson: see `PlaneProj`.
   */
 case class VecDot(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -138,6 +140,87 @@ case class VecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Native ±1 hyperplane projection of a float-array column: the double
+  * `Σ_d (double) v[d] · sign(plane, d)` over the first `dim` elements, with
+  * the md5-derived signs of `graft.llm.Ann.planeSign` (computed once per
+  * (plane, dim), held by index so expression equality stays structural).
+  * It replaces a literal chain of `dim` `element_at · cast · multiply`
+  * terms joined by adds — ~380 nodes per plane, ~3,000 per LSH bucket id,
+  * which every serving read re-analysed before its first job — with one
+  * node and one codegen'd loop.
+  *
+  * The value is the chain's bit for bit: the same left-to-right fold
+  * starting from the first term, the same ±1.0 multiply. Its null and
+  * bounds semantics are the chain's too: the fold stops at the first null
+  * element (NULL), and an array shorter than `dim` fails like
+  * `element_at` past the end (ANSI) or yields NULL (non-ANSI).
+  */
+private[graft] case class PlaneProj(child: Expression, plane: Int, dim: Int,
+                                     failOnError: Boolean = SQLConf.get.ansiEnabled)
+  extends UnaryExpression {
+  require(dim >= 1, s"PlaneProj needs dim >= 1, got $dim")
+
+  @transient private lazy val signs: Array[Double] = graft.llm.Ann.planeSigns(plane, dim)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<float> argument, got ${t.catalogString}")
+  }
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "plane_proj"
+  // a null element or (non-ANSI) short array is NULL for a non-null input
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(a: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val n = x.numElements()
+    var s = 0.0
+    var d = 0
+    while (d < dim) {
+      if (d >= n) {
+        if (failOnError) throw GraftPlanBridge.elementAtIndexError(d + 1, n)
+        return null
+      }
+      if (x.isNullAt(d)) return null
+      val t = x.getFloat(d).toDouble * signs(d)
+      s = if (d == 0) t else s + t
+      d += 1
+    }
+    s
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val sg = ctx.addReferenceObj("signs", signs, "double[]")
+    nullSafeCodeGen(ctx, ev, x => {
+      val n = ctx.freshName("n")
+      val d = ctx.freshName("d")
+      val s = ctx.freshName("s")
+      val t = ctx.freshName("t")
+      val sgn = ctx.freshName("sgn")
+      val short =
+        if (failOnError)
+          s"throw org.apache.spark.sql.classic.GraftPlanBridge.elementAtIndexError($d + 1, $n);"
+        else s"${ev.isNull} = true; break;"
+      s"""
+         |int $n = $x.numElements();
+         |double[] $sgn = $sg;
+         |double $s = 0.0;
+         |for (int $d = 0; $d < $dim; $d++) {
+         |  if ($d >= $n) { $short }
+         |  if ($x.isNullAt($d)) { ${ev.isNull} = true; break; }
+         |  double $t = (double) $x.getFloat($d) * $sgn[$d];
+         |  $s = $d == 0 ? $t : $s + $t;
+         |}
+         |if (!${ev.isNull}) { ${ev.value} = $s; }
+       """.stripMargin
+    })
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 object VectorOps {
   /** Dot product of two array columns of one element type: a left-to-right
     * double fold for float and double arrays, an exact long for int arrays.
@@ -145,6 +228,12 @@ object VectorOps {
   def dot(a: Column, b: Column): Column =
     GraftPlanBridge.column(
       VecDot(GraftPlanBridge.expression(a), GraftPlanBridge.expression(b)))
+
+  /** `v`'s projection onto ±1 hyperplane `plane` over its first `dim`
+    * elements (`PlaneProj`).
+    */
+  private[graft] def planeProj(v: Column, plane: Int, dim: Int): Column =
+    GraftPlanBridge.column(PlaneProj(GraftPlanBridge.expression(v), plane, dim))
 }
 
 /** `SparkSessionExtensions` hook: `.withExtensions(new GraftExtensions)` or

@@ -84,12 +84,8 @@ object Ann {
     p
   }
 
-  private def embPlaneBit(v: Column, j: Int): Column = {
-    val proj = (0 until Dim).map { d =>
-      element_at(v, d + 1).cast("double") * planeSign(j, d)
-    }.reduce(_ + _)
-    when(proj > 0, lit(1)).otherwise(0)
-  }
+  private def embPlaneBit(v: Column, j: Int): Column =
+    when(planeProj(v, j) > 0, lit(1)).otherwise(0)
 
   /** D5: embedding-cosine near-dup pairs (cos ≥ 0.8). Candidates come from
     * the banded-LSH equality join above — one shuffle keyed by
@@ -101,12 +97,11 @@ object Ann {
     dedupEmbeddingOf(vecs(spark, dir))
 
   /** Banded LSH signature rows at the CURRENT width config. Plane bits as
-    * separate columns, materialized BEFORE the band explode: one 1024-term
-    * expression inside the Generate blows Janino's method limit (codegen
-    * falls back to interpreted), while 16 × 64-term columns codegen
-    * cleanly; the barrier also stops project-collapse from inlining them
-    * into the explode AND lets both sides of the bucket self-join reuse
-    * the computed projections.
+    * separate columns (one native projection each), materialized BEFORE
+    * the band explode: the barrier stops project-collapse from inlining
+    * them into the explode, where every band row would recompute every
+    * plane, AND lets both sides of the bucket self-join reuse the computed
+    * projections.
     */
   private def embBanded(v: DataFrame): DataFrame = {
     val nPlanes = EmbBands * EmbPlanesPerBand
@@ -278,6 +273,23 @@ object Ann {
     if ((Integer.parseInt(hex.substring(0, 1), 16) & 1) == 1) 1 else -1
   }
 
+  private val signMemo =
+    new java.util.concurrent.ConcurrentHashMap[(Int, Int), Array[Double]]()
+
+  /** Plane j's first `dim` signs as ±1.0, computed once per (j, dim) — the
+    * coefficients of the native projection (graft.functions.PlaneProj).
+    * Shared: callers must not mutate the array.
+    */
+  private[graft] def planeSigns(j: Int, dim: Int): Array[Double] =
+    signMemo.computeIfAbsent((j, dim),
+      _ => Array.tabulate(dim)(d => planeSign(j, d).toDouble))
+
+  /** Σ_d sign(j, d)·v[d] over the Dim components, folded left to right in
+    * double — one native node (PlaneProj) per plane.
+    */
+  private def planeProj(v: Column, j: Int): Column =
+    graft.functions.VectorOps.planeProj(v, j, Dim)
+
   /** Single-table LSH width: bucket universe is 2^NumPlanes, so this is
     * the per-probe occupancy lever (n/2^NumPlanes vectors per bucket) —
     * raise it as the corpus grows; the persisted index folds the value
@@ -291,15 +303,16 @@ object Ann {
   }
 
   /** Random-hyperplane LSH bucket id: bit j set iff Σ_d sign(j,d)·x_d > 0.
-    * Signs are baked in as literals (the "hyperplane matrix" is code-time
-    * deterministic), so the expression stays pure-codegen.
+    * Each plane is one native projection node (the "hyperplane matrix" is
+    * code-time deterministic, memoized per plane), so the id is ~60
+    * expression nodes that plan in microseconds — the literal sign chain it
+    * replaced was ~3,000 nodes that every serving read and every append
+    * batch re-analysed before running. A null vector or element lands in
+    * bucket 0.
     */
   def lshBucket(v: Column): Column =
     (0 until NumPlanes).map { j =>
-      val proj = (0 until Dim).map { d =>
-        element_at(v, d + 1).cast("double") * planeSign(j, d)
-      }.reduce(_ + _)
-      when(proj > 0, lit(1L << j)).otherwise(0L)
+      when(planeProj(v, j) > 0, lit(1L << j)).otherwise(0L)
     }.reduce(_ + _)
 
   /** D7: LSH-bucketed ANN — same top-k contract as brute force but
@@ -1120,11 +1133,7 @@ object Ann {
   def embedReduce(spark: SparkSession, dir: String): DataFrame = {
     val scale = math.sqrt(ReduceDims.toDouble)
     val cols = (0 until ReduceDims).map { k =>
-      val proj = (0 until Dim).map { d =>
-        element_at(col("embedding"), d + 1).cast("double") *
-          planeSign(ReducePlaneBase + k, d)
-      }.reduce(_ + _)
-      round(proj / scale, 6).as(f"r$k%02d")
+      round(planeProj(col("embedding"), ReducePlaneBase + k) / scale, 6).as(f"r$k%02d")
     }
     Tables.spreadIfNarrow(vecs(spark, dir), "vec_id")
       .select(col("vec_id") +: cols: _*)

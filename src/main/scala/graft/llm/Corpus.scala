@@ -221,8 +221,6 @@ object Corpus {
       .drop("n_hits")
   }
 
-  private val StateBuckets = 32
-
   /** Pay-at-ingest corpus state for the incremental flagship: per-doc
     * clean-stage signals for the NON-batch slice (doc_id %
     * IncrementalBatchMod != 0), bucketed by doc_id, plus the benchmark
@@ -244,7 +242,7 @@ object Corpus {
         .filter(col("doc_id") % Dedup.IncrementalBatchMod =!= 0)
       S.writeBucketed(
         docSignals(spark, dir, corpusDocs, spark.table(table + "_bench")),
-        table, "doc_id", StateBuckets)
+        table, "doc_id", S.indexBuckets(spark))
     }
   }
 
@@ -257,7 +255,7 @@ object Corpus {
     val table = "sig_idx_inc_" +
       S.nameHash(s"$dir\n$fp\nM=${Dedup.IncrementalBatchMod}")
     S.ensureIndex(spark, table)(
-      graft.sources.IndexSink.writeSignatureIndex(spark, dir, table, StateBuckets))
+      graft.sources.IndexSink.writeSignatureIndex(spark, dir, table, S.indexBuckets(spark)))
   }
 
   /** Pay-at-ingest corpus↔corpus near-dup PAIRS (r14): the stored slice's

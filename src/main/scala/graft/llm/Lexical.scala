@@ -308,9 +308,6 @@ object Lexical {
       s"$dir\n${graft.sources.BucketedSink.contentFingerprint(
         Seq(s"$dir/documents.parquet"))}\nlayout=bucketed-v1")
 
-  /** Bucket count for the postings table (the BucketedSink rule). */
-  private val PostBuckets = 32
-
   /** Build (once) the persisted lexical index for `dir`'s corpus:
     * `<t>` = the doc_id-bucketed postings (doc_id, term, len, tf),
     * `<t>_df` = per-term document frequencies, `<t>_stats` = the 1-row
@@ -334,8 +331,8 @@ object Lexical {
   def writeLexIndexOf(docs0: DataFrame, table: String): Unit = {
     val spark = docs0.sparkSession
     graft.sources.BucketedSink.rebuildIndex(spark, table) {
-      graft.sources.BucketedSink.writeBucketed(postingsOf(docs0), table,
-        "doc_id", PostBuckets, sortCols = Seq("doc_id", "term"))
+      graft.sources.BucketedSink.writeBucketed(postingsOf(docs0), table, "doc_id",
+        graft.sources.BucketedSink.indexBuckets(spark), sortCols = Seq("doc_id", "term"))
       spark.table(table).groupBy(col("term")).agg(count(lit(1)).as("df"))
         .write.format("parquet").saveAsTable(table + "_df")
       statsOf(docs0).write.format("parquet").saveAsTable(table + "_stats")
@@ -875,8 +872,8 @@ object Lexical {
   def writeLexPosIndexOf(docs0: DataFrame, table: String): Unit = {
     val spark = docs0.sparkSession
     graft.sources.BucketedSink.rebuildIndex(spark, table) {
-      graft.sources.BucketedSink.writeBucketed(ppostOf(docs0), table,
-        "doc_id", PostBuckets, sortCols = Seq("doc_id", "pos"))
+      graft.sources.BucketedSink.writeBucketed(ppostOf(docs0), table, "doc_id",
+        graft.sources.BucketedSink.indexBuckets(spark), sortCols = Seq("doc_id", "pos"))
       spark.table(table).select(col("doc_id"), col("term")).distinct()
         .groupBy(col("term")).agg(count(lit(1)).as("df"))
         .write.format("parquet").saveAsTable(table + "_df")

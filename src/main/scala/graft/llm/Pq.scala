@@ -340,9 +340,6 @@ object Pq {
   private def dropLegacy(spark: SparkSession, dir: String): Unit =
     legacyTablesFor(dir).foreach(graft.sources.BucketedSink.dropIndex(spark, _))
 
-  /** Bucket count for the codes table (the BucketedSink 2-3×-cores rule). */
-  private val CodesBuckets = 32
-
   /** Build a PQ pair from a FRAME (ingest pipelines index frames, not
     * dirs): train + store the codebook AND the coarse IVF centroids
     * (`_cents`, r10 — pinned at build like the codebook, so home cells and
@@ -377,7 +374,8 @@ object Pq {
       .write.format("parquet").saveAsTable(centTable)
     graft.sources.BucketedSink.writeBucketed(
       encodeWithCells(v, spark.table(cbTable), spark.table(centTable)),
-      table, "vec_id", CodesBuckets, sortCols = Seq("vec_id", "m"))
+      table, "vec_id", graft.sources.BucketedSink.indexBuckets(spark),
+      sortCols = Seq("vec_id", "m"))
   }
 
   /** (vec_id, m, code, cell): the stored-codes layout — PQ codes from the

@@ -95,13 +95,12 @@ object AnnIndexSink {
     BucketedSink.compactTombstones(spark, table, "vec_id")
 
   /** Idempotent build: write the index only if this dataset's table is
-    * missing; returns the table name. Bucket count follows the BucketedSink
-    * sizing rule (2-3x total cores).
+    * missing; returns the table name. Bucket count follows the
+    * BucketedSink rule (`indexBuckets`: the session's shuffle partitions).
     */
-  def ensureEmbeddingIndex(spark: SparkSession, dir: String,
-                           buckets: Int = 32): String = {
+  def ensureEmbeddingIndex(spark: SparkSession, dir: String): String = {
     val table = tableFor(dir)
     BucketedSink.ensureIndex(spark, table)(
-      writeEmbeddingIndex(spark, dir, table, buckets))
+      writeEmbeddingIndex(spark, dir, table, BucketedSink.indexBuckets(spark)))
   }
 }

@@ -16,10 +16,21 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * At 100 TB the write is one full shuffle paid once; every subsequent run
   * of the 19-rule pipeline, the representative-row window, fail-open key
   * aggregation, or a co-bucketed join then runs exchange-free. Bucket count
-  * is chosen like shuffle partitions: 2-3× total cores, sized so one bucket
-  * fits an executor's working memory.
+  * is chosen like shuffle partitions; a persisted serving index takes the
+  * building session's shuffle-partition count (`indexBuckets`).
   */
 object BucketedSink {
+
+  /** Bucket count of a persisted index built in `spark`: the session's
+    * `spark.sql.shuffle.partitions` — the core count locally (GraftSession),
+    * cores × executors on a cluster. Every read scans the index as one task
+    * per bucket, so a bucket count above the parallelism only adds task
+    * waves, files opened per probe and files written per append; one bucket
+    * would serialize the scan. Answers do not depend on the count: reads
+    * join on stored columns, and compaction keeps the stored spec.
+    */
+  def indexBuckets(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** Write `df` as a bucketed (optionally bucket-sorted) managed parquet
     * table. `saveAsTable` is required — bucket metadata lives in the

@@ -17,8 +17,9 @@ import graft.llm.Dedup
   * At 100 TB this is the difference between re-shuffling the multi-TB
   * signature table every morning and shuffling only the new crawl: the
   * bucket layout is the one shuffle, paid at index-build time, amortized
-  * over every probe after it. Bucket count follows the BucketedSink
-  * sizing rule (2-3x total cores, one bucket per executor working set).
+  * over every probe after it. The full-corpus index's bucket count
+  * follows the BucketedSink rule (`indexBuckets`: the building session's
+  * shuffle partitions).
   *
   * Rebuild cadence: the index table is append-friendly (new batches union
   * in by writing to the same bucket scheme); a full rewrite is only needed
@@ -79,13 +80,12 @@ object IndexSink {
     * bands per run: at 100 TB the signature computation is the dominant
     * dedup cost, and this pays it once.
     */
-  def ensureFullSignatureIndex(spark: SparkSession, dir: String,
-                               buckets: Int = 32): String = {
+  def ensureFullSignatureIndex(spark: SparkSession, dir: String): String = {
     val fp = BucketedSink.contentFingerprint(Seq(s"$dir/documents.parquet"))
     val table = "sig_idx_full_" + BucketedSink.nameHash(s"$dir\n$fp")
     BucketedSink.ensureIndex(spark, table) {
       val sigs = Dedup.minhashSignatures(spark, dir).withColumn("band_key", bandKey)
-      BucketedSink.writeBucketed(sigs, table, "band_key", buckets)
+      BucketedSink.writeBucketed(sigs, table, "band_key", BucketedSink.indexBuckets(spark))
     }
   }
 

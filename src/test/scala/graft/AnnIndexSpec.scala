@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.llm.Ann
-import graft.sources.AnnIndexSink
+import graft.llm.{Ann, Lexical}
+import graft.sources.{AnnIndexSink, BucketedSink}
 
 /** The persisted ANN serving index: probes of the stored bucket-keyed table
   * must match the recompute operators (ann_lsh / ann_lsh_multiprobe)
@@ -188,6 +188,37 @@ class AnnIndexSpec extends SparkSpecBase {
     val t2 = AnnIndexSink.ensureEmbeddingIndex(spark, "/root/testdata/sf0.01")
     assert(t1 != t2, "two datasets shared one index table")
     assert(spark.catalog.tableExists(t1) && spark.catalog.tableExists(t2))
+  }
+
+  test("a serving read's analysed plan stays a few hundred expression nodes") {
+    // the query side's bucket id is computed per read; as a literal sign
+    // chain it was ~3,000 nodes that analysis re-walked on every read
+    import spark.implicits._
+    val tbl = AnnIndexSink.ensureEmbeddingIndex(spark, sfDir)
+    val q = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
+      .orderBy("vec_id").limit(10).as[(Long, Seq[Float])].collect().toSeq
+      .toDF("vec_id", "embedding")
+    val plan = Ann.annTopkForQueries(spark, tbl, q).queryExecution.analyzed
+    val nodes = plan.flatMap(_.expressions).map(_.collect { case e => e }.size).sum
+    assert(nodes < 300, s"annTopkForQueries analyses $nodes expression nodes")
+  }
+
+  test("index bucket count is the session's shuffle partitions; an explicit count wins") {
+    def buckets(t: String): Int = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
+      .bucketSpec.get.numBuckets
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val dir = tempCopyOf(sfDir)
+    try {
+      val ann = AnnIndexSink.ensureEmbeddingIndex(spark, dir)
+      val lex = Lexical.ensureLexIndex(spark, dir)
+      assert(buckets(ann) == parts && buckets(lex) == parts)
+      Seq(ann, lex).foreach(BucketedSink.dropIndex(spark, _))
+    } finally deleteTree(dir)
+    val tbl = "ann_emb_idx_explicit_case"
+    AnnIndexSink.writeEmbeddingIndexOf(Tables.embeddings(spark, sfDir), tbl, buckets = 8)
+    assert(parts != 8 && buckets(tbl) == 8)
+    BucketedSink.dropIndex(spark, tbl)
   }
 
   test("ann_knn_graph: valid degree/ranks, refinement monotonically lifts exact recall") {

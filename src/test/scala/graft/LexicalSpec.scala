@@ -396,6 +396,22 @@ class LexicalSpec extends SparkSpecBase {
       "persisted lexical probe diverged from the live retrieval")
   }
 
+  test("persisted index probe rows do not depend on the bucket count") {
+    val dir = tempCopyOf(sfDir)
+    try {
+      def probeAt(buckets: Int): Set[String] =
+        withSQLConf("spark.sql.shuffle.partitions" -> buckets.toString) {
+          val t = Lexical.ensureLexIndex(spark, dir)
+          assert(spark.sessionState.catalog
+            .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
+            .bucketSpec.map(_.numBuckets).contains(buckets))
+          try rows(Lexical.lexicalIndexProbe(spark, dir)) finally BucketedSink.dropIndex(spark, t)
+        }
+      val one = probeAt(1)
+      assert(one.nonEmpty && one === probeAt(32))
+    } finally deleteTree(dir)
+  }
+
   test("append parity under pinned stats: half-build + append == full tokenize") {
     val tbl = "lex_idx_lc_append"
     dropIdx(tbl)

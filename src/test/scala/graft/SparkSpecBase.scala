@@ -20,6 +20,16 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     out.toString
   }
 
+  /** Run `f` with the given session confs set, restoring them after. */
+  def withSQLConf[T](kv: (String, String)*)(f: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
+
   def deleteTree(path: String): Unit = {
     import scala.jdk.CollectionConverters._
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))

@@ -4,10 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import graft.functions.{GraftExtensions, VecDot, VectorOps}
+import graft.llm.Ann
 
 /** VecDot: the native codegen'd dot product must be bit-identical to the
   * composable HOF formulation it replaces (a left-to-right fold in the
-  * accumulator type), for each element type it accepts.
+  * accumulator type), for each element type it accepts. PlaneProj: the
+  * native hyperplane projection must be bit-identical to the literal sign
+  * chain it replaces, nulls and short arrays included.
   */
 class VectorOpsSpec extends SparkSpecBase {
 
@@ -40,15 +43,6 @@ class VectorOpsSpec extends SparkSpecBase {
   private def hofDot(e: Elem)(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast(e.acc) * y.cast(e.acc)),
       lit(0).cast(e.acc), (acc, v) => acc + v)
-
-  private def withSQLConf[T](kv: (String, String)*)(f: => T): T = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
 
   // local frames would otherwise be projected at optimization time,
   // interpreted, in both runs below
@@ -149,6 +143,98 @@ class VectorOpsSpec extends SparkSpecBase {
       for (rows <- Seq(compiled, interpreted, ref)) {
         assert(rows.size == 3)
         assert(rows.forall(_.isNullAt(0)), e.sql)
+      }
+    }
+  }
+
+  // ---------------------------------------------------------------------
+  // PlaneProj: the ±1 hyperplane projection against the literal chain it
+  // replaced — Σ_d element_at(v, d + 1)·sign(j, d), folded left to right
+  // from the first term — which lives on here as the reference only.
+  // ---------------------------------------------------------------------
+
+  /** The md5-derived sign, re-derived independently of Ann.planeSign. */
+  private def sign(j: Int, d: Int): Int = {
+    val hex = java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$j:$d".getBytes("UTF-8")).map("%02x".format(_)).mkString
+    if ((Integer.parseInt(hex.substring(0, 1), 16) & 1) == 1) 1 else -1
+  }
+  private def chainProj(v: Column, j: Int): Column =
+    (0 until Ann.Dim).map(d => element_at(v, d + 1).cast("double") * sign(j, d)).reduce(_ + _)
+  private def chainBucket(v: Column): Column =
+    (0 until Ann.NumPlanes).map { j =>
+      when(chainProj(v, j) > 0, lit(1L << j)).otherwise(0L)
+    }.reduce(_ + _)
+
+  /** Random Dim-wide float vectors plus the edge rows: ±0.0 elements, an
+    * all-zero and an all-negative-zero vector, a null array, a null
+    * element, and an array longer than Dim (only its first Dim count). */
+  private def projRows: DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(17)
+    def vec(): Seq[Option[Float]] = Seq.fill(Ann.Dim)(Some(rnd.nextFloat() * 2 - 1))
+    val zeros = vec().zipWithIndex.map { case (x, i) =>
+      if (i % 3 == 0) Some(0.0f) else if (i % 3 == 1) Some(-0.0f) else x }
+    val rows: Seq[Option[Seq[Option[Float]]]] =
+      Seq.fill(300)(Some(vec())) ++ Seq(
+        Some(zeros),
+        Some(Seq.fill(Ann.Dim)(Some(0.0f))),
+        Some(Seq.fill(Ann.Dim)(Some(-0.0f))),
+        None,
+        Some(vec().updated(17, None)),
+        Some(vec().updated(0, None)),
+        Some(vec() ++ vec()))
+    rows.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "v")
+  }
+
+  private def bits(r: Row, i: Int): Option[Long] =
+    if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(i)))
+
+  test("PlaneProj matches the literal sign chain bit-for-bit, compiled and interpreted") {
+    for (j <- Seq(0, 5, Ann.ReducePlaneBase + 3)) {
+      val df = projRows
+      val (compiled, interpreted) = compiledAndInterpreted(
+        df.select(col("id"), VectorOps.planeProj(col("v"), j, Ann.Dim)))
+      val want = df.select(col("id"), chainProj(col("v"), j)).collect()
+        .map(r => r.getLong(0) -> bits(r, 1)).toMap
+      assert(want.values.count(_.isEmpty) == 3, "the null rows must project to NULL")
+      for (got <- Seq(compiled, interpreted)) {
+        assert(got.size == want.size)
+        got.foreach(r => assert(bits(r, 1) == want(r.getLong(0)), s"plane $j row ${r.getLong(0)}"))
+      }
+    }
+  }
+
+  test("lshBucket equals the literal chain's bucket id at 1, 8 and 16 planes") {
+    for (planes <- Seq(1, 8, 16)) GraftConfig.withInt("graft.ann.numPlanes", planes) {
+      val df = projRows
+      def ids(c: Column) = df.select(col("id"), c).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = ids(Ann.lshBucket(col("v")))
+      val want = ids(chainBucket(col("v")))
+      assert(got == want, s"numPlanes=$planes")
+      assert(want.values.toSet.size > 1, s"numPlanes=$planes: one bucket only (vacuous)")
+      assert(got(df.count() - 4) == 0L, "a null vector must land in bucket 0")
+    }
+  }
+
+  test("an array shorter than Dim fails like the chain's element_at under ANSI, else bucket 0") {
+    import spark.implicits._
+    val short = Seq((0L, Seq(0.5f, -0.25f, 1.0f)), (1L, Seq.empty[Float])).toDF("id", "v")
+    def failure(c: => Column): String = withSQLConf(NoLocalFold) {
+      intercept[Exception](short.select(c).collect()).toString
+    }
+    withSQLConf("spark.sql.ansi.enabled" -> "true") {
+      for (msg <- Seq(failure(Ann.lshBucket(col("v"))), failure(chainBucket(col("v")))))
+        assert(msg.contains("INVALID_ARRAY_INDEX_IN_ELEMENT_AT"), msg)
+    }
+    withSQLConf("spark.sql.ansi.enabled" -> "false") {
+      val (compiled, interpreted) = compiledAndInterpreted(short.select(
+        Ann.lshBucket(col("v")), chainBucket(col("v")),
+        VectorOps.planeProj(col("v"), 0, Ann.Dim), chainProj(col("v"), 0)))
+      for (got <- Seq(compiled, interpreted); r <- got) {
+        assert(r.getLong(0) == 0L && r.getLong(1) == 0L)
+        assert(r.isNullAt(2) && r.isNullAt(3))
       }
     }
   }
