@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The library's user-facing session factory: one place for the
-  * engine-recommended configuration that Bench/Verify/specs previously
-  * each duplicated, plus the `GraftExtensions` registration that gives
+  * engine-recommended configuration that the mains, the specs and
+  * perfbench share, plus the `GraftExtensions` registration that gives
   * SQL users the native functions under their `graft_*` names (the dot
   * kernels, the tokenizers and the bloom bridge; Scala callers build the
   * same expressions through `graft.functions` in any session).

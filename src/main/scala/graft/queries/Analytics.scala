@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import graft.Tables
 
 /** Headline analytics queries (SURVEY.md §2.E). These exercise the engine's
-  * core scan/agg/join/window paths and double as the bench headliners.
+  * core scan/agg/join/window paths.
   *
   * Scale posture: aggregations get automatic map-side partial combine,
   * dimension tables (`region`, `nation`, small `customer`) are broadcast

@@ -24,12 +24,6 @@ object TempDirs {
     p
   }
 
-  /** Delete a scratch dir eagerly (after q.stop()) and unregister it. */
-  def release(p: java.nio.file.Path): Unit = {
-    deleteRecursively(p)
-    registered.remove(p)
-  }
-
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     try {
       if (java.nio.file.Files.exists(p)) {

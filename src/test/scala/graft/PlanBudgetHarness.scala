@@ -66,8 +66,9 @@ object PlanBudgetHarness {
   }
 
   /** Pre-build the persisted-index tables some queries serve from, so the
-    * measured runs see a warm catalog (the pay-at-ingest convention Bench
-    * uses) and counts don't depend on whether a previous suite built them.
+    * measured runs see a warm catalog (pay-at-ingest: an index is built
+    * once at ingest and never counted against the queries that serve from
+    * it) and counts don't depend on whether a previous suite built them.
     */
   def warmPersistedIndexes(spark: SparkSession, sfDir: String): Unit = {
     graft.sources.AnnIndexSink.ensureEmbeddingIndex(spark, sfDir)

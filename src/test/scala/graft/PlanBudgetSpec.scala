@@ -434,4 +434,18 @@ class PlanBudgetSpec extends SparkSpecBase {
       s"add byte budgets for: ${missing.toSeq.sorted.mkString(", ")} " +
         "(observe with tools.PlanBudgetProbe)")
   }
+
+  // tools/compare_oracle.py compares only the queries named in Verify's
+  // oracle_sql.json, so a catalog query without an oracle would go
+  // unchecked without anyone noticing. Runs no Spark job.
+  test("every catalog query has a non-blank DuckDB oracle, and every oracle a query") {
+    val queries = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql
+    val noOracle = queries -- oracles.keySet
+    val noQuery = oracles.keySet -- queries
+    val blank = oracles.collect { case (n, sql) if sql.trim.isEmpty => n }
+    assert(noOracle.isEmpty, s"no oracle for: ${noOracle.toSeq.sorted.mkString(", ")}")
+    assert(noQuery.isEmpty, s"oracle without a query: ${noQuery.toSeq.sorted.mkString(", ")}")
+    assert(blank.isEmpty, s"blank oracle for: ${blank.toSeq.sorted.mkString(", ")}")
+  }
 }

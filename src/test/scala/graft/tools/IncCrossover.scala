@@ -10,8 +10,8 @@ package graft.tools
   * amplified corpus (AmpData, the FkShapes shape-vs-shape method), batch
   * fractions 1/M for M in {5, 20, 100} (100 ≈ the realistic "1% of the
   * corpus arrives today"), state builds timed separately (pay-at-ingest,
-  * excluded from the query number exactly like the persisted-index
-  * warmups in Bench), query = warmup + best-of-2.
+  * excluded from the query number: persisted state is paid for once at
+  * ingest, not per query), query = warmup + best-of-2.
   *
   * Decomposition the output supports: query(M) ≈ fixed + batchShare(M) ·
   * textCost — two M points give the fixed intercept; `full` gives the

@@ -8,8 +8,9 @@ package graft.tools
   * net that catches it without a judge.
   *
   * Method: per (query, sf): one untimed warmup run then best-of-2 timed
-  * runs (noop write, caches cleared between queries — Bench's
-  * conventions). Persisted indexes are pre-built per sf (pay-at-ingest).
+  * runs, each writing to the noop sink so every column is evaluated, with
+  * the capex cache and barriers cleared between queries. Persisted indexes
+  * are pre-built per sf (pay-at-ingest) and never timed.
   * Output: one line per measurement, `SCALE <query> <sf> <seconds>`.
   *
   * Run: sbt 'Test/runMain graft.tools.ScalingProbe [query...]'

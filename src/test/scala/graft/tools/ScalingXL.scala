@@ -28,7 +28,8 @@ import graft.Tables
   * planted exact duplicates. Other tables copy as-is.
   *
   * Output: one line per measurement, `SCALEXL <query> <amp> <seconds>`
-  * (warmup + best-of-2, Bench's conventions) — appended to SCALING.md's
+  * (one untimed warmup run, then best-of-2 noop-sink runs with caches
+  * cleared between queries) — appended to SCALING.md's
   * top-decade section by hand with exponents vs the sf0.1 row.
   *
   * Run: sbt 'Test/runMain graft.tools.ScalingXL [amp] [query...]'
