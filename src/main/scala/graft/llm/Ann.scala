@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.operators.Relational.topK
+import graft.operators.Relational.{lookupJoin, topK}
 
 /** Similarity search over the embeddings table (SURVEY.md §2.D, D5-D7).
   *
@@ -373,9 +373,9 @@ object Ann {
     * append-built tables to prove the incremental-ingest layout).
     */
   private[graft] def probeIndexTable(spark: SparkSession, table: String): DataFrame = {
-    // serving view: stored rows minus tombstoned vec_ids (bounded
-    // broadcast anti-join — partitioning-preserving, so the bucket
-    // layout still feeds the candidate join exchange-free)
+    // serving view: stored rows minus tombstoned vec_ids (a row filter
+    // over the driver-held takedown list — partitioning-preserving, so
+    // the bucket layout still feeds the candidate join exchange-free)
     val idx = graft.sources.BucketedSink.readServing(spark, table, "vec_id")
     val q = idx.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"), col("bucket"))
@@ -387,11 +387,16 @@ object Ann {
   /** Warm-index top-k for an ARRIVING query-vectors frame — the streaming
     * vector-serving form's per-micro-batch core (E7's annTopkStream, the
     * lexTopkForQueries twin): the arriving embedding's bucket is computed
-    * STATELESSLY through the same baked hyperplane expression the stored
-    * index was built with, then the candidate join / dot fold / tie-break
-    * tail is the D53 probe's verbatim — so an arrived vector that is
-    * already indexed retrieves exactly its ann_index_probe rows (the
-    * parity the specs pin). Self-matches excluded by vec_id.
+    * STATELESSLY through the same hyperplane expression the stored index
+    * was built with, then the candidate join / dot fold / tie-break tail
+    * is the D53 probe's verbatim — so an arrived vector that is already
+    * indexed retrieves exactly its ann_index_probe rows (the parity the
+    * specs pin). Self-matches excluded by vec_id.
+    *
+    * The query side is collected when this is called and rides in the
+    * plan (`Relational.lookupJoin` on bucket), so the read runs no
+    * broadcast job: a local frame (a request batch) collects with no job,
+    * a distributed one (a `foreachBatch` micro-batch) with one.
     */
   private[graft] def annTopkForQueries(spark: SparkSession, table: String,
                                        queryVecs: DataFrame): DataFrame = {
@@ -401,7 +406,7 @@ object Ann {
       .withColumn("bucket", lshBucket(col("qv")))
     val c = idx.select(col("vec_id").as("nb_id"), col("embedding").as("cv"),
       col("bucket"))
-    broadcast(q).join(c, Seq("bucket")).filter(col("q_id") =!= col("nb_id"))
+    lookupJoin(c, "bucket", q).filter(col("q_id") =!= col("nb_id"))
       .transform(cosTop5())
   }
 

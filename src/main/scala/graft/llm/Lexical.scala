@@ -1,10 +1,13 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.Tables
 import graft.functions.roundScaled
-import graft.operators.Relational.{saltedTopK, topK}
+import graft.operators.Relational.{lookupJoin, saltedTopK, topK}
 
 /** Lexical (keyword) retrieval and lexical×vector hybrid fusion
   * (SURVEY.md §2.D, D91/D92) — the query→document serving family the
@@ -122,12 +125,13 @@ object Lexical {
     docs0.select(size(TextOps.toks(col("text"))).as("l"))
       .agg(count(lit(1)).as("n"), coalesce(sum(col("l")), lit(0L)).as("total"))
 
-  /** Rare-first query-term selection shared by every scorer: the ≤
+  /** Rare-first query-term selection shared by the batch scorers: the ≤
     * Q·vocab(query docs) (q_id, term) frame joins df and keeps each
     * query's QueryTerms rarest terms — contract-bounded by the query docs'
-    * own vocabularies (the embed_pca window class).
+    * own vocabularies (the embed_pca window class). The serving read makes
+    * the same cut on the driver (`rareFirst`).
     */
-  private def querySelOf(qterms: DataFrame, dfreq: DataFrame): DataFrame =
+  private[graft] def querySelOf(qterms: DataFrame, dfreq: DataFrame): DataFrame =
     topK(broadcast(qterms).join(dfreq, Seq("term")), Seq(col("q_id")),
       Seq(col("df").asc, col("term").asc), QueryTerms, "tr")
       .select(col("q_id"), col("term"), col("df"))
@@ -143,7 +147,9 @@ object Lexical {
     */
   private[graft] def scoredCandidatesOf(post: DataFrame, dfreq: DataFrame,
                                         stats: DataFrame): DataFrame =
-    scoreQsel(post, querySelOf(queryTermsOf(post), dfreq), stats)
+    scoreOf(post.join(broadcast(querySelOf(queryTermsOf(post), dfreq)), Seq("term"))
+      .filter(col("doc_id") =!= col("q_id"))
+      .crossJoin(broadcast(stats)))
 
   /** The TEXTBOOK log-idf BM25 scorer (double ln — transcendental, so
     * spec-side only, never an oracle surface): the ground truth the
@@ -198,6 +204,20 @@ object Lexical {
       .select(col("q_id"), col("nb_id"), col("rank"),
         roundScaled(col("s_e10").cast("double") / 1e10, 6).as("score"))
 
+  /** querySelOf's rare-first cut on the driver, for held query terms and
+    * df: each query's (q, term) rows that have a df, the QueryTerms
+    * smallest by (df, term) — terms in Spark's UTF-8 binary order, the
+    * order the window sorts by — as (q, term, df). Duplicate rows keep
+    * their multiplicity, as in the join.
+    */
+  private[graft] def rareFirst[Q](qterms: Seq[(Q, String)],
+                                  dfreq: Map[String, Long]): Seq[(Q, String, Long)] = {
+    val order = Ordering.by((r: (Q, String, Long)) => (r._3, UTF8String.fromString(r._2)))(
+      Ordering.Tuple2(Ordering.Long, Ordering.fromLessThan[UTF8String](_.compareTo(_) < 0)))
+    qterms.flatMap { case (q, t) => dfreq.get(t).map(d => (q, t, d)) }
+      .groupBy(_._1).values.toSeq.flatMap(_.sorted(order).take(QueryTerms))
+  }
+
   /** Warm-index top-k for an ARRIVING query-docs frame — the streaming
     * serving form's per-micro-batch core (E7's lexTopkStream): identical
     * scoring and ranking to D91b's probe, but query terms come from
@@ -206,32 +226,46 @@ object Lexical {
     * retrieves exactly its D91b rows — the parity LexicalSpec pins)
     * rare-first against the STORED df, scored under the STORED stats.
     *
-    * OOV contract (r12): the inner join against the PINNED `_df` drops
-    * query terms absent from the build-time vocabulary — a query doc
-    * whose terms are entirely post-build retrieves zero rows. Documented
-    * (rather than left-joined into a QC column) because the pinned-df
-    * behavior IS the segment-based-engine semantics the index family
-    * exports; the streaming wrapper (StreamOps.lexTopkStream) carries
-    * the operational guidance.
+    * Every small side is held on the driver, so the read's only jobs are
+    * the postings scan and its ranking: the query docs' term sets are
+    * collected when this is called (no job for a local frame, one for a
+    * `foreachBatch` micro-batch), the rare-first cut runs over the held
+    * `_df` (`rareFirst`; the held `_df` is vocabulary-sized), the
+    * selected (q_id, term, df) rows join the postings as a plan literal
+    * (`Relational.lookupJoin`) and the held `_stats` become two long
+    * literals.
+    *
+    * OOV contract (r12): query terms absent from the PINNED `_df` are
+    * dropped — a query doc whose terms are entirely post-build retrieves
+    * zero rows. Documented (rather than left-joined into a QC column)
+    * because the pinned-df behavior IS the segment-based-engine semantics
+    * the index family exports; the streaming wrapper
+    * (StreamOps.lexTopkStream) carries the operational guidance.
     */
   private[graft] def lexTopkForQueries(spark: SparkSession, table: String,
                                        queryDocs: DataFrame): DataFrame = {
-    val post = graft.sources.BucketedSink.readServing(spark, table, "doc_id")
-    val qsel = querySelOf(queryDocs.select(col("doc_id").as("q_id"),
-        explode(array_distinct(TextOps.toks(col("text")))).as("term")),
-      spark.table(table + "_df"))
-    rankTail(scoreQsel(post, qsel, spark.table(table + "_stats")))
+    val S = graft.sources.BucketedSink
+    val post = S.readServing(spark, table, "doc_id")
+    val terms = queryDocs.select(col("doc_id"), array_distinct(TextOps.toks(col("text"))))
+      .collect().toSeq.filterNot(_.isNullAt(0))
+      .flatMap(r => r.getSeq[String](1).map(t => (r.get(0), t)))
+    val dfreq = S.heldRows(spark, table + "_df").map(r => r.getString(0) -> r.getLong(1)).toMap
+    val qsel = spark.createDataFrame(
+      rareFirst(terms, dfreq).map { case (q, t, d) => Row(q, t, d) }.asJava,
+      StructType(Seq(queryDocs.schema("doc_id").copy(name = "q_id"),
+        StructField("term", StringType), StructField("df", LongType))))
+    val stats = S.heldRows(spark, table + "_stats").head
+    rankTail(scoreOf(lookupJoin(post, "term", qsel)
+      .filter(col("doc_id") =!= col("q_id"))
+      .withColumn("n", lit(stats.getLong(0)))
+      .withColumn("total", lit(stats.getLong(1)))))
   }
 
-  /** The scoring fold over a querySelOf (q_id, term, df) frame — the
-    * query docs' own postings (scoredCandidatesOf) or arriving docs
-    * (lexTopkForQueries).
+  /** Integer RSJ-ratio score per (q_id, nb_id) over candidate rows
+    * carrying q_id, doc_id, df, tf, len and the stats n, total.
     */
-  private def scoreQsel(post: DataFrame, qsel: DataFrame,
-                        stats: DataFrame): DataFrame =
-    post.join(broadcast(qsel), Seq("term"))
-      .filter(col("doc_id") =!= col("q_id"))
-      .crossJoin(broadcast(stats))
+  private def scoreOf(cand: DataFrame): DataFrame =
+    cand
       .withColumn("idf_e4",
         expr("(10000 * (2 * (n - df) + 1)) div (2 * df + 1)"))
       .withColumn("tfsat_e6",
@@ -504,7 +538,7 @@ object Lexical {
     SELECT DISTINCT q_id, nb_id FROM hits"""
 
   /** Retract documents from the index: tombstones on doc_id, excluded by
-    * every probe via the bounded broadcast anti-join in
+    * every probe via the driver-held takedown filter in
     * `BucketedSink.readServing` (the deletePqCodes contract).
     */
   def deleteLexDocs(spark: SparkSession, table: String, docIds: DataFrame): Unit =

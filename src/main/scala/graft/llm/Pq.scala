@@ -493,7 +493,7 @@ object Pq {
   }
 
   /** Retract vectors from the compressed serving pair: tombstones on
-    * vec_id, excluded by every probe via the bounded broadcast anti-join
+    * vec_id, excluded by every probe via the driver-held takedown filter
     * in `BucketedSink.readServing` — codes-side layout and exchange count
     * unchanged (the AnnIndexSink delete contract; PqSpec pins
     * delete ≡ serve-without).
@@ -518,7 +518,7 @@ object Pq {
     * pay-at-ingest path a daily ANN deployment actually runs. Reads the
     * codes through the tombstone-aware serving view (r9): deleted vectors
     * stop being nominated at the shortlist, so they can never re-surface
-    * as neighbors, and the broadcast anti-join adds no exchange.
+    * as neighbors, and the takedown filter adds no exchange.
     */
   def pqIndexProbe(spark: SparkSession, dir: String): DataFrame =
     servePqFrom(vecs(spark, dir), ensurePqIndex(spark, dir))

@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.classic.GraftPlanBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{StructField, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, MapType, StructField, StructType,
+  TimestampNTZType, TimestampType}
 
 /** Generic relational operators Spark lacks as built-ins, composed
   * Spark-first from declarative plans (no custom physical operators needed —
@@ -38,6 +42,29 @@ object Relational {
                                 k: Int, salt: Column, rank: String = "rank"): DataFrame =
     topK(topK(df.withColumn("salt", salt), by :+ col("salt"), order, k, rank + "1"),
       by, order, k, rank).drop("salt", rank + "1")
+
+  /** Inner equi-join of `df` with a bounded frame `small` held on the
+    * driver, on the atomic column `key`: `df`'s columns, then `small`'s
+    * other columns. `small` is collected once (a projection over a local
+    * relation folds into one, so its collect runs no job) and rides in the
+    * plan as ONE map literal from key to the array of its rows; each `df`
+    * row inlines its key's array, so a missing or null key yields no row
+    * and duplicates multiply as in a join. The join runs inside
+    * `df`'s own stage: no broadcast job, no exchange, and `df`'s output
+    * partitioning is kept. The literal ships with every task and each
+    * lookup scans its keys, so `small` must be request-sized.
+    */
+  private[graft] def lookupJoin(df: DataFrame, key: String, small: DataFrame): DataFrame = {
+    val k = small.schema.fieldIndex(key)
+    val rest = StructType(small.schema.fields.filterNot(_.name == key))
+    val mapType = MapType(small.schema(key).dataType, ArrayType(rest, containsNull = false),
+      valueContainsNull = false)
+    val byKey = small.collect().toSeq.filterNot(_.isNullAt(k)).groupBy(_.get(k))
+      .map { case (kv, rs) => kv -> rs.map(r => Row.fromSeq(r.toSeq.patch(k, Nil, 1))) }
+    val rows = GraftPlanBridge.column(
+      Literal(CatalystTypeConverters.createToCatalystConverter(mapType)(byKey), mapType))
+    df.select(col("*"), inline(element_at(rows, col(key))))
+  }
 
   /** As-of join: for each left row, attach the payload of the latest right
     * row with the same key and `right.ts <= left.ts` (direction=backward,

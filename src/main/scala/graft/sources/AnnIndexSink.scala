@@ -78,7 +78,7 @@ object AnnIndexSink {
   /** Retract embeddings from the serving index (a real corpus takes
     * documents DOWN — an index that can only grow re-serves deleted
     * vectors as neighbors): record vec_ids as tombstones; every probe
-    * excludes them via the bounded broadcast anti-join in
+    * excludes them via the driver-held takedown filter in
     * `BucketedSink.readServing`, index-side bucket layout and exchange
     * count unchanged. Re-appending a tombstoned vec_id reinstates it
     * (`BucketedSink.appendIndex`); AnnIndexSpec/IndexTombstoneSpec pin

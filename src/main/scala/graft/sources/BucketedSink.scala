@@ -1,8 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
+import scala.collection.concurrent.TrieMap
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, TableIdentifier}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.classic.GraftPlanBridge
 import org.apache.spark.sql.functions.{broadcast, col}
 
 /** Bucketed parquet table sink — the production answer to the shuffles the
@@ -78,15 +81,18 @@ object BucketedSink {
 
   /** Record deletions against a persisted index: append the (single-column)
     * key frame to the index's tombstone table, creating it on first use.
-    * Idempotent under redelivery — already-recorded keys anti-join away, so
-    * a retried takedown batch appends nothing. Tombstones are the
-    * contract-bounded small side of every serving read (a takedown list,
-    * not a corpus), which is why `readServing` may broadcast them
-    * statically per the §5 bounded-side rule.
+    * The keys are stored in the index's own key type, so the serving
+    * filter compares like with like. Idempotent under redelivery —
+    * already-recorded keys anti-join away, so a retried takedown batch
+    * appends nothing. Tombstones are the contract-bounded small side of
+    * every serving read (a takedown list, not a corpus), which is why
+    * `readServing` may hold them on the driver.
     */
   def appendTombstones(spark: SparkSession, table: String, keys: DataFrame): Unit = {
     val tt = tombTableOf(table)
-    val k = keys.distinct()
+    val key = keys.columns.head
+    val k = keys.select(col(key).cast(spark.table(table).schema(key).dataType).as(key))
+      .distinct()
     ensureTable(spark, tt) {
       k.limit(0).write.format("parquet").saveAsTable(tt)
     }
@@ -94,31 +100,63 @@ object BucketedSink {
   }
 
   /** Serving view of a persisted index: the stored table minus its
-    * tombstones (broadcast anti-join on `keyCol`). A broadcast LeftAnti
-    * preserves the streamed side's output partitioning, so a downstream
-    * join on the bucket key still consumes the bucketed layout with NO
-    * index-side Exchange — deletion costs a bounded broadcast, never the
-    * layout (spec-proven by IndexTombstoneSpec). With no tombstone table
-    * the read is the plain bucketed scan, unchanged.
+    * tombstones, as the row filter `keyCol IS NULL OR NOT InSet(keyCol,
+    * tombstoned keys)` — the anti-join's semantics (a null key is never
+    * tombstoned, a null tombstone hides nothing) with the keys held on the
+    * driver (`heldRows`), so the read runs no tombstone job. The set is a
+    * reference object in the generated code, so a takedown does not
+    * recompile the read. A filter keeps the bucketed scan's output
+    * partitioning, so a downstream join on the bucket key still reads the
+    * bucketed layout with NO index-side Exchange (IndexTombstoneSpec).
+    * The takedown list is read when the view is built, so a frame built
+    * before a takedown does not see it. With no tombstone table, or an
+    * empty one, the read is the plain bucketed scan.
     */
   def readServing(spark: SparkSession, table: String, keyCol: String): DataFrame = {
     val tt = tombTableOf(table)
     val base = spark.table(table)
-    // catalog-only existence check: no Spark job on the serving path (an
-    // empty tombstone table broadcasts near-free, so the anti-join needs
-    // no emptiness probe; compaction DROPS the table, restoring the plain
-    // bucketed scan)
-    if (spark.catalog.tableExists(tt))
-      base.join(broadcast(spark.table(tt)), Seq(keyCol), "left_anti")
-    else base
+    // catalog-only existence check; compaction DROPS the tombstone table,
+    // restoring the plain bucketed scan
+    if (!spark.catalog.tableExists(tt)) return base
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(base.schema(keyCol).dataType)
+    val keys = heldRows(spark, tt).collect { case r if !r.isNullAt(0) => toCatalyst(r.get(0)) }
+    if (keys.isEmpty) base
+    else base.filter(col(keyCol).isNull ||
+      !GraftPlanBridge.column(InSet(GraftPlanBridge.expression(col(keyCol)), keys.toSet)))
+  }
+
+  /** Rows of the small tables a serving read needs whole (tombstones,
+    * lexical `_df` and `_stats`), by table name, with the file snapshot
+    * they were read from.
+    */
+  private val held = TrieMap.empty[String, (Seq[String], Seq[Row])]
+
+  /** The rows of a small table, held on the driver and re-read only when
+    * the file snapshot the session resolves for it (`inputFiles`, the
+    * files a scan of it would read) changes. Every Spark write, compaction
+    * and rebuild changes that snapshot, so a held value is never staler
+    * than the scan it replaces, and repeated reads of an unchanged table
+    * run no job. Only for tables bounded by contract (a takedown list,
+    * the vocabulary, one stats row): every row lives on the driver.
+    */
+  private[graft] def heldRows(spark: SparkSession, table: String): Seq[Row] = {
+    val t = spark.table(table)
+    val snapshot = t.inputFiles.toSeq.sorted
+    held.get(table) match {
+      case Some((s, rows)) if s == snapshot => rows
+      case _ =>
+        val rows = t.collect().toSeq
+        held.put(table, (snapshot, rows))
+        rows
+    }
   }
 
   /** Fold tombstones into the files: rewrite the index as survivors-only
     * under the SAME bucket spec (staging table + catalog rename — no
     * driver-side materialization, so the rewrite is one distributed job at
     * any scale), then drop the tombstone table. Run when the tombstone
-    * fraction makes the serving anti-join's broadcast non-trivial; until
-    * then deletion is O(takedown list). After compaction a previously
+    * list grows past what every serving read should hold on the driver
+    * and carry in its filter; until then deletion is O(takedown list). After compaction a previously
     * deleted key may be re-ingested (see the append contracts: while a key
     * is tombstoned, re-appending it is a no-op-or-hidden — compaction is
     * the reinstatement point).
@@ -233,12 +271,14 @@ object BucketedSink {
       .bucketSpec.getOrElse(throw new IllegalStateException(s"$table is not bucketed"))
 
   /** Drop an index: its table, every companion table and its tombstones,
-    * clearing orphaned warehouse directories under the same names.
+    * clearing orphaned warehouse directories under the same names and
+    * releasing their held rows.
     */
   def dropIndex(spark: SparkSession, table: String): Unit =
     ((table +: Companions.map(table + _)) :+ tombTableOf(table)).foreach { t =>
       if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE IF EXISTS `$t`")
       clearOrphan(spark, t)
+      held.remove(t)
     }
 
   /** The one overwrite contract: drop the whole index, then run `write`.

@@ -112,8 +112,8 @@ object IndexSink {
 
   /** Retract documents from the stored index (takedowns / robots
     * retractions): record their doc_ids as tombstones — every subsequent
-    * probe excludes them via `BucketedSink.readServing`'s bounded
-    * broadcast anti-join, with the index-side bucket layout (and so the
+    * probe excludes them via `BucketedSink.readServing`'s driver-held
+    * takedown filter, with the index-side bucket layout (and so the
     * probe's exchange count) unchanged. O(takedown list), no index
     * rewrite; fold in with `compact` when the list grows.
     */

@@ -459,9 +459,11 @@ object StreamOps {
     * query docs inside the horizon, never by candidates), and each
     * micro-batch ranks its arrived queries against the static index
     * through the exact batch probe plan (`Lexical.lexTopkForQueries`:
-    * broadcast query terms, candidate scan touching only the probed
-    * posting lists, salted two-phase top-k). Per-arrived-query output
-    * rows are byte-identical to the batch D91b probe — LexicalSpec pins
+    * the micro-batch's query terms collected to the driver — one job per
+    * micro-batch, the job their broadcast ran — and cut rare-first there,
+    * candidate scan touching only the probed posting lists, salted
+    * two-phase top-k). Per-arrived-query output rows are byte-identical
+    * to the batch D91b probe — LexicalSpec pins
     * parity, StreamingSkewSpec pins the redelivery burst + state ceiling.
     *
     * OUT-OF-VOCABULARY semantics (r12, documented like the positional
@@ -512,12 +514,14 @@ object StreamOps {
     * ranking forms do too). Same foreachBatch recipe: the streaming
     * graph carries ONLY the watermark + within-watermark query-vector
     * dedup, and each micro-batch ranks its arrivals through the exact
-    * batch D53 probe plan (`Ann.annTopkForQueries` — stateless baked
-    * hyperplane bucket for the arriving embedding, equality join into
-    * the bucketed index, codegen'd dot fold, top-5). Per-arrived-vector
-    * output rows are byte-identical to the batch probe; specs pin parity
-    * and the redelivery burst + state ceiling. Checkpoint convention as
-    * lexTopkStream: caller-provided or a JVM-exit-cleaned scratch dir.
+    * batch D53 probe plan (`Ann.annTopkForQueries` — the micro-batch's
+    * vectors collected to the driver with their hyperplane buckets, one
+    * job per micro-batch as their broadcast ran, and looked up by bucket
+    * inside the bucketed index scan, codegen'd dot fold, top-5).
+    * Per-arrived-vector output rows are byte-identical to the batch
+    * probe; specs pin parity and the redelivery burst + state ceiling.
+    * Checkpoint convention as lexTopkStream: caller-provided or a
+    * JVM-exit-cleaned scratch dir.
     */
   def annTopkStream(spark: SparkSession, indexTable: String, vecs: DataFrame,
                     tsCol: String, checkpoint: Option[String] = None)

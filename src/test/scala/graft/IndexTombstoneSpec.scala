@@ -9,8 +9,9 @@ import graft.sources.{AnnIndexSink, BucketedSink, IndexSink}
   * persisted serving index that can only grow re-serves deleted content.
   * These tests pin the r7 tombstone contract on BOTH persisted indexes:
   *  - probe-after-delete ≡ probe-of-a-rebuild-without-the-deleted-keys,
-  *  - the serving anti-join preserves the bucket layout (no new bucket
-  *    exchange — deletion costs a bounded broadcast, never a reshuffle),
+  *  - the serving view preserves the bucket layout (no new bucket
+  *    exchange — deletion costs a row filter, never a reshuffle), and
+  *    keeps the anti-join's null semantics,
   *  - deletion is idempotent under redelivery,
   *  - compaction folds tombstones into the files: same probe results,
   *    fewer physical rows, tombstone table gone, bucket layout intact,
@@ -81,6 +82,25 @@ class IndexTombstoneSpec extends SparkSpecBase {
       "rebuilt index does not serve like a fresh full build")
     drop(full, rebuilt)
     Checkpoints.releaseAll()
+  }
+
+  test("null keys: a null tombstone hides nothing, a null-keyed row is still served") {
+    val tbl = "null_key_tomb_case"
+    BucketedSink.dropIndex(spark, tbl)
+    import spark.implicits._
+    val data = Seq((Option(1L), "a"), (Option(2L), "b"), (Option.empty[Long], "c"))
+      .toDF("k", "v")
+    BucketedSink.writeBucketed(data, tbl, "k", 2)
+    def served = rows(BucketedSink.readServing(spark, tbl, "k"))
+    BucketedSink.appendTombstones(spark, tbl, Seq(Option.empty[Long]).toDF("k"))
+    assert(served == Set("1|a", "2|b", "null|c"), "a null tombstone hid rows")
+    BucketedSink.appendTombstones(spark, tbl, Seq(Option(2L)).toDF("k"))
+    assert(served == Set("1|a", "null|c"),
+      "a takedown beside a null tombstone must hide exactly its key")
+    // keys of another integral type are stored in the index's key type
+    BucketedSink.appendTombstones(spark, tbl, Seq(1).toDF("k"))
+    assert(served == Set("null|c"), "an int takedown did not hide a long key")
+    BucketedSink.dropIndex(spark, tbl)
   }
 
   test("compaction recovers a swap interrupted between the two renames") {
