@@ -415,9 +415,9 @@ object Lexical {
 
   /** The per-term contribution expression shared by the batch radius and
     * the streaming twin — idf_e4 · tfsat_e6 with the collection stats
-    * BAKED as literals (the codebook-literal pattern: 2 longs read once
-    * at plan time, so the hot path carries no stats join at all). Expects
-    * columns df, tf, len on the row.
+    * BAKED as literals (the codebook-literal pattern: 2 longs held on the
+    * driver by `BucketedSink.heldRows`, so the hot path carries no stats
+    * join at all). Expects columns df, tf, len on the row.
     */
   private[graft] def contribE10(n: Long, total: Long): org.apache.spark.sql.Column =
     expr(s"""((10000 * (2 * ($n - df) + 1)) div (2 * df + 1))
@@ -452,7 +452,7 @@ object Lexical {
     */
   def lexicalRadius(spark: SparkSession, dir: String): DataFrame = {
     val table = ensureLexIndex(spark, dir)
-    val st = spark.table(table + "_stats").head()
+    val st = graft.sources.BucketedSink.heldRows(spark, table + "_stats").head
     val (n, total) = (st.getLong(0), st.getLong(1))
     radiusHits(spark, table, n, total,
       radiusQsel(spark, table, n).unionByName(guardQsel(spark, table, n, total))
@@ -462,7 +462,7 @@ object Lexical {
   /** The first-NQueries radius form the streaming twin mirrors
     * (LexicalSpec pins lexRadiusStream ≡ this, pair-for-pair). */
   private[graft] def lexRadiusFromStore(spark: SparkSession, table: String): DataFrame = {
-    val st = spark.table(table + "_stats").head()
+    val st = graft.sources.BucketedSink.heldRows(spark, table + "_stats").head
     val (n, total) = (st.getLong(0), st.getLong(1))
     radiusHits(spark, table, n, total, radiusQsel(spark, table, n))
   }

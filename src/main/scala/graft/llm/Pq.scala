@@ -903,12 +903,13 @@ object Pq {
 
   /** The ADC distance as ONE stateless expression over (query embedding,
     * stored code array) — the stored codebook (≤ M×K rows, contract-
-    * bounded like the ≤26 BPE merges) collected once at plan build and
-    * baked in as map literals, so a STREAMING probe can score candidates
-    * with no aggregation state at all (the D32/BPE bake pattern applied to
-    * serving). Arithmetic is byte-identical to the batch scan: per
-    * subspace the same left-to-right double L2 fold cast to
-    * DECIMAL(28,10), the M terms summed exactly.
+    * bounded like the ≤26 BPE merges) held on the driver
+    * (`BucketedSink.heldRows`) and baked in as map literals, so a
+    * STREAMING probe can score candidates with no aggregation state at
+    * all (the D32/BPE bake pattern applied to serving). Arithmetic is
+    * byte-identical to the batch scan: per subspace the same
+    * left-to-right double L2 fold cast to DECIMAL(28,10), the M terms
+    * summed exactly.
     */
   private[graft] def adcBaked(spark: SparkSession, pairTable: String,
                               emb: Column, codes: Column): Column = {
@@ -916,12 +917,12 @@ object Pq {
     // by-name access: the bake must not couple to the codebook table's
     // physical column order (a reordered/repaired _cb would silently
     // select wrong centroids while the name-joining batch path stays right)
-    val byM = spark.table(pairTable + "_cb").collect()
+    val byM = graft.sources.BucketedSink.heldRows(spark, pairTable + "_cb")
       .map(r => (r.getAs[Int]("m"), r.getAs[Int]("code"),
         r.getSeq[Float](r.fieldIndex("cv")).toIndexedSeq))
       .groupBy(_._1)
     (0 until NumSubspaces).map { m =>
-      val entries = byM.getOrElse(m, Array.empty).sortBy(_._2)
+      val entries = byM.getOrElse(m, Seq.empty).sortBy(_._2)
       val cvMap = map(entries.flatMap { case (_, c, cv) =>
         Seq(lit(c), typedLit(cv)) }.toIndexedSeq: _*)
       val chosen = element_at(cvMap, element_at(codes, m + 1))
@@ -948,16 +949,17 @@ object Pq {
   /** Each query's NProbe-cell probe list as ONE stateless expression over
     * the embedding column (the adcBaked bake applied to the coarse
     * quantizer): the stored `_cents` rows (≤ NumCells — contract-bounded)
-    * collect once at plan build; per cell the cosine is the BATCH kernel
-    * over a literal centroid (Ann.cosToCentLit — bit-identical doubles to
-    * rankedAgainstCents over the same stored floats), and the rank is an
-    * array_sort over (−ccos, cell) structs — (ccos desc, cell asc), the
-    * family tie rule — sliced to NProbe. No window, no aggregation state:
+    * are held on the driver (`BucketedSink.heldRows`); per cell the
+    * cosine is the BATCH kernel over a literal centroid
+    * (Ann.cosToCentLit — bit-identical doubles to rankedAgainstCents
+    * over the same stored floats), and the rank is an array_sort over
+    * (−ccos, cell) structs — (ccos desc, cell asc), the family tie rule —
+    * sliced to NProbe. No window, no aggregation state:
     * a streaming micro-batch computes its probe list map-side.
     */
   private[graft] def probeCellsBaked(spark: SparkSession, pairTable: String,
                                      emb: Column): Column = {
-    val cents = spark.table(pairTable + "_cents").collect()
+    val cents = graft.sources.BucketedSink.heldRows(spark, pairTable + "_cents")
       .map(r => (r.getAs[Long]("cent_id"),
         r.getSeq[Float](r.fieldIndex("cv")).toIndexedSeq))
       .sortBy(_._1)

@@ -1,12 +1,15 @@
 package graft.sources
 
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, TableIdentifier}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.CatalystTypeConverters.{convertToCatalyst, convertToScala}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.classic.GraftPlanBridge
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Bucketed parquet table sink — the production answer to the shuffles the
   * capex pipeline pays on RequestNo and every repeated key join/window
@@ -60,7 +63,6 @@ object BucketedSink {
       val p = Paths.get(s)
       if (!Files.exists(p)) Seq(s"$s:absent")
       else if (Files.isDirectory(p)) {
-        import scala.jdk.CollectionConverters._
         val walk = Files.walk(p)
         try walk.iterator().asScala
           .filter(Files.isRegularFile(_))
@@ -79,31 +81,34 @@ object BucketedSink {
   /** Tombstone-table name for a persisted index table. */
   def tombTableOf(table: String): String = table + "_tomb"
 
-  /** Record deletions against a persisted index: append the (single-column)
-    * key frame to the index's tombstone table, creating it on first use.
-    * The keys are stored in the index's own key type, so the serving
-    * filter compares like with like. Idempotent under redelivery —
-    * already-recorded keys anti-join away, so a retried takedown batch
-    * appends nothing. Tombstones are the contract-bounded small side of
-    * every serving read (a takedown list, not a corpus), which is why
-    * `readServing` may hold them on the driver.
+  /** Record deletions against a persisted index: add the keys of the
+    * (single-column) key frame to the index's tombstone table, creating it
+    * on the first write. The keys are stored in the index's own key type,
+    * so the serving filter compares like with like. Tombstones are the
+    * contract-bounded small side of every serving read (a takedown list,
+    * not a corpus): the frame's keys collect to the driver and only those
+    * not in the held takedown set (`takedowns`) are written, so a
+    * redelivered takedown writes no file and runs no job. A null key
+    * hides nothing and is not stored.
     */
   def appendTombstones(spark: SparkSession, table: String, keys: DataFrame): Unit = {
     val tt = tombTableOf(table)
     val key = keys.columns.head
-    val k = keys.select(col(key).cast(spark.table(table).schema(key).dataType).as(key))
-      .distinct()
-    ensureTable(spark, tt) {
-      k.limit(0).write.format("parquet").saveAsTable(tt)
-    }
-    k.join(spark.table(tt), k.columns.toSeq, "left_anti").write.insertInto(tt)
+    val keyType = spark.table(table).schema(key).dataType
+    val fresh = catalystKeys(keys.select(col(key).cast(keyType)).collect()) --
+      takedowns(spark, table)
+    if (fresh.isEmpty) return
+    // one file per takedown: a local frame scans as one task per row
+    val w = spark.createDataFrame(fresh.toSeq.map(k => Row(convertToScala(k, keyType))).asJava,
+      StructType(Seq(StructField(key, keyType)))).coalesce(1).write
+    if (spark.catalog.tableExists(tt)) w.insertInto(tt)
+    else ensureTable(spark, tt)(w.format("parquet").saveAsTable(tt))
   }
 
   /** Serving view of a persisted index: the stored table minus its
     * tombstones, as the row filter `keyCol IS NULL OR NOT InSet(keyCol,
-    * tombstoned keys)` — the anti-join's semantics (a null key is never
-    * tombstoned, a null tombstone hides nothing) with the keys held on the
-    * driver (`heldRows`), so the read runs no tombstone job. The set is a
+    * tombstoned keys)` (`without`) with the keys held on the driver
+    * (`takedowns`), so the read runs no tombstone job. The set is a
     * reference object in the generated code, so a takedown does not
     * recompile the read. A filter keeps the bucketed scan's output
     * partitioning, so a downstream join on the bucket key still reads the
@@ -112,22 +117,39 @@ object BucketedSink {
     * before a takedown does not see it. With no tombstone table, or an
     * empty one, the read is the plain bucketed scan.
     */
-  def readServing(spark: SparkSession, table: String, keyCol: String): DataFrame = {
-    val tt = tombTableOf(table)
-    val base = spark.table(table)
-    // catalog-only existence check; compaction DROPS the tombstone table,
-    // restoring the plain bucketed scan
-    if (!spark.catalog.tableExists(tt)) return base
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(base.schema(keyCol).dataType)
-    val keys = heldRows(spark, tt).collect { case r if !r.isNullAt(0) => toCatalyst(r.get(0)) }
-    if (keys.isEmpty) base
-    else base.filter(col(keyCol).isNull ||
-      !GraftPlanBridge.column(InSet(GraftPlanBridge.expression(col(keyCol)), keys.toSet)))
-  }
+  def readServing(spark: SparkSession, table: String, keyCol: String): DataFrame =
+    without(spark.table(table), col(keyCol), takedowns(spark, table))
 
-  /** Rows of the small tables a serving read needs whole (tombstones,
-    * lexical `_df` and `_stats`), by table name, with the file snapshot
-    * they were read from.
+  /** The tombstoned keys of `table`, held on the driver (`heldRows`) as
+    * Catalyst values. With no tombstone table the set is empty (a
+    * catalog-only check: compaction DROPS the tombstone table).
+    */
+  private def takedowns(spark: SparkSession, table: String): Set[Any] =
+    if (!spark.catalog.tableExists(tombTableOf(table))) Set.empty
+    else catalystKeys(heldRows(spark, tombTableOf(table)))
+
+  /** The first-column values of `rows` as Catalyst values, the form an
+    * `InSet` holds, without null: a null key is never tombstoned or
+    * present, and a null tombstone hides nothing.
+    */
+  private def catalystKeys(rows: Iterable[Row]): Set[Any] =
+    rows.map(r => convertToCatalyst(r.get(0))).toSet - null
+
+  /** `df` without the rows whose `key` is in the driver-held set `keys`
+    * (Catalyst values of the key's type): the filter `key IS NULL OR NOT
+    * InSet(key, keys)`, an anti-join's semantics (a null key is never in
+    * the set). With an empty set, `df` itself.
+    */
+  private def without(df: DataFrame, key: Column, keys: Set[Any]): DataFrame =
+    if (keys.isEmpty) df else df.filter(key.isNull || !inSet(key, keys))
+
+  private def inSet(c: Column, keys: Set[Any]): Column =
+    GraftPlanBridge.column(InSet(GraftPlanBridge.expression(c), keys))
+
+  /** Rows of the small tables an index's reads and writes need whole
+    * (tombstones, lexical `_df` and `_stats`, the PQ codebook `_cb` and
+    * centroids `_cents`), by table name, with the file snapshot they were
+    * read from.
     */
   private val held = TrieMap.empty[String, (Seq[String], Seq[Row])]
 
@@ -137,7 +159,8 @@ object BucketedSink {
     * and rebuild changes that snapshot, so a held value is never staler
     * than the scan it replaces, and repeated reads of an unchanged table
     * run no job. Only for tables bounded by contract (a takedown list,
-    * the vocabulary, one stats row): every row lives on the driver.
+    * the vocabulary, one stats row, ≤ M×K codewords, ≤ NumCells
+    * centroids): every row lives on the driver.
     */
   private[graft] def heldRows(spark: SparkSession, table: String): Seq[Row] = {
     val t = spark.table(table)
@@ -207,7 +230,7 @@ object BucketedSink {
     * table means the crash hit AFTER the swap, before cleanup — drop the
     * backup only. The tombstone table is deliberately NOT dropped here:
     * tombstones appended after the crash must survive recovery, and
-    * already-folded keys anti-join against nothing — the compaction that
+    * already-folded keys match no stored row — the compaction that
     * follows re-folds whatever remains. Idempotent; no-op when no rename
     * pair is stranded.
     */
@@ -246,7 +269,6 @@ object BucketedSink {
     val loc = java.nio.file.Paths.get(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), table)
     if (java.nio.file.Files.exists(loc)) {
-      import scala.jdk.CollectionConverters._
       val walk = java.nio.file.Files.walk(loc)
       try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
       finally walk.close()
@@ -306,28 +328,24 @@ object BucketedSink {
 
   /** Incremental ingest into a bucketed index: `rowsOf` shapes the fresh
     * rows of `batch` (one row per `key`) into the table's rows, which
-    * insert under the table's own bucket spec. Protections, in order:
+    * insert under the table's own bucket spec. The batch's keys are its
+    * bounded side (a batch, not a corpus): they collect to the driver, and
+    * each check below tests a driver-held set. Protections, in order:
     *  - intra-batch dedup on `key`: the stored-id check below cannot see
     *    a key carried twice by one batch (an upstream union of two feeds),
     *    and duplicate index rows silently change probe results (doubled
-    *    neighbor rows, shifted top-k tie-breaks);
+    *    neighbor rows, shifted top-k tie-breaks). Only a batch whose
+    *    collected keys repeat pays the `dropDuplicates`;
     *  - tombstone reinstatement: while a key is tombstoned its physical
     *    rows still exist, so the idempotence check would swallow the
     *    re-append while the tombstone keeps hiding the stored rows — an
-    *    updated document lost with no signal. A batch that hits the
-    *    tombstone set compacts first, so the new rows insert and serve.
-    *    The trigger join is bounded (a takedown list against broadcast
-    *    batch ids); the common append pays one catalog check;
-    *  - idempotence under redelivery: the stored ids are SEMI-joined
-    *    against the broadcast batch ids (one pruned key-column scan, no
-    *    index shuffle — a LeftAnti can only build its right side, so
-    *    anti-joining the batch against the full index would broadcast or
-    *    shuffle the INDEX, growing every append with index size), and the
-    *    batch anti-joins that bounded present set. The present set is
-    *    deduped only when the key is the bucket column: there the distinct
-    *    reads the bucketed layout with no exchange; elsewhere it would add
-    *    a shuffle stage, and duplicate keys on an anti-join's build side
-    *    cost only broadcast size;
+    *    updated document lost with no signal. A batch whose keys meet the
+    *    held takedown set compacts first, so the new rows insert and serve;
+    *  - idempotence under redelivery: the stored keys in the batch's key
+    *    set (an `InSet` filter, which prunes buckets when the key is the
+    *    bucket column) collect as the present set, and the batch keeps
+    *    only rows whose key is null or not present (`without`) — the
+    *    anti-join's semantics, with no index shuffle or broadcast;
     *  - file control: V1 bucketed insert writes one file per (task,
     *    bucket), so the rows repartition by the table's bucket columns
     *    into its bucket count (the same pmod hash) — at most one new file
@@ -340,17 +358,15 @@ object BucketedSink {
                  (rowsOf: DataFrame => DataFrame): Unit = {
     val spark = batch.sparkSession
     val spec = bucketSpecOf(spark, table)
-    val b = batch.dropDuplicates(key)
-    val batchIds = b.select(col(key))
-    val tt = tombTableOf(table)
-    if (spark.catalog.tableExists(tt) &&
-        !spark.table(tt).join(broadcast(batchIds), Seq(key), "left_semi").isEmpty)
-      compactTombstones(spark, table, key)
+    val k = col(key).cast(spark.table(table).schema(key).dataType)
+    // a projection of a local frame collects with no job
+    val batchKeys = batch.select(k).collect()
+    val keySet = catalystKeys(batchKeys)
+    val b = if (batchKeys.distinct.size < batchKeys.size) batch.dropDuplicates(key) else batch
+    if (keySet.exists(takedowns(spark, table))) compactTombstones(spark, table, key)
     val stored = spark.table(table)
-    val present = stored.select(col(key))
-      .join(broadcast(batchIds), Seq(key), "left_semi")
-    val bounded = if (spec.bucketColumnNames == Seq(key)) present.distinct() else present
-    rowsOf(b.join(broadcast(bounded), Seq(key), "left_anti"))
+    val present = catalystKeys(stored.filter(inSet(col(key), keySet)).select(col(key)).collect())
+    rowsOf(without(b, k, present))
       .select(stored.columns.map(col).toSeq: _*)
       .repartition(spec.numBuckets, spec.bucketColumnNames.map(col).toSeq: _*)
       .write.insertInto(table)

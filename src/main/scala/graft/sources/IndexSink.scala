@@ -49,6 +49,13 @@ object IndexSink {
       BucketedSink.writeBucketed(sigs, table, "band_key", buckets)
     }
 
+  /** The index side of every probe, batch or streaming: the served
+    * (tombstone-filtered) band rows as (index_id, sig_a, band_key).
+    */
+  private[graft] def servedSigs(spark: SparkSession, table: String): DataFrame =
+    BucketedSink.readServing(spark, table, "doc_id")
+      .select(col("doc_id").as("index_id"), col("sig").as("sig_a"), col("band_key"))
+
   /** Probe the stored index with a batch's band rows: a batch doc is a
     * duplicate iff some shared (band_idx, band_hash) bucket pairs it with
     * an index doc at signature agreement >= 0.5 — the same estimate and
@@ -57,9 +64,7 @@ object IndexSink {
     * bucket-partitioned with NO exchange; only `batch` moves.
     */
   def probe(spark: SparkSession, table: String, batch: DataFrame): DataFrame = {
-    val index = BucketedSink.readServing(spark, table, "doc_id")
-      .select(col("doc_id").as("index_id"), col("sig").as("sig_a"),
-        col("band_key"))
+    val index = servedSigs(spark, table)
     val b = batch
       .withColumn("band_key", bandKey)
       .select(col("doc_id").as("batch_id"), col("sig").as("sig_b"),

@@ -338,8 +338,9 @@ object StreamOps {
     * (sources.IndexSink): each arriving document's minhash bands are
     * computed statelessly in the micro-batch (Fence-barriered, identical
     * expressions to the stored index's, so band keys are byte-equal), then
-    * a stream-static inner join probes the bucketed index table on its
-    * band_key layout. The join is STATELESS; the only state is the
+    * a stream-static inner join probes the served index
+    * (`IndexSink.servedSigs`, tombstones excluded like the batch probe's)
+    * on its band_key layout. The join is STATELESS; the only state is the
     * within-watermark pair dedup that collapses multi-band hits — bounded
     * by the watermark horizon. This is the shape a 100 TB/day ingest
     * actually runs: the index never moves, each micro-batch shuffles only
@@ -347,9 +348,7 @@ object StreamOps {
     */
   def indexProbeStream(spark: SparkSession, indexTable: String,
                        docs: DataFrame, tsCol: String): DataFrame = {
-    val index = spark.table(indexTable)
-      .select(col("doc_id").as("index_id"), col("sig").as("sig_a"),
-        col("band_key"))
+    val index = graft.sources.IndexSink.servedSigs(spark, indexTable)
     val b = graft.llm.Dedup.sigBandsOf(docs)
       .withColumn("band_key", concat_ws(":", col("band_idx"), col("band_hash")))
       .select(col("doc_id").as("batch_id"), col("sig").as("sig_b"),
@@ -429,7 +428,7 @@ object StreamOps {
   def lexRadiusStream(spark: SparkSession, indexTable: String,
                       docs: DataFrame, tsCol: String): DataFrame = {
     val L = graft.llm.Lexical
-    val st = spark.table(indexTable + "_stats").head()
+    val st = graft.sources.BucketedSink.heldRows(spark, indexTable + "_stats").head
     val (n, total) = (st.getLong(0), st.getLong(1))
     val maxDf = n * L.MaxDfBp / 10000
     val rare = spark.table(indexTable + "_df").filter(col("df") <= maxDf)

@@ -103,6 +103,26 @@ class IndexTombstoneSpec extends SparkSpecBase {
     BucketedSink.dropIndex(spark, tbl)
   }
 
+  test("null keys on the write path: a null arrival is inserted once, a null takedown hides nothing") {
+    val tbl = "null_key_write_case"
+    BucketedSink.dropIndex(spark, tbl)
+    import spark.implicits._
+    val data = Seq((Option(1L), "a"), (Option(2L), "b")).toDF("k", "v")
+    BucketedSink.writeBucketed(data, tbl, "k", 2)
+    def served = BucketedSink.readServing(spark, tbl, "k").collect()
+      .map(_.toSeq.mkString("|")).toSeq.sorted
+    // an arrival with a null key is not "present", so it inserts and serves
+    val arrival = Seq((Option(3L), "c"), (Option.empty[Long], "d")).toDF("k", "v")
+    BucketedSink.appendIndex(arrival, tbl, "k")(identity)
+    assert(served == Seq("1|a", "2|b", "3|c", "null|d"), "a null-keyed arrival was not served once")
+    // a takedown frame carrying a null key hides exactly its non-null keys
+    BucketedSink.appendTombstones(spark, tbl, Seq(Option.empty[Long]).toDF("k"))
+    assert(served == Seq("1|a", "2|b", "3|c", "null|d"), "a null takedown hid rows")
+    BucketedSink.appendTombstones(spark, tbl, Seq(Option.empty[Long], Option(3L)).toDF("k"))
+    assert(served == Seq("1|a", "2|b", "null|d"), "a takedown beside a null key hid more than its key")
+    BucketedSink.dropIndex(spark, tbl)
+  }
+
   test("compaction recovers a swap interrupted between the two renames") {
     val tbl = "ann_idx_tomb_crash"
     val staging = tbl + "_compacting"; val backup = tbl + "_precompact"

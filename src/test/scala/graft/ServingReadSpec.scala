@@ -12,7 +12,8 @@ import graft.sources.{AnnIndexSink, BucketedSink}
   * hold their small sides on the driver: the takedown list, the lexical
   * `_df`/`_stats` and the query batch. These specs pin that the held
   * values follow every write to the index, that the driver-side rare-first
-  * cut is the Spark one, and the read's job budget.
+  * cut is the Spark one, and the job budgets of a read, a redelivered
+  * takedown and an append.
   */
 class ServingReadSpec extends SparkSpecBase {
   import spark.implicits._
@@ -30,6 +31,20 @@ class ServingReadSpec extends SparkSpecBase {
 
   private def neighbors(df: DataFrame): Set[Long] =
     df.select(col("nb_id")).collect().map(_.getLong(0)).toSet
+
+  /** The Spark jobs `op` starts. */
+  private def jobsOf(op: => Unit): Int = {
+    val sc = spark.sparkContext
+    GraftTestBridges.waitUntilListenerBusEmpty(sc)
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try { op; GraftTestBridges.waitUntilListenerBusEmpty(sc) }
+    finally sc.removeSparkListener(l)
+    jobs.get
+  }
 
   test("held small sides follow every write: takedown, compaction, rebuild, append") {
     val ann = "ann_idx_held"; val lex = "lex_idx_held"; val fresh = "ann_idx_held_fresh"
@@ -131,18 +146,6 @@ class ServingReadSpec extends SparkSpecBase {
     val qv = vecsOf(v, 0L until 10L); val qd = docsOf(d, 0L until 10L)
     def annRead(): Unit = Ann.annTopkForQueries(spark, ann, qv).collect()
     def lexRead(): Unit = Lexical.lexTopkForQueries(spark, lex, qd).collect()
-    val sc = spark.sparkContext
-    def jobsOf(read: => Unit): Int = {
-      GraftTestBridges.waitUntilListenerBusEmpty(sc)
-      val jobs = new AtomicInteger
-      val l = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      }
-      sc.addSparkListener(l)
-      try { read; GraftTestBridges.waitUntilListenerBusEmpty(sc) }
-      finally sc.removeSparkListener(l)
-      jobs.get
-    }
     // the priming read collects the held tombstones, df and stats
     annRead(); lexRead()
     val annJobs = jobsOf(annRead())
@@ -150,6 +153,41 @@ class ServingReadSpec extends SparkSpecBase {
     info(s"warm read: ANN $annJobs jobs, lexical $lexJobs jobs")
     assert(annJobs <= 2, s"warm ANN read ran $annJobs jobs")
     assert(lexJobs <= 3, s"warm lexical read ran $lexJobs jobs")
+    Seq(ann, lex).foreach(BucketedSink.dropIndex(spark, _))
+    Checkpoints.releaseAll()
+  }
+
+  test("write path: a redelivered takedown runs no Spark job, a one-id append at most 3 + 4") {
+    val ann = "ann_idx_write_jobs"; val lex = "lex_idx_write_jobs"
+    Seq(ann, lex).foreach(BucketedSink.dropIndex(spark, _))
+    val v = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
+    val d = Tables.documents(spark, sfDir).select("doc_id", "text")
+    AnnIndexSink.writeEmbeddingIndexOf(v, ann, buckets = 4)
+    Lexical.writeLexIndexOf(d, lex)
+    def takeDown(ids: Seq[Long]): Unit = {
+      AnnIndexSink.deleteEmbeddings(spark, ann, ids.toDF("vec_id"))
+      Lexical.deleteLexDocs(spark, lex, ids.toDF("doc_id"))
+    }
+    // the priming write, then a read of each index, which holds the
+    // tombstones on the driver
+    takeDown(Seq(20L, 21L))
+    Ann.annTopkForQueries(spark, ann, vecsOf(v, 0L until 10L)).collect()
+    Lexical.lexTopkForQueries(spark, lex, docsOf(d, 0L until 10L)).collect()
+    val redelivered = jobsOf(takeDown(Seq(20L, 21L)))
+    // a one-id arrival, as a client sends it: local frames
+    val arrival = 100000L
+    val arrivedVec = vecsOf(v, Seq(30L)).withColumn("vec_id", lit(arrival))
+    val arrivedDoc = docsOf(d, Seq(30L)).withColumn("doc_id", lit(arrival))
+    val annAppend = jobsOf(AnnIndexSink.appendEmbeddings(arrivedVec, ann))
+    val lexAppend = jobsOf(Lexical.appendLexDocs(arrivedDoc, lex))
+    info(s"redelivered takedown: $redelivered jobs; one-id append: ANN $annAppend jobs, " +
+      s"lexical $lexAppend jobs")
+    assert(redelivered == 0, s"a redelivered takedown ran $redelivered jobs")
+    // the present-key scan, then the insert's shuffle stages and write
+    assert(annAppend <= 3, s"a one-id ANN append ran $annAppend jobs")
+    assert(lexAppend <= 4, s"a one-id lexical append ran $lexAppend jobs")
+    assert(spark.table(ann).filter(col("vec_id") === arrival).count() == 1)
+    assert(spark.table(lex).filter(col("doc_id") === arrival).count() > 0)
     Seq(ann, lex).foreach(BucketedSink.dropIndex(spark, _))
     Checkpoints.releaseAll()
   }

@@ -502,6 +502,34 @@ class StreamingSpec extends SparkSpecBase {
     Checkpoints.releaseAll()
   }
 
+  test("streaming index probe serves the tombstone-filtered index, like the batch probe") {
+    val tbl = "sig_index_stream_tomb"
+    graft.sources.IndexSink.writeSignatureIndex(spark, sfDir, tbl, 4)
+    val batchBands = graft.llm.Dedup.minhashSignatures(spark, sfDir)
+      .filter(col("doc_id") % graft.llm.Dedup.IncrementalBatchMod === 0)
+    def batchPairs: Set[(Long, Long)] = graft.sources.IndexSink.probe(spark, tbl, batchBands)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // take down an index doc that pairs with the batch slice
+    val deleted = batchPairs.map(_._1).min
+    graft.sources.IndexSink.deleteDocs(spark, tbl, Seq(deleted).toDF("doc_id"))
+    val sdir = java.nio.file.Files.createTempDirectory("graft-probe-stream-tomb")
+    Tables.documents(spark, sfDir)
+      .filter(col("doc_id") % graft.llm.Dedup.IncrementalBatchMod === 0)
+      .select(col("doc_id"), col("text"),
+        to_timestamp(lit("2026-01-01 00:00:00")).as("arrived"))
+      .coalesce(1).write.mode("overwrite").parquet(sdir.toString)
+    val stream = spark.readStream.schema(spark.read.parquet(sdir.toString).schema)
+      .parquet(sdir.toString)
+    val got = StreamOps.runToMemory(spark,
+      StreamOps.indexProbeStream(spark, tbl, stream, "arrived"), "probe_stream_tomb_test")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got === batchPairs)
+    assert(!got.exists(_._1 == deleted), s"the stream served taken-down doc $deleted")
+    assert(got.nonEmpty)
+    graft.sources.BucketedSink.dropIndex(spark, tbl)
+    Checkpoints.releaseAll()
+  }
+
   test("index probe stream resumes from its checkpoint without re-emitting pairs (RocksDB)") {
     import scala.jdk.CollectionConverters._
     // The recovery property of the ingest-dedup stream: the
