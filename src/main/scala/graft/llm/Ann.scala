@@ -395,8 +395,9 @@ object Ann {
     *
     * The query side is collected when this is called and rides in the
     * plan (`Relational.lookupJoin` on bucket), so the read runs no
-    * broadcast job: a local frame (a request batch) collects with no job,
-    * a distributed one (a `foreachBatch` micro-batch) with one.
+    * broadcast job: a local frame (a request batch, or a stream's
+    * micro-batch, which `StreamOps` hands over driver-local) collects with
+    * no job, a distributed one with one.
     */
   private[graft] def annTopkForQueries(spark: SparkSession, table: String,
                                        queryVecs: DataFrame): DataFrame = {
@@ -531,17 +532,6 @@ object Ann {
     topK(scored, Seq(col("vec_id")), Seq(col("ccos").desc, col("cent_id").asc), maxRn, "rn")
       .select(col("vec_id"), col("embedding"), col("cent_id").as("cell"),
         col("ccos"), col("rn"))
-  }
-
-  /** The same cosine-to-centroid fold with literal centroid vectors (the
-    * adcBaked convention): the dot over a typedLit float array IS the batch
-    * kernel, so the resulting doubles are bit-identical to rankedAgainstCents
-    * over the stored `_cents` rows. Used by the streaming PQ probe to pick
-    * each query's NProbe cells statelessly (no window, no state).
-    */
-  private[graft] def cosToCentLit(emb: Column, cv: IndexedSeq[Float]): Column = {
-    val c = typedLit(cv)
-    dot(emb, c) / (norm(emb) * norm(c))
   }
 
   /** D7b: IVF ANN — same top-k contract as brute force, but candidates come

@@ -82,7 +82,7 @@ object Lexical {
   /** Query-term df ceiling for the RADIUS form, in basis points of the
     * collection size: a term enters a radius query iff df ≤ N·bp/10⁴.
     * The stateless replacement for the top-k form's rare-first window —
-    * a pure row predicate (so the streaming twin needs no per-query
+    * a pure row predicate (so the radius needs no per-query
     * ranking state) that bounds candidate fan-out the same way: hot
     * terms never reach the posting join.
     */
@@ -227,13 +227,10 @@ object Lexical {
     * rare-first against the STORED df, scored under the STORED stats.
     *
     * Every small side is held on the driver, so the read's only jobs are
-    * the postings scan and its ranking: the query docs' term sets are
-    * collected when this is called (no job for a local frame, one for a
-    * `foreachBatch` micro-batch), the rare-first cut runs over the held
-    * `_df` (`rareFirst`; the held `_df` is vocabulary-sized), the
-    * selected (q_id, term, df) rows join the postings as a plan literal
-    * (`Relational.lookupJoin`) and the held `_stats` become two long
-    * literals.
+    * the postings scan and its ranking: the query docs' selection is
+    * built on the driver (`heldQsel`, rare-first over the held `_df`),
+    * joins the postings as a plan literal (`Relational.lookupJoin`), and
+    * the held `_stats` become two long literals.
     *
     * OOV contract (r12): query terms absent from the PINNED `_df` are
     * dropped — a query doc whose terms are entirely post-build retrieves
@@ -245,20 +242,32 @@ object Lexical {
   private[graft] def lexTopkForQueries(spark: SparkSession, table: String,
                                        queryDocs: DataFrame): DataFrame = {
     val S = graft.sources.BucketedSink
-    val post = S.readServing(spark, table, "doc_id")
-    val terms = queryDocs.select(col("doc_id"), array_distinct(TextOps.toks(col("text"))))
-      .collect().toSeq.filterNot(_.isNullAt(0))
-      .flatMap(r => r.getSeq[String](1).map(t => (r.get(0), t)))
-    val dfreq = S.heldRows(spark, table + "_df").map(r => r.getString(0) -> r.getLong(1)).toMap
-    val qsel = spark.createDataFrame(
-      rareFirst(terms, dfreq).map { case (q, t, d) => Row(q, t, d) }.asJava,
-      StructType(Seq(queryDocs.schema("doc_id").copy(name = "q_id"),
-        StructField("term", StringType), StructField("df", LongType))))
+    val qsel = heldQsel(spark, table, queryDocs)(rareFirst(_, _))
     val stats = S.heldRows(spark, table + "_stats").head
-    rankTail(scoreOf(lookupJoin(post, "term", qsel)
+    rankTail(scoreOf(lookupJoin(S.readServing(spark, table, "doc_id"), "term", qsel)
       .filter(col("doc_id") =!= col("q_id"))
       .withColumn("n", lit(stats.getLong(0)))
       .withColumn("total", lit(stats.getLong(1)))))
+  }
+
+  /** An arriving query-docs frame's (q_id, term, df) selection, built on
+    * the driver: each doc's distinct terms are collected (no job for a
+    * local frame, such as a stream's micro-batch), `select` cuts
+    * them against the held `_df`, and the kept rows become a local frame
+    * whose q_id keeps `queryDocs`' doc_id type.
+    */
+  private def heldQsel(spark: SparkSession, table: String, queryDocs: DataFrame)
+                      (select: (Seq[(Any, String)], Map[String, Long]) =>
+                        Seq[(Any, String, Long)]): DataFrame = {
+    val terms = queryDocs.select(col("doc_id"), array_distinct(TextOps.toks(col("text"))))
+      .collect().toSeq.filterNot(_.isNullAt(0))
+      .flatMap(r => r.getSeq[String](1).map(t => (r.get(0), t)))
+    val dfreq = graft.sources.BucketedSink.heldRows(spark, table + "_df")
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    spark.createDataFrame(
+      select(terms, dfreq).map { case (q, t, d) => Row(q, t, d) }.asJava,
+      StructType(Seq(queryDocs.schema("doc_id").copy(name = "q_id"),
+        StructField("term", StringType), StructField("df", LongType))))
   }
 
   /** Integer RSJ-ratio score per (q_id, nb_id) over candidate rows
@@ -413,11 +422,11 @@ object Lexical {
     graft.sources.BucketedSink.appendIndex(
       batch.select(col("doc_id"), col("text")), table, "doc_id")(postingsOf)
 
-  /** The per-term contribution expression shared by the batch radius and
-    * the streaming twin — idf_e4 · tfsat_e6 with the collection stats
-    * BAKED as literals (the codebook-literal pattern: 2 longs held on the
-    * driver by `BucketedSink.heldRows`, so the hot path carries no stats
-    * join at all). Expects columns df, tf, len on the row.
+  /** The per-term contribution expression shared by the radius hits and
+    * the guard query — idf_e4 · tfsat_e6 with the collection stats
+    * as literals (2 longs held on the driver by `BucketedSink.heldRows`,
+    * so the hot path carries no stats join at all). Expects columns df,
+    * tf, len on the row.
     */
   private[graft] def contribE10(n: Long, total: Long): org.apache.spark.sql.Column =
     expr(s"""((10000 * (2 * ($n - df) + 1)) div (2 * df + 1))
@@ -433,7 +442,7 @@ object Lexical {
     * — which is exactly what makes the form STREAMABLE (top-k is a rank,
     * a radius is a filter; the decontaminateStream shape with a weighted
     * threshold). Query terms are the df-thresholded rare set (MaxDfBp —
-    * a row predicate, not a window), stats are baked literals, and the
+    * a row predicate, not a window), stats are literals, and the
     * only exchange is the final pair distinct, bounded by emitted pairs.
     */
   /** The catalog D91c key (r12 form): the standard first-NQueries query
@@ -459,12 +468,30 @@ object Lexical {
         .distinct())
   }
 
-  /** The first-NQueries radius form the streaming twin mirrors
-    * (LexicalSpec pins lexRadiusStream ≡ this, pair-for-pair). */
+  /** The first-NQueries radius form, its query terms read from the stored
+    * postings — the reference the text-side `lexRadiusForQueries` is held
+    * to (LexicalSpec pins lexRadiusStream ≡ this, pair-for-pair). */
   private[graft] def lexRadiusFromStore(spark: SparkSession, table: String): DataFrame = {
     val st = graft.sources.BucketedSink.heldRows(spark, table + "_stats").head
     val (n, total) = (st.getLong(0), st.getLong(1))
     radiusHits(spark, table, n, total, radiusQsel(spark, table, n))
+  }
+
+  /** The persisted index's radius probe for an ARRIVING (doc_id, text)
+    * query frame — `StreamOps.lexRadiusStream`'s per-micro-batch core:
+    * each doc's distinct terms within the stored `_df`'s MaxDfBp cut,
+    * selected on the driver (`heldQsel`), through the catalog radius's
+    * own `radiusHits`. An arrived doc that is already indexed emits
+    * exactly its `lexRadiusFromStore` pairs.
+    */
+  private[graft] def lexRadiusForQueries(spark: SparkSession, table: String,
+                                         queryDocs: DataFrame): DataFrame = {
+    val st = graft.sources.BucketedSink.heldRows(spark, table + "_stats").head
+    val (n, total) = (st.getLong(0), st.getLong(1))
+    val maxDf = n * MaxDfBp / 10000
+    radiusHits(spark, table, n, total, heldQsel(spark, table, queryDocs) { (terms, dfreq) =>
+      terms.flatMap { case (q, t) => dfreq.get(t).filter(_ <= maxDf).map(d => (q, t, d)) }
+    })
   }
 
   private def radiusQsel(spark: SparkSession, table: String, n: Long): DataFrame = {

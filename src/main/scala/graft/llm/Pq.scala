@@ -226,17 +226,25 @@ object Pq {
     * states (PqSpec pins both the equivalence and the plan shape).
     */
   private def servePq(v: DataFrame, cb: DataFrame, codes: DataFrame): DataFrame =
-    refineExact(v,
-      codes.join(broadcast(adcLut(v, cb)), Seq("m", "code"))
-        .filter(col("q_id") =!= col("vec_id"))
-        .groupBy(col("q_id"), col("vec_id").as("nb_id"))
-        .agg(sum(col("d2q")).as("adc")))
+    refineExact(v, fullScanAdc(codes, v.filter(col("vec_id") < NQueries), cb))
 
-  /** The per-query ADC lookup table: exact query-subvector-to-centroid
-    * distances over the tiny codebook (queries × M × K rows — broadcast).
+  /** (q_id, nb_id, adc) of every stored code row against the query
+    * vectors `q` — the unpruned ADC scan the top-k and radius forms
+    * share: codes ⋈ the broadcast LUT, then the exact-decimal sum.
     */
-  private def adcLut(v: DataFrame, cb: DataFrame): DataFrame =
-    subvecs(v.filter(col("vec_id") < NQueries))
+  private def fullScanAdc(codes: DataFrame, q: DataFrame, cb: DataFrame): DataFrame =
+    codes.join(broadcast(adcLut(q, cb)), Seq("m", "code"))
+      .filter(col("q_id") =!= col("vec_id"))
+      .groupBy(col("q_id"), col("vec_id").as("nb_id"))
+      .agg(sum(col("d2q")).as("adc"))
+
+  /** The per-query ADC lookup table of the query vectors `q`: exact
+    * query-subvector-to-centroid distances over the tiny codebook
+    * (queries × M × K rows — broadcast). Every id in `q` is a query; the
+    * catalog callers pass their first-NQueries set.
+    */
+  private def adcLut(q: DataFrame, cb: DataFrame): DataFrame =
+    subvecs(q)
       .withColumnRenamed("vec_id", "q_id")
       .join(cb, Seq("m"))
       .select(col("q_id"), col("m"), col("code"),
@@ -297,7 +305,8 @@ object Pq {
     val codes = encodeOf(v, cb).select(col("vec_id"), col("m"), col("code"))
     refineExact(v,
       cands.join(codes, Seq("vec_id"))
-        .join(broadcast(adcLut(v, cb)), Seq("q_id", "m", "code"))
+        .join(broadcast(adcLut(v.filter(col("vec_id") < NQueries), cb)),
+          Seq("q_id", "m", "code"))
         .groupBy(col("q_id"), col("vec_id").as("nb_id"))
         .agg(sum(col("d2q")).as("adc")))
   }
@@ -578,20 +587,24 @@ object Pq {
     * `v`'s own floats — so the refine's fold order always matches the
     * coordinate system the pair serves in.
     */
-  private[graft] def serveIvfadcFrom(v: DataFrame, table: String): DataFrame = {
-    val spark = v.sparkSession
-    val probes = Ann.rankedAgainstCents(
-        v.filter(col("vec_id") < NQueries), spark.table(table + "_cents"),
-        Ann.NProbe)
+  private[graft] def serveIvfadcFrom(v: DataFrame, table: String): DataFrame =
+    refineExact(v, cellGatedAdc(v.sparkSession, table, v.filter(col("vec_id") < NQueries)))
+
+  /** (q_id, nb_id, adc) of every candidate in the query vectors' NProbe
+    * cells — the cell-pruned ADC scan the IVFADC top-k and the radius
+    * probe share: probe lists over the pair's `_cents`, codes gated by
+    * their stored home cell (codes ⋈ BROADCAST probe list, map-side),
+    * then the LUT join and the exact-decimal sum.
+    */
+  private def cellGatedAdc(spark: SparkSession, table: String, q: DataFrame): DataFrame = {
+    val probes = Ann.rankedAgainstCents(q, spark.table(table + "_cents"), Ann.NProbe)
       .select(col("vec_id").as("q_id"), col("cell"))
-    refineExact(v,
-      graft.sources.BucketedSink.readServing(spark, table, "vec_id")
-        .join(broadcast(probes), Seq("cell"))
-        .filter(col("q_id") =!= col("vec_id"))
-        .join(broadcast(adcLut(v, spark.table(table + "_cb"))),
-          Seq("q_id", "m", "code"))
-        .groupBy(col("q_id"), col("vec_id").as("nb_id"))
-        .agg(sum(col("d2q")).as("adc")))
+    graft.sources.BucketedSink.readServing(spark, table, "vec_id")
+      .join(broadcast(probes), Seq("cell"))
+      .filter(col("q_id") =!= col("vec_id"))
+      .join(broadcast(adcLut(q, spark.table(table + "_cb"))), Seq("q_id", "m", "code"))
+      .groupBy(col("q_id"), col("vec_id").as("nb_id"))
+      .agg(sum(col("d2q")).as("adc"))
   }
 
   /** Recompute twin for the lifecycle specs: serve `v`'s queries against
@@ -797,33 +810,35 @@ object Pq {
       refSrc = "pvecs")}"""
 
   /** D83: PQ radius probe — the RANGE form of compressed serving ("all
-    * stored vectors within ADC distance r of the query"), the contract the
-    * streaming twin needs: top-k is a rank (stateful, needs the whole
-    * candidate set), a radius is a pure per-row predicate (stateless),
-    * which is exactly how the minhash stream probes its index with
-    * `est ≥ 0.5`. Same LUT join + exact-decimal ADC sum as D73's scan;
+    * stored vectors within ADC distance r of the query"): top-k is a rank
+    * (needs the whole candidate set), a radius is a pure per-row predicate,
+    * the way the minhash probe cuts its index pairs at `est ≥ 0.5`. Same LUT join + exact-decimal ADC sum as D73's scan;
     * output is every (query, neighbor) pair inside the radius with its
     * ADC distance. Reads the persisted pair (tombstone-aware).
     */
   def pqRadius(spark: SparkSession, dir: String): DataFrame =
     servePqRadiusFrom(vecs(spark, dir), ensurePqIndex(spark, dir))
 
-  /** The radius serve over an arbitrary persisted pair — shared by the
-    * catalog query and the streaming-parity spec (which compares THIS
-    * aggregate path against the baked-expression stream, so the spec
-    * always attests the production baseline, never a drifted copy).
+  /** The full-scan radius serve over an arbitrary persisted pair — the
+    * catalog query's core, and the baseline the specs hold the
+    * cell-pruned probe to (pruning may only drop its pairs).
     */
   private[graft] def servePqRadiusFrom(v: DataFrame, table: String): DataFrame = {
     val spark = v.sparkSession
-    graft.sources.BucketedSink.readServing(spark, table, "vec_id")
-      .join(broadcast(adcLut(v, spark.table(table + "_cb"))), Seq("m", "code"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .groupBy(col("q_id"), col("vec_id").as("nb_id"))
-      .agg(sum(col("d2q")).as("adc"))
-      .filter(col("adc").cast("double") <= lit(RadiusE6 / 1e6))
-      .select(col("q_id"), col("nb_id"),
-        round(col("adc").cast("double"), 6).as("adc"))
+    radiusCut(fullScanAdc(graft.sources.BucketedSink.readServing(spark, table, "vec_id"),
+      v.filter(col("vec_id") < NQueries), spark.table(table + "_cb")))
   }
+
+  /** The radius form's one output site: the (q_id, nb_id, adc) rows within
+    * `graft.pq.radiusE6`, the exact-decimal ADC as a double rounded to 6
+    * places the way the DuckDB oracle's `round(CAST(adc AS DOUBLE), 6)`
+    * rounds it (`roundScaled`; Spark's `round` differs at ties the
+    * scaled double misses).
+    */
+  private[graft] def radiusCut(adc: DataFrame): DataFrame =
+    adc.filter(col("adc").cast("double") <= lit(RadiusE6 / 1e6))
+      .select(col("q_id"), col("nb_id"),
+        graft.functions.roundScaled(col("adc").cast("double"), 6).as("adc"))
 
   def pqRadiusSql: String =
     s"""WITH ${pqCtes()},
@@ -852,29 +867,19 @@ object Pq {
     * trade the D84 scoreboard prices), never a reported distance.
     */
   def pqRadiusIvf(spark: SparkSession, dir: String): DataFrame =
-    servePqRadiusIvfFrom(vecs(spark, dir), ensurePqIndex(spark, dir))
+    pqRadiusForQueries(spark, ensurePqIndex(spark, dir),
+      vecs(spark, dir).filter(col("vec_id") < NQueries))
 
-  /** The cell-pruned radius serve over an arbitrary persisted pair —
-    * shared by the catalog query and the streaming-parity spec (the
-    * stream's baked twin must match THIS aggregate path row-for-row).
+  /** The persisted pair's one radius probe: every stored vector within
+    * the radius of each (vec_id, embedding) query in `queries`, among
+    * the candidates in its NProbe cells, as (q_id, nb_id, adc). The
+    * catalog's pq_radius_ivf passes its first-NQueries set, and
+    * `StreamOps.pqProbeStream` each micro-batch; any vec_id serves as a
+    * query (one row per vec_id), and a query never pairs with its own id.
     */
-  private[graft] def servePqRadiusIvfFrom(v: DataFrame, table: String): DataFrame = {
-    val spark = v.sparkSession
-    val probes = Ann.rankedAgainstCents(
-        v.filter(col("vec_id") < NQueries), spark.table(table + "_cents"),
-        Ann.NProbe)
-      .select(col("vec_id").as("q_id"), col("cell"))
-    graft.sources.BucketedSink.readServing(spark, table, "vec_id")
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .join(broadcast(adcLut(v, spark.table(table + "_cb"))),
-        Seq("q_id", "m", "code"))
-      .groupBy(col("q_id"), col("vec_id").as("nb_id"))
-      .agg(sum(col("d2q")).as("adc"))
-      .filter(col("adc").cast("double") <= lit(RadiusE6 / 1e6))
-      .select(col("q_id"), col("nb_id"),
-        round(col("adc").cast("double"), 6).as("adc"))
-  }
+  private[graft] def pqRadiusForQueries(spark: SparkSession, table: String,
+                                        queries: DataFrame): DataFrame =
+    radiusCut(cellGatedAdc(spark, table, queries))
 
   /** D85 oracle: the IVF ranking pipeline and the PQ pipeline in one
     * statement (the annIvfadcSql composition), radius cut on the
@@ -900,75 +905,6 @@ object Pq {
       GROUP BY 1, 2)
     SELECT q_id, nb_id, round(CAST(adc AS DOUBLE), 6) AS adc
     FROM adc WHERE CAST(adc AS DOUBLE) <= ${RadiusE6 / 1e6}"""
-
-  /** The ADC distance as ONE stateless expression over (query embedding,
-    * stored code array) — the stored codebook (≤ M×K rows, contract-
-    * bounded like the ≤26 BPE merges) held on the driver
-    * (`BucketedSink.heldRows`) and baked in as map literals, so a
-    * STREAMING probe can score candidates with no aggregation state at
-    * all (the D32/BPE bake pattern applied to serving). Arithmetic is
-    * byte-identical to the batch scan: per subspace the same
-    * left-to-right double L2 fold cast to DECIMAL(28,10), the M terms
-    * summed exactly.
-    */
-  private[graft] def adcBaked(spark: SparkSession, pairTable: String,
-                              emb: Column, codes: Column): Column = {
-    val s = subDim
-    // by-name access: the bake must not couple to the codebook table's
-    // physical column order (a reordered/repaired _cb would silently
-    // select wrong centroids while the name-joining batch path stays right)
-    val byM = graft.sources.BucketedSink.heldRows(spark, pairTable + "_cb")
-      .map(r => (r.getAs[Int]("m"), r.getAs[Int]("code"),
-        r.getSeq[Float](r.fieldIndex("cv")).toIndexedSeq))
-      .groupBy(_._1)
-    (0 until NumSubspaces).map { m =>
-      val entries = byM.getOrElse(m, Seq.empty).sortBy(_._2)
-      val cvMap = map(entries.flatMap { case (_, c, cv) =>
-        Seq(lit(c), typedLit(cv)) }.toIndexedSeq: _*)
-      val chosen = element_at(cvMap, element_at(codes, m + 1))
-      (0 until s).map { i =>
-        val d = element_at(emb, m * s + i + 1).cast("double") -
-          element_at(chosen, i + 1).cast("double")
-        d * d
-      }.reduce(_ + _).cast("decimal(28,10)")
-    }.reduce(_ + _)
-  }
-
-  /** The stored codes pivoted to one row per vector (nb_id, cell,
-    * codes[M]) — the static side of the streaming probe's stream-static
-    * join, keyed by the home cell so the stream can equality-join its
-    * probe list instead of cross-joining the corpus (r10). Tombstone-aware;
-    * the pivot is a static-side agg bounded by the codes table.
-    */
-  private[graft] def codesWide(spark: SparkSession, pairTable: String): DataFrame =
-    graft.sources.BucketedSink.readServing(spark, pairTable, "vec_id")
-      .groupBy(col("vec_id").as("nb_id"), col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("m"), col("code")))),
-        x => x.getField("code")).as("codes"))
-
-  /** Each query's NProbe-cell probe list as ONE stateless expression over
-    * the embedding column (the adcBaked bake applied to the coarse
-    * quantizer): the stored `_cents` rows (≤ NumCells — contract-bounded)
-    * are held on the driver (`BucketedSink.heldRows`); per cell the
-    * cosine is the BATCH kernel over a literal centroid
-    * (Ann.cosToCentLit — bit-identical doubles to rankedAgainstCents
-    * over the same stored floats), and the rank is an array_sort over
-    * (−ccos, cell) structs — (ccos desc, cell asc), the family tie rule —
-    * sliced to NProbe. No window, no aggregation state:
-    * a streaming micro-batch computes its probe list map-side.
-    */
-  private[graft] def probeCellsBaked(spark: SparkSession, pairTable: String,
-                                     emb: Column): Column = {
-    val cents = graft.sources.BucketedSink.heldRows(spark, pairTable + "_cents")
-      .map(r => (r.getAs[Long]("cent_id"),
-        r.getSeq[Float](r.fieldIndex("cv")).toIndexedSeq))
-      .sortBy(_._1)
-    val scored = array(cents.map { case (cellId, cv) =>
-      struct(Ann.cosToCentLit(emb, cv).unary_-.as("negccos"),
-        lit(cellId).as("cell"))
-    }.toIndexedSeq: _*)
-    transform(slice(array_sort(scored), 1, Ann.NProbe), x => x.getField("cell"))
-  }
 
   /** D74: PQ distortion gauge — per subspace: vectors encoded, mean and max
     * squared quantization error. The QC row a serving deployment reads

@@ -147,9 +147,8 @@ object BucketedSink {
     GraftPlanBridge.column(InSet(GraftPlanBridge.expression(c), keys))
 
   /** Rows of the small tables an index's reads and writes need whole
-    * (tombstones, lexical `_df` and `_stats`, the PQ codebook `_cb` and
-    * centroids `_cents`), by table name, with the file snapshot they were
-    * read from.
+    * (tombstones, lexical `_df` and `_stats`), by table name, with the
+    * file snapshot they were read from.
     */
   private val held = TrieMap.empty[String, (Seq[String], Seq[Row])]
 
@@ -159,8 +158,7 @@ object BucketedSink {
     * and rebuild changes that snapshot, so a held value is never staler
     * than the scan it replaces, and repeated reads of an unchanged table
     * run no job. Only for tables bounded by contract (a takedown list,
-    * the vocabulary, one stats row, ≤ M×K codewords, ≤ NumCells
-    * centroids): every row lives on the driver.
+    * the vocabulary, one stats row): every row lives on the driver.
     */
   private[graft] def heldRows(spark: SparkSession, table: String): Seq[Row] = {
     val t = spark.table(table)

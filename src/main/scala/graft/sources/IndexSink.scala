@@ -49,13 +49,6 @@ object IndexSink {
       BucketedSink.writeBucketed(sigs, table, "band_key", buckets)
     }
 
-  /** The index side of every probe, batch or streaming: the served
-    * (tombstone-filtered) band rows as (index_id, sig_a, band_key).
-    */
-  private[graft] def servedSigs(spark: SparkSession, table: String): DataFrame =
-    BucketedSink.readServing(spark, table, "doc_id")
-      .select(col("doc_id").as("index_id"), col("sig").as("sig_a"), col("band_key"))
-
   /** Probe the stored index with a batch's band rows: a batch doc is a
     * duplicate iff some shared (band_idx, band_hash) bucket pairs it with
     * an index doc at signature agreement >= 0.5 — the same estimate and
@@ -63,16 +56,29 @@ object IndexSink {
     * pairs exactly (spec-asserted). The index side of the join reads
     * bucket-partitioned with NO exchange; only `batch` moves.
     */
-  def probe(spark: SparkSession, table: String, batch: DataFrame): DataFrame = {
-    val index = servedSigs(spark, table)
+  def probe(spark: SparkSession, table: String, batch: DataFrame): DataFrame =
+    probePairs(spark, table, batch).distinct()
+
+  /** The pair core every probe of the index shares, batch or streaming:
+    * served (tombstone-filtered) band rows ⋈ the batch's band rows on
+    * band_key, kept at signature agreement >= 0.5, as (index_id,
+    * batch_id) plus the `carry` columns of `batch`. Not deduplicated: a
+    * pair repeats once per shared band, and each caller collapses repeats
+    * its own way (`probe` with `distinct`, `StreamOps.indexProbeStream`
+    * within its watermark).
+    */
+  private[graft] def probePairs(spark: SparkSession, table: String, batch: DataFrame,
+                                carry: String*): DataFrame = {
     val b = batch
       .withColumn("band_key", bandKey)
-      .select(col("doc_id").as("batch_id"), col("sig").as("sig_b"),
-        col("band_key"))
+      .select(Seq(col("doc_id").as("batch_id"), col("sig").as("sig_b"),
+        col("band_key")) ++ carry.map(col): _*)
     val est = Dedup.sigAgreement(col("sig_a"), col("sig_b"))
-    index.join(b, Seq("band_key"))
+    BucketedSink.readServing(spark, table, "doc_id")
+      .select(col("doc_id").as("index_id"), col("sig").as("sig_a"), col("band_key"))
+      .join(b, Seq("band_key"))
       .filter(est >= 0.5)
-      .select(col("index_id"), col("batch_id")).distinct()
+      .select(Seq(col("index_id"), col("batch_id")) ++ carry.map(col): _*)
   }
 
   /** Full-corpus signature index (r8, corpus_pipeline_indexed): EVERY

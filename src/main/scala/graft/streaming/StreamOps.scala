@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import java.sql.Timestamp
 
 /** Structured Streaming operators (SURVEY.md §2.E7): parquet stream source →
@@ -338,210 +339,126 @@ object StreamOps {
     * (sources.IndexSink): each arriving document's minhash bands are
     * computed statelessly in the micro-batch (Fence-barriered, identical
     * expressions to the stored index's, so band keys are byte-equal), then
-    * a stream-static inner join probes the served index
-    * (`IndexSink.servedSigs`, tombstones excluded like the batch probe's)
-    * on its band_key layout. The join is STATELESS; the only state is the
-    * within-watermark pair dedup that collapses multi-band hits — bounded
-    * by the watermark horizon. This is the shape a 100 TB/day ingest
-    * actually runs: the index never moves, each micro-batch shuffles only
-    * itself.
+    * probed through the batch probe's own pair core (`IndexSink.probePairs`
+    * — a stream-static inner join on the served, tombstone-filtered
+    * band_key layout, with the arrival time carried through). The join is
+    * STATELESS; the only state is the within-watermark pair dedup that
+    * collapses multi-band hits — bounded by distinct emitted pairs inside
+    * the watermark horizon, which a hot band bucket (many copies of one
+    * text) keeps far below its distinct batch ids. This is the shape a
+    * 100 TB/day ingest actually runs: the index never moves, each
+    * micro-batch shuffles only itself.
     */
   def indexProbeStream(spark: SparkSession, indexTable: String,
-                       docs: DataFrame, tsCol: String): DataFrame = {
-    val index = graft.sources.IndexSink.servedSigs(spark, indexTable)
-    val b = graft.llm.Dedup.sigBandsOf(docs)
-      .withColumn("band_key", concat_ws(":", col("band_idx"), col("band_hash")))
-      .select(col("doc_id").as("batch_id"), col("sig").as("sig_b"),
-        col("band_key"), col(tsCol))
-    val est = graft.llm.Dedup.sigAgreement(col("sig_a"), col("sig_b"))
-    b.join(index, Seq("band_key"))
-      .filter(est >= 0.5)
+                       docs: DataFrame, tsCol: String): DataFrame =
+    graft.sources.IndexSink.probePairs(spark, indexTable,
+        graft.llm.Dedup.sigBandsOf(docs), tsCol)
       .withWatermark(tsCol, "1 hour")
       .dropDuplicatesWithinWatermark("index_id", "batch_id")
       .select(col("index_id"), col("batch_id"))
-  }
 
-  /** Streaming probe of the PERSISTED PQ pair (r9; cell-pruned r10 — the
-    * indexProbeStream lineage applied to the compressed tier, D76/D85):
-    * each arriving query vector computes its NProbe-cell probe list
-    * map-side through the BAKED coarse quantizer (Pq.probeCellsBaked — the
-    * ≤ NumCells stored centroids folded into literals), explodes it, and
-    * EQUALITY-joins the codes table pivoted to one row per stored vector
-    * and keyed by its stored home cell — so a micro-batch touches only the
-    * probed cells' share of the corpus (~nprobe/cells) instead of
-    * cross-joining all of it, the same gate the batch IVFADC/radius
-    * queries apply. Candidates are then scored through the BAKED ADC
-    * expression (Pq.adcBaked — contract-bounded codebook as map literals,
-    * a pure per-row predicate with NO aggregation state), cut at the
-    * radius (`graft.pq.radiusE6` — the est ≥ 0.5 of the minhash probe),
-    * and pair-deduped within the watermark for redelivery. Output rows are
-    * byte-identical to the batch cell-pruned radius probe over the same
-    * pair (`Pq.servePqRadiusIvfFrom`; PqLifecycleSpec pins row parity):
-    * the radius form is what makes compressed serving STREAMABLE — top-k
-    * is a rank over the whole candidate set, a radius is stateless — and
-    * the cell gate is what keeps a 10⁹-vector static side from being
-    * re-scanned per micro-batch. Like every IVF composition, pruning
-    * trades recall at the cell boundary (a within-radius vector outside
-    * the probed cells is not emitted), never a reported distance.
-    *
-    * Scale shape: the static side never moves and is consumed through an
-    * equality join on cell (hash-partitionable at any corpus size — no
-    * broadcast of the corpus, no per-batch BNLJ); each micro-batch
-    * shuffles only itself plus the probed cells' candidates; state is
-    * bounded by emitted pairs inside the watermark horizon, not by the
-    * corpus.
+  /** The one micro-batch recipe every persisted-index probe stream runs
+    * (Spark's documented foreachBatch pattern for batch-only operators):
+    * the streaming graph carries ONLY the watermark and the within-watermark
+    * dedup of the arrival id `id` — redelivery protection whose state is
+    * bounded by DISTINCT arrived ids inside the 1-hour horizon, never by
+    * candidates or emitted pairs — and each micro-batch's (id, payload)
+    * rows, collected once to a driver-local frame (arrivals per trigger are
+    * the probe's query set, held on the driver like every serving read's),
+    * go through `probe`, the index's one batch probe, whose frame `sink`
+    * receives (the foreachBatch delivery contract: once per
+    * micro-batch, and again if Spark retries the batch). The returned
+    * query is already started with an AvailableNow trigger; callers
+    * processAllAvailable()/stop() it. `checkpoint` names a durable
+    * location; the default scratch dir is registered for JVM-exit cleanup
+    * (TempDirs).
     */
-  def pqProbeStream(spark: SparkSession, pairTable: String,
-                    queries: DataFrame, tsCol: String): DataFrame = {
-    val P = graft.llm.Pq
-    val codes = P.codesWide(spark, pairTable)
-    queries
-      .select(col("vec_id").as("q_id"), col("embedding"), col(tsCol))
-      .withColumn("cell",
-        explode(P.probeCellsBaked(spark, pairTable, col("embedding"))))
-      .join(codes, Seq("cell"))
-      .filter(col("q_id") =!= col("nb_id"))
-      .withColumn("adc", P.adcBaked(spark, pairTable, col("embedding"), col("codes")))
-      .filter(col("adc").cast("double") <= lit(P.RadiusE6 / 1e6))
+  private def perBatch(arrivals: DataFrame, id: String, payload: String, tsCol: String,
+                       checkpoint: Option[String])(probe: DataFrame => DataFrame)
+                      (sink: DataFrame => Unit): StreamingQuery = {
+    val cp = checkpoint.map(java.nio.file.Paths.get(_))
+      .getOrElse(TempDirs.scratch("graft-probe-cp"))
+    arrivals
+      .select(col(id), col(payload), col(tsCol))
       .withWatermark(tsCol, "1 hour")
-      .dropDuplicatesWithinWatermark("q_id", "nb_id")
-      .select(col("q_id"), col("nb_id"),
-        round(col("adc").cast("double"), 6).as("adc"))
+      .dropDuplicatesWithinWatermark(id)
+      .select(col(id), col(payload))
+      .writeStream
+      .outputMode(OutputMode.Append)
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", cp.toString)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        // one collect per micro-batch: the probe may read its queries more
+        // than once, and each read of `batch` would re-run the dedup
+        sink(probe(batch.sparkSession.createDataFrame(
+          java.util.Arrays.asList(batch.collect(): _*), batch.schema)))
+      }
+      .start()
   }
 
-  /** Streaming probe of the PERSISTED inverted index (r10 — the
-    * indexProbeStream lineage applied to the lexical tier, D91b/D91c):
-    * each arriving document's distinct terms are exploded statelessly,
-    * gated by the STORED df table pre-filtered to the rare set (df ≤
-    * N·maxDfBp/10⁴ — a static frame bounded by the rare vocabulary, so
-    * the stream-static equality join on term touches only rare posting
-    * lists, the same fan-out gate the batch radius applies), then joined
-    * against the tombstone-aware postings and cut by the single-term
-    * impact radius — a pure per-row predicate over BAKED collection
-    * stats (two longs as literals, the codebook-literal pattern), with
-    * NO aggregation state. The only state is the within-watermark
-    * (q, nb) pair dedup that collapses multi-term hits — bounded by
-    * emitted pairs inside the horizon, never by the corpus or the batch.
-    * Output rows are identical to the batch radius over the same index
-    * (`Lexical.lexRadiusFromStore`; StreamingSpec pins set-equality).
+  /** Streaming radius probe of the PERSISTED PQ pair (D76/D85): each
+    * micro-batch's distinct arrived (vec_id, embedding) queries go through
+    * `Pq.pqRadiusForQueries` — the same cell-pruned ADC radius probe the
+    * catalog's pq_radius_ivf serves — so the sink gets (q_id, nb_id, adc)
+    * rows identical to the batch probe over the same queries. Any vec_id
+    * serves as a query. State: distinct arrived vec_ids within the
+    * watermark (the `perBatch` recipe).
     */
-  def lexRadiusStream(spark: SparkSession, indexTable: String,
-                      docs: DataFrame, tsCol: String): DataFrame = {
-    val L = graft.llm.Lexical
-    val st = graft.sources.BucketedSink.heldRows(spark, indexTable + "_stats").head
-    val (n, total) = (st.getLong(0), st.getLong(1))
-    val maxDf = n * L.MaxDfBp / 10000
-    val rare = spark.table(indexTable + "_df").filter(col("df") <= maxDf)
-    val post = graft.sources.BucketedSink
-      .readServing(spark, indexTable, "doc_id")
-      .select(col("doc_id").as("nb_id"), col("term"), col("len"), col("tf"))
-    docs
-      .select(col("doc_id").as("q_id"), col(tsCol),
-        explode(array_distinct(graft.llm.TextOps.toks(col("text")))).as("term"))
-      .join(rare, Seq("term"))
-      .join(post, Seq("term"))
-      .filter(col("q_id") =!= col("nb_id"))
-      .filter(L.contribE10(n, total) >= lit(L.RadiusE4.toLong) * 1000000L)
-      .withWatermark(tsCol, "1 hour")
-      .dropDuplicatesWithinWatermark("q_id", "nb_id")
-      .select(col("q_id"), col("nb_id"))
-  }
+  def pqProbeStream(spark: SparkSession, pairTable: String, queries: DataFrame,
+                    tsCol: String, checkpoint: Option[String] = None)
+                   (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(queries, "vec_id", "embedding", tsCol, checkpoint)(
+      graft.llm.Pq.pqRadiusForQueries(spark, pairTable, _))(sink)
 
-  /** Streaming TOP-K probe of the PERSISTED inverted index (r11 — the
-    * serving family's last streaming corner: the radius form streamed
-    * since r10, the ranking form didn't). Top-k is a RANK over each
-    * query's candidate set, which append-mode streaming cannot express
-    * statelessly — so this is the per-micro-batch recipe (Spark's
-    * documented foreachBatch pattern for batch-only operators): the
-    * streaming graph carries ONLY the watermark + within-watermark query
-    * dedup (redelivery protection — state bounded by DISTINCT arrived
-    * query docs inside the horizon, never by candidates), and each
-    * micro-batch ranks its arrived queries against the static index
-    * through the exact batch probe plan (`Lexical.lexTopkForQueries`:
-    * the micro-batch's query terms collected to the driver — one job per
-    * micro-batch, the job their broadcast ran — and cut rare-first there,
-    * candidate scan touching only the probed posting lists, salted
-    * two-phase top-k). Per-arrived-query output rows are byte-identical
-    * to the batch D91b probe — LexicalSpec pins
-    * parity, StreamingSkewSpec pins the redelivery burst + state ceiling.
+  /** Streaming single-term impact radius of the PERSISTED inverted index
+    * (D91c): each micro-batch's distinct arrived (doc_id, text) docs go
+    * through `Lexical.lexRadiusForQueries` — the catalog radius's
+    * `radiusHits` core over the docs' rare terms (stored `_df` ≤ the
+    * MaxDfBp cut) — so the sink gets the (q_id, nb_id) pairs the batch
+    * radius emits for the same queries. State: distinct arrived doc_ids
+    * within the watermark (the `perBatch` recipe).
+    */
+  def lexRadiusStream(spark: SparkSession, indexTable: String, docs: DataFrame,
+                      tsCol: String, checkpoint: Option[String] = None)
+                     (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(docs, "doc_id", "text", tsCol, checkpoint)(
+      graft.llm.Lexical.lexRadiusForQueries(spark, indexTable, _))(sink)
+
+  /** Streaming TOP-K probe of the PERSISTED inverted index: top-k is a
+    * rank over each query's candidate set, which append-mode streaming
+    * cannot express statelessly, so each micro-batch's distinct arrived
+    * docs are ranked by the batch D91b probe plan
+    * (`Lexical.lexTopkForQueries`), and the sink gets per-query rows
+    * identical to it. State: distinct arrived doc_ids within the watermark
+    * (the `perBatch` recipe).
     *
-    * OUT-OF-VOCABULARY semantics (r12, documented like the positional
-    * index's): query terms come from the ARRIVING doc's text but join the
-    * index's PINNED `_df` table, so a term absent from the build-time
-    * vocabulary is silently dropped from the query — an arriving doc
-    * whose vocabulary is entirely post-build retrieves ZERO rows. This is
-    * the pinned-statistics discipline's cost on the streaming ranking
-    * path (the more reachable case than the positional probe): a stale
-    * index degrades arriving-query recall, and the operational signal is
-    * the stored `_df` growing stale vs `bpe_coverage`-style vocabulary
-    * drift gauges — re-ingest (rebuild or appendLexDocs, which extends
-    * postings but NOT `_df`, exactly like segment-based lexical engines
-    * between merges) to refresh the vocabulary.
-    *
-    * `sink` receives each micro-batch's ranked frame (the foreachBatch
-    * contract); the returned query is already started with an
-    * AvailableNow trigger and a scratch checkpoint — callers
-    * processAllAvailable()/stop() it (the runToMemory discipline). Pass
-    * `checkpoint` for a durable location; the default scratch dir is
-    * registered for JVM-exit cleanup (TempDirs — the r11 temp-litter
-    * advice item).
+    * OUT-OF-VOCABULARY semantics: query terms come from the ARRIVING doc's
+    * text but join the index's PINNED `_df` table, so a term absent from
+    * the build-time vocabulary is silently dropped from the query — an
+    * arriving doc whose vocabulary is entirely post-build retrieves ZERO
+    * rows. A stale index degrades arriving-query recall; the operational
+    * signal is the stored `_df` growing stale against `bpe_coverage`-style
+    * vocabulary drift gauges — re-ingest (rebuild, or appendLexDocs, which
+    * extends postings but NOT `_df`, exactly like segment-based lexical
+    * engines between merges) to refresh the vocabulary.
     */
   def lexTopkStream(spark: SparkSession, indexTable: String, docs: DataFrame,
                     tsCol: String, checkpoint: Option[String] = None)
-                   (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val cp = checkpoint.map(java.nio.file.Paths.get(_))
-      .getOrElse(TempDirs.scratch("graft-lex-topk-cp"))
-    docs
-      .select(col("doc_id"), col("text"), col(tsCol))
-      .withWatermark(tsCol, "1 hour")
-      .dropDuplicatesWithinWatermark("doc_id")
-      .select(col("doc_id"), col("text"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", cp.toString)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.llm.Lexical.lexTopkForQueries(spark, indexTable, batch))
-      }
-      .start()
-  }
+                   (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(docs, "doc_id", "text", tsCol, checkpoint)(
+      graft.llm.Lexical.lexTopkForQueries(spark, indexTable, _))(sink)
 
-  /** Streaming TOP-K probe of the PERSISTED embedding index (r11 — the
-    * vector twin of lexTopkStream, completing the serving matrix's
-    * streaming corner: radius forms streamed since r9/r10, now both
-    * ranking forms do too). Same foreachBatch recipe: the streaming
-    * graph carries ONLY the watermark + within-watermark query-vector
-    * dedup, and each micro-batch ranks its arrivals through the exact
-    * batch D53 probe plan (`Ann.annTopkForQueries` — the micro-batch's
-    * vectors collected to the driver with their hyperplane buckets, one
-    * job per micro-batch as their broadcast ran, and looked up by bucket
-    * inside the bucketed index scan, codegen'd dot fold, top-5).
-    * Per-arrived-vector output rows are byte-identical to the batch
-    * probe; specs pin parity and the redelivery burst + state ceiling.
-    * Checkpoint convention as lexTopkStream: caller-provided or a
-    * JVM-exit-cleaned scratch dir.
+  /** Streaming TOP-K probe of the PERSISTED embedding index: each
+    * micro-batch's distinct arrived (vec_id, embedding) vectors are ranked
+    * by the batch D53 probe plan (`Ann.annTopkForQueries`), and the sink
+    * gets per-vector rows identical to it. State: distinct arrived vec_ids
+    * within the watermark (the `perBatch` recipe).
     */
   def annTopkStream(spark: SparkSession, indexTable: String, vecs: DataFrame,
                     tsCol: String, checkpoint: Option[String] = None)
-                   (sink: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val cp = checkpoint.map(java.nio.file.Paths.get(_))
-      .getOrElse(TempDirs.scratch("graft-ann-topk-cp"))
-    vecs
-      .select(col("vec_id"), col("embedding"), col(tsCol))
-      .withWatermark(tsCol, "1 hour")
-      .dropDuplicatesWithinWatermark("vec_id")
-      .select(col("vec_id"), col("embedding"))
-      .writeStream
-      .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", cp.toString)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(graft.llm.Ann.annTopkForQueries(spark, indexTable, batch))
-      }
-      .start()
-  }
+                   (sink: DataFrame => Unit): StreamingQuery =
+    perBatch(vecs, "vec_id", "embedding", tsCol, checkpoint)(
+      graft.llm.Ann.annTopkForQueries(spark, indexTable, _))(sink)
 
   /** E7 stream-stream interval join (click attribution): each purchase
     * pairs with every same-user click in the preceding hour. BOTH sides
@@ -625,7 +542,7 @@ object StreamOps {
   def runToMemory(spark: SparkSession, streamed: DataFrame, name: String,
                   mode: OutputMode = OutputMode.Append): DataFrame = {
     val q = streamed.writeStream.format("memory").queryName(name)
-      .outputMode(mode).trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .outputMode(mode).trigger(Trigger.AvailableNow())
       .start()
     q.processAllAvailable()
     q.stop()

@@ -529,38 +529,49 @@ class LexicalSpec extends SparkSpecBase {
     val schema = spark.read.parquet(sdir.toString + "/in").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(sdir.toString + "/in")
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    val q = graft.streaming.StreamOps
-      .lexTopkStream(spark, tbl, stream, "arrived") { ranked =>
-        buf.synchronized { buf ++= ranked.collect().map(_.toSeq.mkString("|")) }
-      }
-    q.processAllAvailable(); q.stop()
+    val (buf, _) = drainSink(graft.streaming.StreamOps.lexTopkStream(spark, tbl, stream, "arrived"))
     val want = rows(Lexical.lexProbeFromStore(spark, tbl))
     assert(buf.toSet === want && want.nonEmpty,
       s"streaming top-k diverged from the batch probe (${buf.size} vs ${want.size})")
     dropIdx(tbl)
   }
 
+  /** The lexical radius stream over `tbl` with the query docs (doc_id < 10)
+    * arriving: the rows every micro-batch delivered. */
+  private def radiusStreamed(tbl: String): Seq[String] =
+    drainSink(graft.streaming.StreamOps.lexRadiusStream(spark, tbl,
+      arrivingStream(docsOf(sfDir).filter(col("doc_id") < 10)), "arrived"))._1
+
   test("streaming radius probe of the persisted index matches the batch radius pair-for-pair") {
     val tbl = "lex_idx_lc_stream"
     dropIdx(tbl)
-    val d = docsOf(sfDir)
-    Lexical.writeLexIndexOf(d, tbl)
-    // stage the query docs as the arriving stream (one parquet file)
-    val sdir = java.nio.file.Files.createTempDirectory("graft-lex-stream")
-    d.filter(col("doc_id") < 10)
-      .withColumn("arrived", to_timestamp(lit("2026-01-01 00:00:00")))
-      .coalesce(1).write.mode("overwrite").parquet(sdir.toString)
-    val schema = spark.read.parquet(sdir.toString).schema
-    val stream = spark.readStream.schema(schema).parquet(sdir.toString)
-    val streamed = graft.streaming.StreamOps
-      .lexRadiusStream(spark, tbl, stream, "arrived")
-    val got = rows(graft.streaming.StreamOps
-      .runToMemory(spark, streamed, "lex_radius_mem"))
-    // the batch twin over the SAME index — the production radius path
+    Lexical.writeLexIndexOf(docsOf(sfDir), tbl)
+    val got = radiusStreamed(tbl)
+    // the batch radius over the SAME index, its query terms read from the
+    // stored postings rather than the arriving text
     val want = rows(Lexical.lexRadiusFromStore(spark, tbl))
-    assert(got === want && got.nonEmpty,
+    assert(got.size === got.toSet.size, "a pair was emitted twice")
+    assert(got.toSet === want && got.nonEmpty,
       s"streaming lexical radius diverged from batch (${got.size} vs ${want.size})")
     dropIdx(tbl)
+  }
+
+  test("streaming radius probe never emits a taken-down neighbour") {
+    val tbl = "lex_idx_lc_stream_tomb"
+    dropIdx(tbl)
+    Lexical.writeLexIndexOf(docsOf(sfDir), tbl)
+    // take down a neighbour the batch radius returns — not a query doc:
+    // the reference reads its queries' terms from the stored postings, so
+    // a taken-down query would drop out of it but not out of the arrivals
+    val deleted = rows(Lexical.lexRadiusFromStore(spark, tbl))
+      .map(_.split('|')(1).toLong).filter(_ >= 10).min
+    Lexical.deleteLexDocs(spark, tbl, Seq(deleted).toDF("doc_id"))
+    val got = radiusStreamed(tbl)
+    val want = rows(Lexical.lexRadiusFromStore(spark, tbl))
+    assert(!got.exists(_.split('|')(1).toLong == deleted),
+      s"the stream served taken-down doc $deleted")
+    assert(got.toSet === want && got.nonEmpty,
+      "streaming lexical radius diverged from batch after a takedown")
+    BucketedSink.dropIndex(spark, tbl)
   }
 }

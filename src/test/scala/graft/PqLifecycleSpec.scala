@@ -131,34 +131,66 @@ class PqLifecycleSpec extends SparkSpecBase {
     Checkpoints.releaseAll()
   }
 
+  /** The PQ radius stream over `tbl` with `queries` arriving: the rows
+    * every micro-batch delivered. */
+  private def streamed(tbl: String, queries: DataFrame): Seq[String] =
+    drainSink(graft.streaming.StreamOps.pqProbeStream(spark, tbl,
+      arrivingStream(queries), "arrived"))._1
+
   test("streaming radius probe of the persisted pair matches the batch probe row-for-row") {
     val tbl = "pq_pair_lc_stream"
     drop(tbl, tbl + "_cb", BucketedSink.tombTableOf(tbl))
     val v = vecs
     Pq.writePqIndexOf(v, tbl)
-    // stage the ANN query set as the arriving stream (one parquet file)
-    val sdir = java.nio.file.Files.createTempDirectory("graft-pq-stream")
-    v.filter(col("vec_id") < 10)
-      .withColumn("arrived", to_timestamp(lit("2026-01-01 00:00:00")))
-      .coalesce(1).write.mode("overwrite").parquet(sdir.toString)
-    val schema = spark.read.parquet(sdir.toString).schema
-    val stream = spark.readStream.schema(schema).parquet(sdir.toString)
-    val streamed = graft.streaming.StreamOps.pqProbeStream(spark, tbl, stream, "arrived")
-    val got = rows(graft.streaming.StreamOps.runToMemory(spark, streamed, "pq_probe_mem"))
-    // the batch twin over the SAME pair: the PRODUCTION aggregate path
-    // (pqRadiusIvf's own core — the stream composes the cell gate since
-    // r10), not a spec-local copy — byte equality is the proof the baked
-    // quantizer + ADC didn't change a single double, attested against the
-    // baseline the catalog actually serves
-    val want = rows(Pq.servePqRadiusIvfFrom(v, tbl))
-    assert(got === want && got.nonEmpty,
-      s"streaming radius probe diverged from the batch twin (${got.size} vs ${want.size})")
+    // the ANN query set arrives as the stream
+    val got = streamed(tbl, v.filter(col("vec_id") < 10))
+    // the batch probe over the SAME pair and queries: the one radius probe
+    // the catalog's pq_radius_ivf serves
+    val want = rows(Pq.pqRadiusForQueries(spark, tbl, v.filter(col("vec_id") < 10)))
+    assert(got.size === got.toSet.size, "a pair was emitted twice")
+    assert(got.toSet === want && got.nonEmpty,
+      s"streaming radius probe diverged from the batch probe (${got.size} vs ${want.size})")
     // pruning may only REMOVE pairs relative to the full-ADC radius scan,
     // never invent or re-score one — every emitted row must exist verbatim
     // in the unpruned baseline
     val full = rows(Pq.servePqRadiusFrom(v, tbl))
     assert(want.subsetOf(full), "cell-pruned radius emitted a pair the full scan lacks")
     drop(tbl, tbl + "_cb")
+    Checkpoints.releaseAll()
+  }
+
+  test("streaming radius probe serves arrivals with any id, not only the first queries") {
+    val tbl = "pq_pair_lc_stream_ids"
+    drop(tbl, tbl + "_cb", BucketedSink.tombTableOf(tbl))
+    val v = vecs
+    Pq.writePqIndexOf(v, tbl)
+    val arrivals = v.filter(col("vec_id") >= 10 && col("vec_id") < 30)
+    val got = streamed(tbl, arrivals)
+    val want = rows(Pq.pqRadiusForQueries(spark, tbl, arrivals))
+    assert(got.toSet === want && got.nonEmpty,
+      s"arrivals with ids >= 10 diverged from the batch probe (${got.size} vs ${want.size})")
+    drop(tbl, tbl + "_cb")
+    Checkpoints.releaseAll()
+  }
+
+  test("streaming radius probe never emits a taken-down neighbour") {
+    val tbl = "pq_pair_lc_stream_tomb"
+    drop(tbl, tbl + "_cb", BucketedSink.tombTableOf(tbl))
+    val v = vecs
+    Pq.writePqIndexOf(v, tbl)
+    val q = v.filter(col("vec_id") < 10)
+    def batch: Set[String] = rows(Pq.pqRadiusForQueries(spark, tbl, q))
+    // take down a neighbour the batch probe returns (not a query vector)
+    val deleted = batch.map(_.split('|')(1).toLong).filter(_ >= 10).min
+    import spark.implicits._
+    Pq.deletePqCodes(spark, tbl, Seq(deleted).toDF("vec_id"))
+    val got = streamed(tbl, q)
+    val want = batch
+    assert(!got.exists(_.split('|')(1).toLong == deleted),
+      s"the stream served taken-down vector $deleted")
+    assert(got.toSet === want && got.nonEmpty,
+      s"streaming radius probe diverged from the batch probe after a takedown")
+    BucketedSink.dropIndex(spark, tbl)
     Checkpoints.releaseAll()
   }
 

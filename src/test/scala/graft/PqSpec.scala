@@ -201,6 +201,19 @@ class PqSpec extends SparkSpecBase {
     assert(mean >= 0.6, s"IVFADC mean recall@5 too low: $mean")
   }
 
+  test("radius adc rounds like the DuckDB oracle at a half-way tie") {
+    // the exact-decimal ADC 0.0019985 is 0.00199849999… as a double: the
+    // oracle's round(CAST(adc AS DOUBLE), 6) gives 0.001998 (x·10^6 is
+    // 1998.4999… as a double), Spark's round(x, 6) 0.001999
+    import spark.implicits._
+    val adc = Seq((0L, 1L, BigDecimal("0.0019985"))).toDF("q_id", "nb_id", "adc")
+      .select(col("q_id"), col("nb_id"), col("adc").cast("decimal(28,10)").as("adc"))
+    assert(adc.select(round(col("adc").cast("double"), 6)).head.getDouble(0) === 0.001999)
+    val out = Pq.radiusCut(adc).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(out.toSeq === Seq((0L, 1L, 0.001998)))
+  }
+
   test("persisted-index probe returns exactly the recompute's rows") {
     val recompute = Pq.annPq(spark, sfDir).collect().map(_.toString).sorted
     Checkpoints.releaseAll()

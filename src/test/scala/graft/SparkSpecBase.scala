@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{lit, to_timestamp}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,6 +20,27 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     new java.io.File(dir).listFiles.foreach(f =>
       Files.copy(f.toPath, out.resolve(f.getName)))
     out.toString
+  }
+
+  /** `df` staged as one parquet file and read back as a stream, every row
+    * arriving at one event time in column `arrived`. */
+  def arrivingStream(df: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-arrivals").toString
+    df.withColumn("arrived", to_timestamp(lit("2026-01-01 00:00:00")))
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
+  }
+
+  /** Run a sink-form stream to completion: the rows every micro-batch
+    * delivered (`|`-joined), and the query's progress reports. */
+  def drainSink(start: (DataFrame => Unit) => StreamingQuery)
+      : (Seq[String], Seq[StreamingQueryProgress]) = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    val q = start(b => buf.synchronized { buf ++= b.collect().map(_.toSeq.mkString("|")) })
+    q.processAllAvailable()
+    val prog = q.recentProgress.toSeq
+    q.stop()
+    (buf.toSeq, prog)
   }
 
   /** Run `f` with the given session confs set, restoring them after. */
@@ -51,6 +74,9 @@ object SparkSpecBase {
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       // mirror GraftSession: AQE sizes partitions inside cached plans
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      // a whole-stage codegen compile failure fails the query instead of
+      // silently re-running the stage interpreted (VectorOpsSpec shows it)
+      .config("spark.sql.codegen.fallback", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -191,17 +191,20 @@ class StreamingSkewSpec extends SparkSpecBase {
       .coalesce(1).write.mode("overwrite").parquet(sdir)
     val schema = spark.read.parquet(sdir).schema
     val stream = spark.readStream.schema(schema).parquet(sdir)
-    val (out, prog) = runWithProgress(
-      StreamOps.pqProbeStream(spark, tbl, stream, "arrived"), "skew_pq_probe")
-    val got = out.collect().map(_.toSeq.mkString("|")).toSet
+    val (got, prog) = drainSink(
+      StreamOps.pqProbeStream(spark, tbl, stream, "arrived"))
     // batch twin: the cell-pruned radius probe over the same pair — the
     // redelivered burst must change NOTHING about the emitted set
-    val want = graft.llm.Pq.servePqRadiusIvfFrom(v, tbl)
+    val want = graft.llm.Pq.pqRadiusForQueries(spark, tbl, q)
       .collect().map(_.toSeq.mkString("|")).toSet
-    assert(got === want && want.nonEmpty,
+    assert(got.size === got.toSet.size, "redelivered query emitted a pair twice")
+    assert(got.toSet === want && want.nonEmpty,
       s"burst stream diverged from the batch twin (${got.size} vs ${want.size})")
-    // state ceiling: distinct emitted pairs within the watermark — the
-    // BENCH stream_pq_probe_state_rows contract, now gated
+    // state ceilings: the query-id dedup holds one row per distinct arrived
+    // query within the watermark, which also stays under the distinct
+    // emitted pairs (the BENCH stream_pq_probe_state_rows contract)
+    assert(maxStateRows(prog) <= 10,
+      s"pq probe state ${maxStateRows(prog)} exceeds distinct arrived queries 10")
     assert(maxStateRows(prog) <= want.size,
       s"pq probe state ${maxStateRows(prog)} exceeds distinct pairs ${want.size}")
     Seq(tbl, tbl + "_cb", tbl + "_cents")
@@ -229,13 +232,15 @@ class StreamingSkewSpec extends SparkSpecBase {
       .coalesce(1).write.mode("overwrite").parquet(sdir)
     val schema = spark.read.parquet(sdir).schema
     val stream = spark.readStream.schema(schema).parquet(sdir)
-    val (out, prog) = runWithProgress(
-      StreamOps.lexRadiusStream(spark, tbl, stream, "arrived"), "skew_lex_radius")
-    val got = out.collect().map(_.toSeq.mkString("|")).toSet
+    val (got, prog) = drainSink(
+      StreamOps.lexRadiusStream(spark, tbl, stream, "arrived"))
     val want = graft.llm.Lexical.lexRadiusFromStore(spark, tbl)
       .collect().map(_.toSeq.mkString("|")).toSet
-    assert(got === want && want.nonEmpty,
+    assert(got.size === got.toSet.size, "redelivered query emitted a pair twice")
+    assert(got.toSet === want && want.nonEmpty,
       s"burst lexical stream diverged from the batch twin (${got.size} vs ${want.size})")
+    assert(maxStateRows(prog) <= 10,
+      s"lexical radius state ${maxStateRows(prog)} exceeds distinct arrived queries 10")
     assert(maxStateRows(prog) <= want.size,
       s"lexical radius state ${maxStateRows(prog)} exceeds distinct pairs ${want.size}")
     Seq(tbl, tbl + "_df", tbl + "_stats")
@@ -264,13 +269,7 @@ class StreamingSkewSpec extends SparkSpecBase {
       .coalesce(1).write.mode("overwrite").parquet(sdir)
     val schema = spark.read.parquet(sdir).schema
     val stream = spark.readStream.schema(schema).parquet(sdir)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sq = StreamOps.lexTopkStream(spark, tbl, stream, "arrived") { ranked =>
-      buf.synchronized { buf ++= ranked.collect().map(_.toSeq.mkString("|")) }
-    }
-    sq.processAllAvailable()
-    val prog = sq.recentProgress.toSeq
-    sq.stop()
+    val (buf, prog) = drainSink(StreamOps.lexTopkStream(spark, tbl, stream, "arrived"))
     val want = graft.llm.Lexical.lexProbeFromStore(spark, tbl)
       .collect().map(_.toSeq.mkString("|")).toSet
     // exact multiset parity: the burst must not produce duplicate k-lists
@@ -300,13 +299,7 @@ class StreamingSkewSpec extends SparkSpecBase {
       .coalesce(1).write.mode("overwrite").parquet(sdir)
     val schema = spark.read.parquet(sdir).schema
     val stream = spark.readStream.schema(schema).parquet(sdir)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sq = StreamOps.annTopkStream(spark, tbl, stream, "arrived") { ranked =>
-      buf.synchronized { buf ++= ranked.collect().map(_.toSeq.mkString("|")) }
-    }
-    sq.processAllAvailable()
-    val prog = sq.recentProgress.toSeq
-    sq.stop()
+    val (buf, prog) = drainSink(StreamOps.annTopkStream(spark, tbl, stream, "arrived"))
     // batch twin: the persisted-index probe over the same table
     val want = graft.llm.Ann.probeIndexTable(spark, tbl)
       .collect().map(_.toSeq.mkString("|")).toSet

@@ -239,6 +239,30 @@ class VectorOpsSpec extends SparkSpecBase {
     }
   }
 
+  test("a whole-stage codegen compile failure fails the query, not a silent fallback") {
+    // Spark's BloomFilterMightContain template casts the probed value as
+    // `(Long)` right before it: a value that folds to a negative long
+    // literal reads as a subtraction and the stage fails to compile
+    // ("not an rvalue"). SparkSpecBase turns the fallback off, so the
+    // suite fails on any such stage instead of running it interpreted.
+    assert(spark.conf.get("spark.sql.codegen.fallback") === "false")
+    val v = spark.range(1).select(xxhash64(lit(7L)).as("h"))
+    assert(v.head.getLong(0) < 0, "the trigger needs a negative hash")
+    val bf = v.select(graft.functions.BloomOps.bloomAgg(col("h"), 100L, 1024L)).scalar()
+    val probe = v.select(graft.functions.BloomOps.bloomContains(bf, col("h")))
+    // the failure is this test's expectation: keep its compile error out
+    // of the log, where any ERROR CodeGenerator line marks a real fault
+    val logger = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+    val level = org.apache.logging.log4j.LogManager.getLogger(logger).getLevel
+    org.apache.logging.log4j.core.config.Configurator.setLevel(logger,
+      org.apache.logging.log4j.Level.OFF)
+    val e = try intercept[Exception](probe.collect())
+      finally org.apache.logging.log4j.core.config.Configurator.setLevel(logger, level)
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(chain.contains("rvalue"), s"failed for another reason: $chain")
+  }
+
   test("extensions entry registers graft_fdot and its builder constructs the expression") {
     // every SQL name GraftExtensions registers resolves through selectExpr
     // on a session built with the hook (the shared session made the
